@@ -156,47 +156,6 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# scans / relational parity qids (SURVEY §2.1, §2.3)
-# ---------------------------------------------------------------------------
-
-
-def scan_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S1: raw parquet scan with column pruning (2-col ReadSchema)."""
-    return load(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_linenumber", "l_quantity"
-    )
-
-
-def part_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """R1: distinct partition tuples (reference get_partitions groupby)."""
-    return (
-        load(spark, sf_dir, "lineitem")
-        .select("l_returnflag", "l_linestatus")
-        .distinct()
-    )
-
-
-def agg_partition_rowcounts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """R2: per-partition row counts (reference partition sizing)."""
-    return (
-        load(spark, sf_dir, "lineitem")
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(F.count(F.lit(1)).alias("n_rows"))
-    )
-
-
-def proj_drop_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """R3: column projection via drop (reference drop_partitions)."""
-    lineitem = load(spark, sf_dir, "lineitem")
-    keep_away = [
-        c
-        for c in lineitem.columns
-        if c not in ("l_orderkey", "l_linenumber", "l_quantity", "l_shipdate")
-    ]
-    return lineitem.drop(*keep_away).drop("l_shipdate")
-
-
-# ---------------------------------------------------------------------------
 # Filter DSL qids (SURVEY §2.4) — typed columns + JSON payload on events.
 # Rows exclude ts (nano-precision timestamps normalize differently across
 # engines); event_id is the natural row identity.
@@ -209,52 +168,6 @@ _EVENT_SQL_COLS = "event_id, user_id, event_type, value, props"
 def _events_filtered(spark, sf_dir, spec) -> DataFrame:
     events = load(spark, sf_dir, "events").select(*_EVENT_COLS)
     return Filter(spec).apply(events)
-
-
-def filter_eq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """F1: scalar equality criterium."""
-    return _events_filtered(spark, sf_dir, [{"event_type": ["click"]}])
-
-
-def filter_is_null(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """F2: None criterium matches present-but-null; ORed with an
-    equality so the result is non-trivial on null-free test data."""
-    return _events_filtered(
-        spark, sf_dir, [{"value": [None]}, {"event_type": ["signup"]}]
-    )
-
-
-def filter_anything_but(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """F3: negated membership with reference null semantics."""
-    return _events_filtered(
-        spark, sf_dir, [{"event_type": [{"anything-but": ["click", "view"]}]}]
-    )
-
-
-def filter_numeric_range(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """F4: single [op, ref] pair."""
-    return _events_filtered(spark, sf_dir, [{"value": [{"numeric": [">=", 400]}]}])
-
-
-def filter_numeric_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """F4: multi-pair chain ANDed pairwise ([>, a, <=, b])."""
-    return _events_filtered(
-        spark, sf_dir, [{"value": [{"numeric": [">", 10, "<=", 50]}]}]
-    )
-
-
-def filter_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """F6: string startswith criterium."""
-    return _events_filtered(spark, sf_dir, [{"event_type": [{"prefix": "s"}]}])
-
-
-def filter_or(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """F9: OR across the top-level filter list."""
-    return _events_filtered(
-        spark,
-        sf_dir,
-        [{"event_type": ["click"]}, {"value": [{"numeric": [">", 480]}]}],
-    )
 
 
 def filter_composite(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -391,8 +304,7 @@ def scan_text_roundtrips(spark: SparkSession, sf_dir: str) -> DataFrame:
     trip and the jsonlines round trip union into one frame tagged by
     ``fmt`` — both formats' write→read→agg paths stay value-verified
     in a single registry slot (freed for column_profile_census,
-    VERDICT r6 item 8).  The single-format callables survive for bench
-    attribution and the contract test."""
+    VERDICT r6 item 8)."""
     dsv = scan_dsv_roundtrip(spark, sf_dir).withColumn(
         "fmt", F.lit("dsv_gz")
     )
@@ -537,20 +449,6 @@ def join_region_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H-Q4-shaped: priority counts for orders having a heavy line
-    (EXISTS → left-semi join; no row duplication, no distinct)."""
-    orders = load(spark, sf_dir, "orders")
-    heavy = load(spark, sf_dir, "lineitem").filter(
-        F.col("l_quantity") > 48
-    ).select("l_orderkey")
-    return (
-        orders.join(heavy, orders.o_orderkey == heavy.l_orderkey, "left_semi")
-        .groupBy("o_orderpriority")
-        .agg(F.count(F.lit(1)).alias("order_count"))
-    )
-
-
 def q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H-Q18-shaped: orders whose total quantity exceeds 250,
     with customer attribution (aggregate → HAVING → broadcast dims)."""
@@ -573,33 +471,8 @@ def q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Extension qids (SURVEY §2.9): dedup / similarity / text / windows
 # ---------------------------------------------------------------------------
 
-_DOC_TOKS_SQL = (
-    "list_distinct(list_filter(string_split_regex(text, '\\s+'), "
-    "x -> x != ''))"
-)
 
-
-def dedup_exact_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X1: deterministic exact dedup on (user_id, event_type)."""
-    from data_toolz_spark.operators.dedup import dedup_exact
-
-    return dedup_exact(
-        load(spark, sf_dir, "events"), ["user_id", "event_type"], "event_id"
-    )
-
-
-def dedup_fingerprint_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X1/X4: md5 fingerprint of normalized text (exact-dedup key)."""
-    from data_toolz_spark.operators.text_analysis import fingerprint
-
-    return fingerprint(load(spark, sf_dir, "documents")).select(
-        "doc_id", "fingerprint"
-    )
-
-
-def embedding_kmeans_q(
-    spark: SparkSession, sf_dir: str, *, _with_kcenter: bool = True
-) -> DataFrame:
+def embedding_kmeans_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X63 (r9): distributed INTEGER-EXACT k-means over the embeddings
     corpus — the clustering primitive curation pipelines build on
     (cluster-balanced sampling, per-cluster dedup, coarse quantizers).
@@ -628,8 +501,6 @@ def embedding_kmeans_q(
     out = kmeans_assign(emb, model, dist_col="dist2").select(
         "vec_id", "cluster", "dist2"
     )
-    if not _with_kcenter:
-        return out  # bench DEFN_PIN: the r9 headline definition
     # r10 (X82): greedy k-center coreset selection (Gonzalez) over the
     # same corpus — md5-seeded start, 3 farthest-point rounds, then
     # every vector assigned to its nearest exemplar.  The oracle
@@ -761,40 +632,7 @@ def incremental_minhash_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def dedup_minhash_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X2: MinHash-LSH near-dup pairs (3-shingle sets), Jaccard-verified.
-
-    Identical shingle sets collapse to one LSH representative, band
-    join runs at 16 bands × 4 rows (P[candidate] ≥ 99.97 % at s=0.8),
-    and every emitted pair passes an exact-Jaccard gate — so the output
-    matches the brute-force O(n²) shingle-Jaccard join except for
-    vanishing LSH misses near the threshold.
-    """
-    from data_toolz_spark.operators.dedup import minhash_near_duplicates
-
-    return minhash_near_duplicates(
-        load(spark, sf_dir, "documents"), "doc_id", "text", threshold=0.8
-    )
-
-
-def dedup_minhash_drop_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X2: the drop list a curation pipeline actually consumes — every
-    non-representative member of a near-dup cluster (min id survives)."""
-    from data_toolz_spark.operators.dedup import (
-        minhash_near_duplicates,
-        near_duplicate_drop_list,
-    )
-
-    pairs = minhash_near_duplicates(
-        load(spark, sf_dir, "documents"), "doc_id", "text", threshold=0.8
-    )
-    # greedy single-aggregate fast path (dedup_cc_drop is the exact twin)
-    return near_duplicate_drop_list(pairs, exact=False)
-
-
-def dedup_cc_drop_q(
-    spark: SparkSession, sf_dir: str, *, _with_quality_rep: bool = True
-) -> DataFrame:
+def dedup_cc_drop_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X22 exact: drop list via TRUE transitive closure (oracle:
     recursive-CTE reachability over the member pair graph in DuckDB).
 
@@ -823,11 +661,6 @@ def dedup_cc_drop_q(
 
     docs = load(spark, sf_dir, "documents")
     cc = minhash_components(docs, "doc_id", "text", threshold=0.8)
-    if not _with_quality_rep:
-        # bench DEFN_PIN: the r6-r9 headline definition (min-id drop)
-        return cc.filter(F.col("id") != F.col("component")).select(
-            F.col("id").alias("drop_id")
-        )
     reps = component_representatives(
         cc,
         docs.select(
@@ -838,17 +671,6 @@ def dedup_cc_drop_q(
     return reps.filter(F.col("id") != F.col("component")).select(
         F.col("id").alias("drop_id"),
         F.col("kept_id").alias("q_kept"),
-    )
-
-
-def dedup_simhash_band_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X2c scale path: SimHash pairs at Hamming ≤ 2 via pigeonhole band
-    blocking — EXACT recall without any metadata block (oracle:
-    brute-force xor/bit_count self-join)."""
-    from data_toolz_spark.operators.dedup import simhash_band_pairs
-
-    return simhash_band_pairs(
-        load(spark, sf_dir, "documents"), "doc_id", "text", max_hamming=2
     )
 
 
@@ -892,29 +714,6 @@ def dedup_ngram_jaccard_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def text_simhash_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X2: 32-bit SimHash per document (bit-exact across engines)."""
-    from data_toolz_spark.operators.dedup import simhash32
-
-    return load(spark, sf_dir, "documents").select(
-        "doc_id", simhash32("text").alias("simhash")
-    )
-
-
-def sim_topk_exact_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X3 exact: brute-force cosine top-10 for 5 query vectors."""
-    from data_toolz_spark.operators.similarity import cosine_topk
-
-    emb = load(spark, sf_dir, "embeddings")
-    return cosine_topk(
-        emb.filter(F.col("vec_id") < 5),
-        emb,
-        query_id="vec_id",
-        corpus_id="vec_id",
-        k=10,
-    )
-
-
 def sim_topk_ann_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X3 approx: LSH-bucketed cosine top-10, VALUE-verified against
     the exact top-k oracle.
@@ -927,11 +726,6 @@ def sim_topk_ann_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     the output hash-equal to the exact oracle.  Scale configs trade
     recall for bucket sparsity via higher n_bits — bench.py times a
     realistic n_bits=12 setting separately.
-
-    (r7 note: the IVF-PQ intersect briefly lived here; it moved to
-    ``sim_topk_ivf`` — this qid is in the V1 HEADLINE series whose
-    round-over-round comparability matters, and the PQ attestation
-    belongs next to the other IVF machinery anyway.)
     """
     from data_toolz_spark.operators.similarity import cosine_topk_ann
 
@@ -961,8 +755,8 @@ def sim_topk_ivf_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     (Folded r4: ``sim_topk_exact``'s driver row — the exact operator is
     transitively attested because this qid and ``sim_topk_ann`` hash
     against the same exact-top-k SQL, and pytest pins
-    ``cosine_topk == cosine_topk_ann == ivf_topk`` on the test corpora;
-    the callable stays in bench's HEADLINE via ``bench.LEGACY``.)
+    ``cosine_topk == cosine_topk_ann == ivf_topk`` on the test
+    corpora.)
 
     r6: the qid now drives the PERSISTENT index (X36) end-to-end —
     build the inverted file over even-id vectors, ``append`` the odd
@@ -1125,15 +919,6 @@ def semantic_dedup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("drop_id", "cell", "rep_id")
 
 
-def emb_norm_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X5: L2 norm per embedding (JVM-side higher-order fns)."""
-    from data_toolz_spark.functions.vectors import l2_norm
-
-    return load(spark, sf_dir, "embeddings").select(
-        "vec_id", "label", F.round(l2_norm("embedding"), 6).alias("norm")
-    )
-
-
 #: hyperparameters for the text_lang_id trained-classifier fold (r10,
 #: VERDICT r9 item 2) — shared by the Spark qid and the oracle
 #: generator so both replay the same GD loop
@@ -1154,9 +939,7 @@ _LID_BUCKETS = 2048
 _LID_ITER = 6
 
 
-def text_lang_id_q(
-    spark: SparkSession, sf_dir: str, *, _with_clf_training: bool = True
-) -> DataFrame:
+def text_lang_id_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X4 → r10: language ID, heuristic AND trained.
 
     ``lang_pred`` keeps the stopword-overlap heuristic (the legacy
@@ -1180,9 +963,6 @@ def text_lang_id_q(
     from data_toolz_spark.operators.text_analysis import language_id
 
     docs = load(spark, sf_dir, "documents")
-    if not _with_clf_training:
-        # the r5-comparable headline-series definition (bench DEFN_PIN)
-        return language_id(docs).select("doc_id", "lang_pred")
     marker = F.element_at(
         F.map_from_arrays(
             F.array(*[F.lit(k) for k in _LID_MARKERS]),
@@ -1231,20 +1011,6 @@ def text_lang_id_q(
         ),
         on="doc_id",
     ).select("doc_id", "lang_pred", "clf_pred", "margins_md5")
-
-
-def text_quality_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X4: per-document quality features + composite score."""
-    from data_toolz_spark.operators.text_analysis import quality_features
-
-    return quality_features(load(spark, sf_dir, "documents")).select(
-        "doc_id",
-        "n_tokens",
-        "mean_tok_len",
-        "alpha_ratio",
-        "stop_ratio",
-        "quality_score",
-    )
 
 
 def text_decontaminate_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1613,8 +1379,7 @@ def text_web_signals_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # subtree appears THREE times below (the output join, the global
     # rank_thresholds histogram, the per-language one), and each
     # bigram_logprob internally scans its vocab twice (v1/v2 broadcast
-    # builds), for 32 documents-parquet scans in one plan
-    # (plans/r12/text_web_signals_before.txt).  The models are
+    # builds), for 32 documents-parquet scans in one plan.  The models are
     # vocab-sized and the score frame is one narrow row per doc, so
     # persisting them (guide §5: reused AND expensive to recompute)
     # collapses the plan to one scan per distinct pass; values are
@@ -1708,13 +1473,6 @@ def text_web_signals_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def text_token_stats_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X4: corpus token statistics per language."""
-    from data_toolz_spark.operators.text_analysis import token_stats
-
-    return token_stats(load(spark, sf_dir, "documents"))
-
-
 def text_vocab_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X38 + X57 (fold, r7; X57 was mislabeled X40 through r7 — renumbered r8): deterministic top-24 vocabulary (the cut
     lands inside a tf tie at sf0.01, attesting the deterministic
@@ -1793,34 +1551,6 @@ def win_user_session_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return session_stats(load(spark, sf_dir, "events"), gap_minutes=30.0)
 
 
-def win_running_total_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X6: deterministic cumulative sum per user."""
-    from data_toolz_spark.operators.windows import running_total
-
-    return running_total(
-        load(spark, sf_dir, "events"),
-        partition_col="user_id",
-        order_cols=["ts", "event_id"],
-        value_col="value",
-    ).select("event_id", "user_id", "running_total")
-
-
-def win_lag_lead_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X6: lag/lead deltas per user in deterministic event order."""
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    events = load(spark, sf_dir, "events")
-    return events.select(
-        "event_id",
-        "user_id",
-        F.round(F.col("value") - F.lag("value").over(w), 2).alias(
-            "delta_prev"
-        ),
-        F.lead("event_type").over(w).alias("next_type"),
-    )
-
-
 def win_ordered_analytics_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X6b/X13 folded: running total + lag/lead deltas in ONE pass.
 
@@ -1875,9 +1605,7 @@ def asof_join_orders_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("event_id", "o_orderkey", "o_totalprice")
 
 
-def pipeline_clean_corpus(
-    spark: SparkSession, sf_dir: str, *, _with_rank_gate: bool = True
-) -> DataFrame:
+def pipeline_clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end training-data cleaning: quality → lang-ID →
     per-language rank gate → exact dedup, composed from the real
     operators in one lazy plan.
@@ -1891,8 +1619,7 @@ def pipeline_clean_corpus(
     collapses exact duplicates by normalized-text fingerprint (min
     doc_id survives).  One scan, two narrow stages, one vocab-bounded
     histogram aggregate, one hash aggregate — the plan a 100 TB
-    curation job wants.  ``_with_rank_gate=False`` is the pre-r12
-    definition (bench DEFN_PIN keeps the headline series comparable).
+    curation job wants.
     """
     from data_toolz_spark.operators.text_analysis import (
         fingerprint,
@@ -1907,18 +1634,17 @@ def pipeline_clean_corpus(
         (F.col("quality_score") >= 0.3)
         & (F.col("lang_pred") == F.col("lang"))
     )
-    if _with_rank_gate:
-        thr = rank_thresholds(
-            kept.select("lang", "quality_score"),
-            "quality_score",
-            [(1, 4)],
-            group_cols=["lang"],
-        ).select("lang", F.col("threshold").alias("__thr"))
-        kept = (
-            kept.join(F.broadcast(thr), "lang")
-            .filter(F.col("quality_score") >= F.col("__thr"))
-            .drop("__thr")
-        )
+    thr = rank_thresholds(
+        kept.select("lang", "quality_score"),
+        "quality_score",
+        [(1, 4)],
+        group_cols=["lang"],
+    ).select("lang", F.col("threshold").alias("__thr"))
+    kept = (
+        kept.join(F.broadcast(thr), "lang")
+        .filter(F.col("quality_score") >= F.col("__thr"))
+        .drop("__thr")
+    )
     return (
         fingerprint(kept)
         .groupBy("fingerprint")
@@ -1990,32 +1716,8 @@ def io_filtered_read(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # Relational breadth (engine surface beyond the reference, SURVEY §2.8):
-# rollup, top-k per group, semi/anti joins, set ops, pivot.
+# percentiles, grouping lattice, semi/anti joins, pivot, salted skew.
 # ---------------------------------------------------------------------------
-
-
-def agg_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hierarchical totals via ROLLUP (flag → flag+status → grand)."""
-    return (
-        load(spark, sf_dir, "lineitem")
-        .rollup("l_returnflag", "l_linestatus")
-        .agg(
-            F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
-            F.count(F.lit(1)).alias("n_rows"),
-        )
-    )
-
-
-def agg_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """All grouping combinations via CUBE (flag x status lattice)."""
-    return (
-        load(spark, sf_dir, "lineitem")
-        .cube("l_returnflag", "l_linestatus")
-        .agg(
-            F.round(F.sum("l_extendedprice"), 2).alias("sum_price"),
-            F.count(F.lit(1)).alias("n_rows"),
-        )
-    )
 
 
 def agg_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2111,38 +1813,6 @@ def agg_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     return base.join(p50q, on="l_returnflag")
 
 
-def topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-3 orders by totalprice per priority (window + filter)."""
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("o_orderpriority").orderBy(
-        F.col("o_totalprice").desc(), F.col("o_orderkey")
-    )
-    return (
-        load(spark, sf_dir, "orders")
-        .withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= 3)
-        .select("o_orderpriority", "o_orderkey", "o_totalprice", "rnk")
-    )
-
-
-def agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Explicit GROUPING SETS via the SQL surface (identical text runs
-    on both engines)."""
-    from data_toolz_spark.catalog import register_directory, sql
-
-    register_directory(spark, sf_dir)
-    return sql(spark, _GROUPING_SETS_SQL)
-
-
-_GROUPING_SETS_SQL = """
-SELECT l_returnflag, l_linestatus,
-       ROUND(SUM(l_quantity), 2) AS sum_qty, COUNT(*) AS n_rows
-FROM lineitem
-GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
-"""
-
-
 _GROUPING_LATTICE_SQL = """
 SELECT l_returnflag, l_linestatus,
        ROUND(SUM(l_quantity), 2) AS sum_qty,
@@ -2161,8 +1831,7 @@ def agg_grouping_lattice(spark: SparkSession, sf_dir: str) -> DataFrame:
     The explicit set list equals CUBE(flag, status) and strictly
     contains ROLLUP(flag, status), so this one qid attests the whole
     Expand-based grouping machinery; folds the former agg_rollup /
-    agg_cube / agg_grouping_sets qids (functions kept for the bench
-    series).
+    agg_cube / agg_grouping_sets qids.
     """
     from data_toolz_spark.catalog import register_directory, sql
 
@@ -2246,51 +1915,6 @@ GROUP BY split, lang, sampled
 """
 
 
-def win_ntile_quartiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ntile(4) price quartiles per order priority."""
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("o_orderpriority").orderBy(
-        "o_totalprice", "o_orderkey"
-    )
-    return (
-        load(spark, sf_dir, "orders")
-        .withColumn("quartile", F.ntile(4).over(w))
-        .groupBy("o_orderpriority", "quartile")
-        .agg(
-            F.count(F.lit(1)).alias("n_orders"),
-            F.round(F.min("o_totalprice"), 2).alias("lo"),
-            F.round(F.max("o_totalprice"), 2).alias("hi"),
-        )
-    )
-
-
-def json_key_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Aggregate over a JSON-extracted key: decile histogram of props.k."""
-    events = load(spark, sf_dir, "events")
-    k = F.get_json_object("props", "$.k").cast("double")
-    return (
-        events.select(F.floor(k / 10).alias("k_bucket"))
-        .groupBy("k_bucket")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-    )
-
-
-def emb_dimension_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Explode each embedding into (dim, value) and aggregate per dim
-    (order-independent stats only, so no float-summation skew)."""
-    emb = load(spark, sf_dir, "embeddings")
-    return (
-        emb.select(F.posexplode(F.col("embedding").cast("array<double>")).alias("dim", "v"))
-        .groupBy("dim")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.min("v").alias("v_min"),
-            F.max("v").alias("v_max"),
-        )
-    )
-
-
 def join_anti_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Customers with no recorded events — left-anti hash join."""
     customer = load(spark, sf_dir, "customer")
@@ -2307,14 +1931,6 @@ def join_semi_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     return part.join(
         lineitem, part.p_partkey == lineitem.l_partkey, "left_semi"
     ).select("p_partkey", "p_brand")
-
-
-def set_ops_users(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Users who both clicked and purchased (INTERSECT of projections)."""
-    events = load(spark, sf_dir, "events")
-    clickers = events.filter(F.col("event_type") == "click").select("user_id")
-    buyers = events.filter(F.col("event_type") == "purchase").select("user_id")
-    return clickers.intersect(buyers)
 
 
 def pivot_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2352,13 +1968,7 @@ def agg_salted_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def text_bpe_tokens(
-    spark: SparkSession,
-    sf_dir: str,
-    *,
-    _with_bpe_training: bool = True,
-    _with_wordpiece: bool = True,
-) -> DataFrame:
+def text_bpe_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sub-word-ish token counts via the BPE-style regex, plus (r5)
     context-window chunking attested value-for-value: per document the
     chunk count and an md5 over the in-order chunk texts (24-word
@@ -2408,81 +2018,58 @@ def text_bpe_tokens(
         bpe_word_table,
     )
     from data_toolz_spark.operators.text_analysis import chunk_documents
+    from data_toolz_spark.operators.wordpiece import (
+        wordpiece_base_pieces,
+        wordpiece_token_count,
+        wordpiece_train,
+        wordpiece_vocab,
+    )
 
     docs = load(spark, sf_dir, "documents")
-    cols = [
+    # the word table feeds BPE training, the alphabet scan, AND the
+    # X92 WordPiece fold — persist for all consumers (merges/vocab end
+    # up literals, so nothing downstream holds the cache)
+    wt = bpe_word_table(docs).persist()
+    try:
+        # batch_size=64 (r12 optimization round): accept every
+        # provably-sequential-equal prefix per aggregation round — 32
+        # ranks collapse to ~20 rounds on this corpus with a
+        # BIT-IDENTICAL merge list (the _accept_batch proof +
+        # differential tests), so the oracle's rank-by-rank replay
+        # still matches.
+        merges = bpe_train(
+            wt, n_merges=_BPE_N_MERGES, min_count=2, batch_size=64
+        )
+        wp_merges = wordpiece_train(wt, n_merges=_WP_N_MERGES, min_count=2)
+        wp_vocab = wordpiece_vocab(wp_merges, wordpiece_base_pieces(wt))
+        wp_counts = wordpiece_token_count(docs, wp_vocab)
+        # r10 fold (VERDICT r9 item 1): the byte-fallback id-array md5.
+        # The corpus is ASCII, so each doc gets a planted decoration
+        # cycling the 2-/3-/4-byte UTF-8 arms plus a lone separator
+        # byte (_BPE_PLANTS) — the oracle rebuilds the ENTIRE lossless
+        # encoding (segmentation, merge replaces, vocab ids, RFC 3629
+        # byte decomposition) from the same code-point arithmetic.
+        vocab = bpe_vocab_bytes(merges, bpe_base_chars(wt))
+    finally:
+        wt.unpersist()
+    plant = F.element_at(
+        F.array(*[F.lit(p) for p in _BPE_PLANTS]),
+        (F.col("doc_id") % len(_BPE_PLANTS) + 1).cast("int"),
+    )
+    planted_text = F.concat(F.col("text"), F.lit(" "), plant)
+    ids = bpe_encode_bytes_expr(planted_text, merges, vocab)
+    base = docs.select(
         F.col("doc_id"),
         token_count("text").alias("ws_tokens"),
         bpe_token_count("text").alias("bpe_tokens"),
-    ]
-    if _with_bpe_training:
-        # the training loop is K sequential vocab-sized rounds — at
-        # sf0.1 its wall is almost entirely per-round job overhead
-        # (~8 s warm for 32 ranks on a 60-word vocab; the per-round
-        # aggregate itself is sub-ms), the fixed cost that vanishes at
-        # 100 TB where each rank aggregates a billion-word vocab.
-        # bench pins this qid's series entry to the pre-fold
-        # definition (_with_bpe_training=False) and times the
-        # composite as x_bpe_train, so the r5-comparable series
-        # survives with the attribution explicit.
-        # the word table feeds BPE training, the alphabet scan, AND
-        # the X92 WordPiece fold — persist for all consumers
-        # (merges/vocab end up literals, so nothing downstream holds
-        # the cache)
-        wt = bpe_word_table(docs).persist()
-        wp_counts = None
-        try:
-            # batch_size=64 (r12 optimization round): accept every
-            # provably-sequential-equal prefix per aggregation round —
-            # 32 ranks collapse to ~20 rounds on this corpus with a
-            # BIT-IDENTICAL merge list (the _accept_batch proof +
-            # differential tests), so the oracle's rank-by-rank replay
-            # still matches.  Measured 7.2 s → 4.7 s warm at sf0.1.
-            merges = bpe_train(
-                wt, n_merges=_BPE_N_MERGES, min_count=2, batch_size=64
-            )
-            if _with_wordpiece:
-                from data_toolz_spark.operators.wordpiece import (
-                    wordpiece_base_pieces,
-                    wordpiece_token_count,
-                    wordpiece_train,
-                    wordpiece_vocab,
-                )
-
-                wp_merges = wordpiece_train(
-                    wt, n_merges=_WP_N_MERGES, min_count=2
-                )
-                wp_vocab = wordpiece_vocab(
-                    wp_merges, wordpiece_base_pieces(wt)
-                )
-                wp_counts = wordpiece_token_count(docs, wp_vocab)
-            # r10 fold (VERDICT r9 item 1): the byte-fallback id-array
-            # md5.  The corpus is ASCII, so each doc gets a planted
-            # decoration cycling the 2-/3-/4-byte UTF-8 arms plus a
-            # lone separator byte (_BPE_PLANTS) — the oracle rebuilds
-            # the ENTIRE lossless encoding (segmentation, merge
-            # replaces, vocab ids, RFC 3629 byte decomposition) from
-            # the same code-point arithmetic.
-            vocab = bpe_vocab_bytes(merges, bpe_base_chars(wt))
-        finally:
-            wt.unpersist()
-        cols.append(
-            bpe_token_count_expr("text", merges).alias("bpe_vocab_tokens")
-        )
-        plant = F.element_at(
-            F.array(*[F.lit(p) for p in _BPE_PLANTS]),
-            (F.col("doc_id") % len(_BPE_PLANTS) + 1).cast("int"),
-        )
-        planted_text = F.concat(F.col("text"), F.lit(" "), plant)
-        ids = bpe_encode_bytes_expr(planted_text, merges, vocab)
-        cols.append(
-            F.md5(
-                F.array_join(
-                    F.transform(ids, lambda i: i.cast("string")), ","
-                )
-            ).alias("bpe_ids_md5")
-        )
-    base = docs.select(*cols)
+        bpe_token_count_expr("text", merges).alias("bpe_vocab_tokens"),
+        F.md5(
+            F.array_join(F.transform(ids, lambda i: i.cast("string")), ",")
+        ).alias("bpe_ids_md5"),
+    )
+    base = base.join(wp_counts, on="doc_id", how="left").withColumn(
+        "wp_tokens", F.coalesce("wp_tokens", F.lit(0))
+    )
     chunks = chunk_documents(docs, max_words=24, overlap=6)
     agg = chunks.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_chunks"),
@@ -2498,17 +2085,9 @@ def text_bpe_tokens(
             )
         ).alias("chunks_md5"),
     )
-    out_cols = ["doc_id", "ws_tokens", "bpe_tokens"]
-    if _with_bpe_training:
-        out_cols.extend(["bpe_vocab_tokens", "bpe_ids_md5"])
-        if wp_counts is not None:
-            base = base.join(wp_counts, on="doc_id", how="left")
-            base = base.withColumn(
-                "wp_tokens", F.coalesce("wp_tokens", F.lit(0))
-            )
-            out_cols.append("wp_tokens")
     return base.join(agg, on="doc_id", how="left").select(
-        *out_cols,
+        "doc_id", "ws_tokens", "bpe_tokens", "bpe_vocab_tokens",
+        "bpe_ids_md5", "wp_tokens",
         F.coalesce("n_chunks", F.lit(0)).cast("long").alias("n_chunks"),
         F.coalesce("chunks_md5", F.md5(F.lit(""))).alias("chunks_md5"),
     )
@@ -2849,33 +2428,6 @@ FROM w LEFT JOIN appagg USING (doc_id) LEFT JOIN agg USING (doc_id)
 # ---------------------------------------------------------------------------
 
 
-def multimodal_decode_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Binary media column → decoded metadata + payload features.
-
-    r6: the blobs are REAL spec-compliant PNGs (stdlib encoder,
-    scanline filter ``id % 5`` so every unfilter branch — None/Sub/Up/
-    Average/Paeth — executes inside the driver row), generated
-    executor-side and decoded through the stdlib PNG codec (zlib
-    inflate + per-filter reconstruction) in the same Arrow
-    ``mapInPandas`` plumbing.  The pixel PATTERN matches the former
-    FAKE table, so the arithmetic oracle is unchanged — only the byte
-    path got real.
-    """
-    from data_toolz_spark.operators.multimodal import (
-        decode_media,
-        png_media_table,
-    )
-
-    return decode_media(png_media_table(spark, 200), decoder="png").select(
-        "media_id",
-        F.col("meta.width").alias("width"),
-        F.col("meta.height").alias("height"),
-        F.col("meta.channels").alias("channels"),
-        F.round("mean_byte", 6).alias("mean_byte"),
-        "max_byte",
-    )
-
-
 def multimodal_audio_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Audio modality over REAL playable .wav blobs (r6): RIFF/WAVE
     PCM 16-bit chunk walk + vectorized waveform stats.
@@ -3005,9 +2557,8 @@ def multimodal_image_neardup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     decode (dims + mean_byte), both fingerprints, and the banded pair
     graph.  Subsumes multimodal_decode's PNG-decode attestation (same
     codec path, richer pattern), which folds out of the registry to
-    keep the 50-qid cap (bench keeps its headline series entry via
-    LEGACY).  Planted geometry: within-group Hamming ≤ 3, cross-group
-    ≥ 17, so τ=3 recovers exactly the 300 planted pairs — the qid
+    keep the 50-qid cap.  Planted geometry: within-group Hamming ≤ 3,
+    cross-group ≥ 17, so τ=3 recovers exactly the 300 planted pairs — the qid
     value-attests both that every planted pair is found AND that no
     spurious pair appears.  The skew story (20k identical images = one
     fingerprint node) is ``phash_components``; pytest pins its parity
@@ -3166,10 +2717,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     agg_partition_rowcounts ⊇ part_distinct — its grouping keys ARE the
     distinct tuples; dedup_simhash64_band replaces the 32-bit band qid;
     pipeline_clean_corpus ⊇ dedup_fingerprint; dedup_cc_drop ⊇ the
-    greedy minhash_drop; sim_topk_exact/dedup_embedding exercise
-    l2-norm/unit-vector, folding emb_norm).  Every folded-out entry
-    keeps its function (bench series continuity) and its pytest
-    coverage.  Never-driver-verified and new/changed qids run first.
+    greedy minhash_drop; sim_topk_ivf/dedup_embedding exercise
+    l2-norm/unit-vector, folding emb_norm).  Every folded-out shape
+    keeps its pytest coverage; the fold comments below name the qid
+    that now checks it.  Queries never value-checked before and
+    new/changed qids run first.
     """
     return {
         # --- new this round (r6): the four r5-new operator families
@@ -3190,8 +2742,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "agg_grouping_lattice": agg_grouping_lattice,
         "text_lang_id": text_lang_id_q,
         # text_quality folded r5 → text_web_signals (emits the same five
-        # feature columns verbatim plus the r4 web/repetition signals);
-        # callable stays in bench.LEGACY for the headline series
+        # feature columns verbatim plus the r4 web/repetition signals)
         "text_web_signals": text_web_signals_q,
         "text_decontaminate": text_decontaminate_q,
         "text_line_dedup": text_line_dedup_q,
@@ -3202,12 +2753,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # sampling_split_counts (VERDICT r4 item 5)
         # emb_dimension_stats folded r6 → its posexplode+per-dim agg
         # operators run inside every similarity qid's unit-vector path
-        # (sim_topk_*, dedup_embedding*, semantic_dedup); callable in
-        # bench.LEGACY.  Slot freed for semantic_dedup (VERDICT r5 #1).
+        # (sim_topk_*, dedup_embedding*, semantic_dedup).  Slot freed
+        # for semantic_dedup (VERDICT r5 #1).
         # topk_per_group folded r6 → text_tfidf_topk runs the identical
         # partitioned row_number-≤-k window (and text_vocab_topk the
-        # global-rank variant); callable in bench.LEGACY.  Slot freed
-        # for text_tfidf_topk (X48).
+        # global-rank variant).  Slot freed for text_tfidf_topk (X48).
         "text_tfidf_topk": text_tfidf_topk_q,
         # --- round-2 green
         # dedup_embedding_lsh folded r8 → its exact config is the
@@ -3217,22 +2767,21 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q1_pricing_summary": q1_pricing_summary,
         # scan_parquet folded r5 → every qid reads these parquet tables
         # through load() (S1 is the most-attested operator in the
-        # registry); its 3-col pruning shape stays pytest/contract-
-        # covered.  Slot freed for text_decontaminate.
+        # registry); its 3-col pruning shape stays pinned by
+        # tests/test_plans.py.  Slot freed for text_decontaminate.
         # agg_partition_rowcounts folded r5 → q1_pricing_summary groups
         # by the same (l_returnflag, l_linestatus) partition tuple and
         # value-checks count_order per group (R1 ⊂ grouping keys, R2 ≡
         # the count agg).  Slot freed for text_line_dedup.
-        # proj_drop_columns folded r5 → scan_parquet covers pruning and
-        # every projection-bearing qid exercises drop; slot freed for
+        # proj_drop_columns folded r5 → every projection-bearing qid
+        # exercises pruning and drop; slot freed for
         # incremental_novel_docs (VERDICT r4 item 1)
         "filter_exists": filter_exists,
         "filter_nested_and": filter_nested_and,
         # scan_dsv_roundtrip + scan_jsonlines_roundtrip folded r7 →
         # scan_text_roundtrips unions both format round trips tagged by
-        # fmt (same aggs, value-verified per format); single-format
-        # callables stay in bench.LEGACY + test_contract.  Slot freed
-        # for column_profile_census (VERDICT r6 item 8).
+        # fmt (same aggs, value-verified per format).  Slot freed for
+        # column_profile_census (VERDICT r6 item 8).
         "scan_text_roundtrips": scan_text_roundtrips,
         "column_profile_census": column_profile_census_q,
         "part_write_layout": part_write_layout,
@@ -3244,50 +2793,45 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "join_region_volume": join_region_volume,
         # q4_order_priority folded r5 → its EXISTS-as-semi-join shape
         # stays attested by join_semi_parts (left-semi) and X19 keeps
-        # q18's aggregate-HAVING path; callable pinned in
-        # tests/test_contract.py.  Slot freed for text_vocab_topk.
+        # q18's aggregate-HAVING path.  Slot freed for text_vocab_topk.
         "text_vocab_topk": text_vocab_topk_q,
         "q18_large_orders": q18_large_orders,
         "join_anti_customers": join_anti_customers,
         "join_semi_parts": join_semi_parts,
         # set_ops_users folded r6 → INTERSECT plans as the left-semi
         # join join_semi_parts attests and EXCEPT as join_anti_customers'
-        # left-anti; callable in bench.LEGACY.  Slot freed for
-        # text_search (VERDICT r5 #7).
+        # left-anti.  Slot freed for text_search (VERDICT r5 #7).
         "agg_salted_skew": agg_salted_skew,
         "pivot_event_counts": pivot_event_counts,
         "text_bpe_tokens": text_bpe_tokens,
         # text_token_stats folded r6 → its per-language token/char aggs
         # are a strict subset of text_web_signals (n_tokens per doc,
-        # value-verified) + text_vocab_topk (corpus token counts);
-        # callable in bench.LEGACY (headline member).  Slot freed for
-        # span_dedup (VERDICT r5 #2).
+        # value-verified) + text_vocab_topk (corpus token counts).
+        # Slot freed for span_dedup (VERDICT r5 #2).
         "win_user_session": win_user_session_q,
         # json_key_histogram folded r6 → filter_exists/filter_nested_and
         # attest the same JSON-key machinery (json_keys presence +
-        # get_json_object extraction feeding a numeric agg); callable in
-        # bench.LEGACY.  Slot freed for url_canonicalize (VERDICT r5 #3).
+        # get_json_object extraction feeding a numeric agg).  Slot freed
+        # for url_canonicalize (VERDICT r5 #3).
         # dedup_exact folded r9 → its min-id-per-group exact-dedup
         # semantics stay value-verified by incremental_novel_docs
         # (min-id representative per fingerprint, within-increment
-        # collapse) and by pipeline_clean_corpus's dedup stages;
-        # callable in bench.LEGACY (headline member).  Slot freed for
-        # embedding_kmeans (X63).
+        # collapse) and by pipeline_clean_corpus's dedup stages.  Slot
+        # freed for embedding_kmeans (X63).
         "embedding_kmeans": embedding_kmeans_q,
         # dedup_minhash folded r6 → dedup_cc_drop RUNS
         # minhash_near_duplicates for its pair graph (its oracle embeds
         # the same brute-force Jaccard SQL) and incremental_minhash_pairs
-        # value-verifies the pair surface WITH jaccard values; callable
-        # in bench.LEGACY (headline member).  Slot freed for
-        # incremental_minhash_pairs (X28b — last pytest-only dedup op).
+        # value-verifies the pair surface WITH jaccard values.  Slot
+        # freed for incremental_minhash_pairs (X28b — last pytest-only
+        # dedup op).
         "incremental_minhash_pairs": incremental_minhash_pairs_q,
         "dedup_cc_drop": dedup_cc_drop_q,
         "dedup_ngram_jaccard": dedup_ngram_jaccard_q,
         "dedup_embedding": dedup_embedding_q,
         # multimodal_decode folded r9 → multimodal_image_neardup (same
         # PNG codec path, richer pattern, plus the perceptual-hash
-        # near-dup graph); the callable survives for bench's headline
-        # series via LEGACY
+        # near-dup graph)
         "multimodal_image_neardup": multimodal_image_neardup_q,
         "multimodal_frames": multimodal_frames_q,
         "multimodal_audio": multimodal_audio_q,
@@ -3754,32 +3298,6 @@ _LANG_CASE_SQL = (
     + " END"
 )
 
-_QUALITY_SQL = f"""
-WITH b AS (
-  SELECT doc_id, text, {_DD_TOKS} AS toks FROM documents
-), f AS (
-  SELECT doc_id,
-    len(toks)::BIGINT AS n_tokens,
-    CASE WHEN len(toks) > 0
-         THEN list_sum(list_transform(toks, x -> length(x)))::DOUBLE / len(toks)
-         ELSE 0.0 END AS mtl,
-    length(text)::DOUBLE AS tl,
-    length(regexp_replace(text, '[^A-Za-z]', '', 'g'))::DOUBLE AS al,
-    len(list_filter(toks, x -> x IN {_STOP_SQL["en"]}))::DOUBLE
-      / greatest(len(toks), 1) AS sr
-  FROM b
-)
-SELECT doc_id, n_tokens,
-  floor(mtl * 10000) / 10000 AS mean_tok_len,
-  floor((CASE WHEN tl > 0 THEN al / tl ELSE 0.0 END) * 10000) / 10000
-    AS alpha_ratio,
-  floor(sr * 10000) / 10000 AS stop_ratio,
-  floor((least(n_tokens / 64.0, 1.0)
-         * (CASE WHEN mtl >= 2.0 AND mtl <= 12.0 THEN 1.0 ELSE 0.5 END)
-         * (CASE WHEN tl > 0 THEN al / tl ELSE 0.0 END)) * 10000) / 10000
-    AS quality_score
-FROM f
-"""
 
 def _boiler_count_sql() -> str:
     from data_toolz_spark.operators.text_analysis import (
@@ -4025,23 +3543,6 @@ JOIN piired pp USING (doc_id)
 LEFT JOIN bgthr_g tg ON g.lang IS NOT DISTINCT FROM tg.lang, bgthr
 """
 
-
-_SIMHASH_SQL = f"""
-WITH t AS (
-  SELECT doc_id, list_distinct({_DD_TOKS}) AS toks FROM documents
-), h AS (
-  SELECT doc_id, list_transform(toks, x -> CAST(list_sum(
-    [(strpos('0123456789abcdef', substr(md5(x), i, 1)) - 1)
-       * CAST(2**(4*(8-i)) AS BIGINT)
-     for i in generate_series(1, 8)]) AS BIGINT)) AS hs
-  FROM t
-)
-SELECT doc_id, COALESCE(CAST(list_sum(
-  [CASE WHEN list_sum(list_transform(hs, h -> 2*((h >> b) & 1) - 1)) > 0
-        THEN CAST(2**b AS BIGINT) ELSE 0 END
-   for b in generate_series(0, 31)]) AS BIGINT), 0) AS simhash
-FROM h
-"""
 
 # 64-bit twin of _SIMHASH_SQL: per-token hash = first 16 md5 hex chars
 # as two 32-bit halves (hi = chars 1-8, lo = chars 9-16; packing them

@@ -1,33 +1,34 @@
 """Benchmark harness — driver contract.
 
-Runs EVERY registered query at ``$SPARK_GRAFT_SF_DIR`` (default
-``/root/testdata/sf0.1``) on ``local[$SPARK_GRAFT_CPUS]`` and prints the
-full JSON record followed by one tiny COMPACT line (same headline
-fields, no per-qid map) so a bounded tail capture always parses::
+Runs every registered query at ``$SPARK_GRAFT_SF_DIR`` (default: the
+sf0.1 tables, see ``SF_DIR``) on ``local[$SPARK_GRAFT_CPUS]`` (default:
+the cores this process may run on) and prints the full JSON record, then
+compact lines that a bounded tail capture can always parse::
 
-    {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
-    {"metric": "...", "value": N, "unit": "sec", "headline_v2_total": ..., "sf": ..., "compact": true}
+    {"metric": "headline_total_wall", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
+    {"metric": ..., "value": N, "unit": "sec", "sf": ..., "compact": true, "spill": true, "queries": {...}}
+    {"metric": ..., "value": N, "unit": "sec", "sf": ..., "compact": true, "queries": {...}}
 
-``value`` is the HEADLINE-set total (the round-over-round BASELINE.md
-series — fixed membership so the ratio stays meaningful); ``queries``
-carries per-qid wall times for every registered qid so regressions are
-attributable.  ``--headline`` restricts to the headline set; explicit
-qid args restrict to those.
+``value`` is the total over ``HEADLINE``, a fixed list of registered
+qids, each timed at its registered definition.  ``queries`` carries
+per-entry wall times for every registered qid and every extra, so
+regressions are attributable.  ``--headline`` restricts the sweep to
+the headline set; explicit qid args restrict it to those.
 
-Wave resistance (VERDICT r8 item 1): this host suffers sibling-VM
-contention waves that arrive seconds after any load gate and last
-shorter than a sweep — two consecutive driver sweeps were
-contaminated beyond use as totals.  Headline entries (and any
-explicitly-requested qids) are therefore timed ``--min-of=K`` times
-each (default 3) and ``queries`` reports the per-entry MINIMUM — a
-wave shorter than an entry inflates some repeats, not the min.  The
-raw series survives in ``queries_repeats`` (every repeat, in order)
-and ``loadavg`` (one ``[before, after]`` 1-min-loadavg pair per
-repeat), so a reader can see exactly which repeats a wave hit.
-``value`` / ``headline_v2_total`` are computed from the minima.
-``--min-of=1`` restores the old single-shot behavior;
-``--min-of-all`` extends repeats to every swept entry (extras and
-builds included).
+The last line carries the rounded per-entry minima that fit in 1,900
+chars: headline members first, then the other registered qids, then
+the extras, slowest first.  It is a strict prefix of that order; the
+entries after the first one that does not fit go on the ``"spill"``
+line before it, which is printed only when needed.
+
+Headline entries (and explicitly requested qids) are timed
+``--min-of=K`` times each (default 3) and ``queries`` reports the
+per-entry MINIMUM: a load spike shorter than an entry inflates some
+repeats, not the min.  The raw series survives in ``queries_repeats``
+(every repeat, in order) and ``loadavg`` (one ``[before, after]``
+1-min-loadavg pair per repeat).  ``value`` is computed from the
+minima.  ``--min-of=1`` times each entry once; ``--min-of-all``
+extends repeats to every swept entry (extras and builds included).
 
 Each query is forced end-to-end with the ``noop`` sink (full execution,
 no driver-side collect, no disk write) so the measured time is scan +
@@ -48,7 +49,7 @@ import __spark_entry__ as entrymod
 from data_toolz_spark.session import get_spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
 
 
 def _default_heap() -> str:
@@ -63,219 +64,38 @@ def _default_heap() -> str:
         gb = 4
     return f"{gb}g"
 
+
 # Headline set: every operator family, weighted toward the shuffling /
 # scale-sensitive paths (joins, dedup, similarity, windows).  IO
 # round-trip qids are excluded — they benchmark tempdir writes, not the
 # engine's steady-state read path.
 HEADLINE = [
     "q1_pricing_summary",
-    "filter_or",
+    "filter_composite",
     "filter_nested_and",
     "join_shipping_priority",
     "join_region_volume",
-    "dedup_exact",
-    "dedup_minhash",
+    "dedup_cc_drop",
     "dedup_ngram_jaccard",
-    "text_simhash",
     "dedup_embedding",
-    "sim_topk_exact",
     "sim_topk_ann",
     "text_lang_id",
-    "text_quality",
-    "text_token_stats",
-    "agg_rollup",
-    "topk_per_group",
+    "text_web_signals",
+    "text_vocab_topk",
+    "agg_grouping_lattice",
+    "text_tfidf_topk",
     "agg_salted_skew",
     "pivot_event_counts",
-    "multimodal_decode",
+    "multimodal_image_neardup",
     "stream_windowed_counts",
     "win_user_session",
-    "win_running_total",
+    "win_ordered_analytics",
     "asof_join_orders",
-]
-
-
-# HEADLINE_V2: the scale-path successor series (r5+).  V1's membership
-# predates the round-3/4 scale work, so its total never sees the IVF
-# index, the 64-bit simhash, the composed corpus-cleaning pass, or the
-# incremental index — the operators a 100 TB deployment actually runs.
-# V2 = V1 + those four.  Both totals are reported every round (V1 as
-# ``value`` so the r1-comparable BASELINE.md series continues, V2 as
-# ``headline_v2_total``) — the V2 series becomes ratio-meaningful from
-# its first round, without breaking the old one.
-HEADLINE_V2 = HEADLINE + [
     "sim_topk_ivf",
     "dedup_simhash64_band",
     "pipeline_clean_corpus",
     "incremental_novel_docs",
 ]
-
-
-def _dedup_embedding_blocked(spark, sf_dir):
-    """The r1-r7 definition of the dedup_embedding qid (label-blocked
-    Gram pairs only).  r8 folded the LSH tier into the REGISTERED qid
-    (tier-tagged union, slot freed for embedding_decontaminate), which
-    would have silently added ~5 s of LSH work to a V1 HEADLINE
-    member — this pin keeps the headline series timing the original
-    definition, and the LSH arm keeps its own series entry below."""
-    from data_toolz_spark.operators.similarity import (
-        cosine_near_duplicates,
-    )
-
-    emb = entrymod.load(spark, sf_dir, "embeddings")
-    return cosine_near_duplicates(
-        emb, id_col="vec_id", threshold=0.4, block_cols=["label"]
-    )
-
-
-def _dedup_embedding_lsh(spark, sf_dir):
-    """The former dedup_embedding_lsh qid's exact config (folded r8
-    into dedup_embedding's tier='lsh' arm) — kept as its own timed
-    entry so the per-qid series continues."""
-    from data_toolz_spark.operators.similarity import (
-        cosine_near_duplicates_lsh,
-    )
-
-    emb = entrymod.load(spark, sf_dir, "embeddings")
-    return cosine_near_duplicates_lsh(
-        emb, id_col="vec_id", threshold=0.4,
-        dim=64, n_bits=4, n_tables=64,
-    )
-
-
-def _novel_docs_prebloom(spark, sf_dir):
-    """The r4–r8 definition of the incremental_novel_docs qid (plain
-    catalog anti-join, no bloom).  r9 folded the X62 bloom-prefilter
-    split + per-doc verdict column into the registered qid — the
-    result SET is identical (no false negatives), but the entry would
-    additionally time the filter build + 3 broadcast probe joins.  The
-    pin keeps the headline-V2 series timing the original definition;
-    the bloom-split production shape is timed as x_novel_docs_bloom."""
-    import tempfile
-
-    from data_toolz_spark.operators.incremental import (
-        build_fingerprint_catalog,
-        novel_documents,
-    )
-    from pyspark.sql import functions as F
-
-    docs = entrymod.load(spark, sf_dir, "documents")
-    table = "dtz_qid_fp_catalog"
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    path = tempfile.mkdtemp(prefix="dtz_cat_") + "/catalog"
-    build_fingerprint_catalog(
-        docs.filter(F.col("doc_id") % 2 == 0), table, n_buckets=8, path=path
-    )
-    return novel_documents(
-        spark, docs.filter(F.col("doc_id") % 2 == 1), table
-    ).select("doc_id", "fingerprint")
-
-
-def _text_bpe_tokens_prefold(spark, sf_dir):
-    """The r5–r8 definition of the text_bpe_tokens qid (regex token
-    counts + chunk attestation, no BPE TRAINING).  r9 folded the X61
-    distributed BPE-merge training loop into the registered qid, whose
-    wall at sf0.1 is almost entirely per-rank job-scheduling overhead
-    (32 sequential vocab-sized aggregates over a ~60-word vocab) — a
-    fixed cost that vanishes at 100 TB but would have ~9×'d a V1
-    HEADLINE member here.  The pin keeps the headline series timing
-    the original definition; the trained composite is timed as
-    x_bpe_train below."""
-    return entrymod.text_bpe_tokens(spark, sf_dir, _with_bpe_training=False)
-
-
-# sweep-time DEFINITION pins: a registered qid whose r8 redefinition
-# would change what a headline-series entry measures is timed at its
-# ORIGINAL definition (the redefined composite is what the driver's
-# correctness gate runs — this only affects bench attribution).
-def _text_lang_id_prefold(spark, sf_dir):
-    """The r1–r9 definition of the text_lang_id qid (stopword-overlap
-    heuristic only).  r10 folded the multiclass integer-GD classifier
-    TRAINING loop into the registered qid (6 sequential rounds, three
-    small shuffles each — fixed job overhead at sf0.1 that amortizes
-    at scale); the pin keeps the V1 headline entry comparable, the
-    trained composite is timed as x_lang_clf below."""
-    return entrymod.text_lang_id_q(spark, sf_dir, _with_clf_training=False)
-
-
-def _dedup_cc_drop_prefold(spark, sf_dir):
-    """The r6-r9 definition of the dedup_cc_drop qid (min-id drop list
-    only).  r10 folded quality-aware canonical selection into the
-    registered qid (component_representatives over text length — one
-    extra scores scan + the two-stage argmax); the pin keeps the
-    per-entry series comparable, the composite is x_cc_quality."""
-    return entrymod.dedup_cc_drop_q(
-        spark, sf_dir, _with_quality_rep=False
-    )
-
-
-def _embedding_kmeans_prefold(spark, sf_dir):
-    """The r9 definition of the embedding_kmeans qid (Lloyd's only).
-    r10 folded the greedy k-center selection + cover assignment into
-    the registered qid (3 extra argmax scans + one assignment); the
-    pin keeps the per-entry series comparable, the selection alone is
-    x_kcenter."""
-    return entrymod.embedding_kmeans_q(
-        spark, sf_dir, _with_kcenter=False
-    )
-
-
-def _pipeline_clean_prefold(spark, sf_dir):
-    """The r1-r11 definition of the pipeline_clean_corpus qid (static
-    gates + exact dedup).  r12 folded the X91 per-language rank-gate
-    into the REGISTERED qid (one vocab-bounded histogram + a broadcast
-    join); the pin keeps the headline-V2 member's series comparable."""
-    return entrymod.pipeline_clean_corpus(
-        spark, sf_dir, _with_rank_gate=False
-    )
-
-
-DEFN_PIN = {
-    "dedup_embedding": _dedup_embedding_blocked,
-    # r12 fold pinned out of the headline-V2 series
-    "pipeline_clean_corpus": _pipeline_clean_prefold,
-    # r10 folds pinned out of the per-entry series (composites get
-    # their own x_ entries)
-    "dedup_cc_drop": _dedup_cc_drop_prefold,
-    "embedding_kmeans": _embedding_kmeans_prefold,
-    # r9: BPE-training fold (X61) pinned out of the headline series
-    "text_bpe_tokens": _text_bpe_tokens_prefold,
-    # r10: multiclass-classifier fold pinned out of the headline series
-    "text_lang_id": _text_lang_id_prefold,
-    # r9: bloom-prefilter fold (X62) pinned out of the headline-V2
-    # series (identical result set; the split shape is x_novel_docs_bloom)
-    "incremental_novel_docs": _novel_docs_prebloom,
-}
-
-
-# The registry was trimmed to 50 qids in round 3 (driver cap); the
-# HEADLINE members below were folded out of queries() but their
-# callables survive — resolving them here keeps the headline series'
-# membership IDENTICAL across rounds, so the ratio stays valid.
-LEGACY = {
-    "filter_or": entrymod.filter_or,
-    "text_simhash": entrymod.text_simhash_q,
-    "agg_rollup": entrymod.agg_rollup,
-    # r6 folds (slots freed for semantic_dedup / span_dedup /
-    # url_canonicalize / text_search driver rows)
-    "text_token_stats": entrymod.text_token_stats_q,  # headline member
-    "emb_dimension_stats": entrymod.emb_dimension_stats,
-    "json_key_histogram": entrymod.json_key_histogram,
-    "set_ops_users": entrymod.set_ops_users,
-    "dedup_minhash": entrymod.dedup_minhash_q,  # headline member
-    # r9 fold (slot freed for multimodal_image_neardup)
-    "multimodal_decode": entrymod.multimodal_decode_q,  # headline member
-    # r9 fold (slot freed for embedding_kmeans)
-    "dedup_exact": entrymod.dedup_exact_q,  # headline member
-    "topk_per_group": entrymod.topk_per_group,  # headline member
-    "win_running_total": entrymod.win_running_total_q,
-    "sim_topk_exact": entrymod.sim_topk_exact_q,  # folded r4 → sim_topk_ivf
-    "text_quality": entrymod.text_quality_q,  # folded r5 → text_web_signals
-    # r7 fold (slot freed for column_profile_census): the composite
-    # scan_text_roundtrips carries both, these keep per-format timing
-    "scan_dsv_roundtrip": entrymod.scan_dsv_roundtrip,
-    "scan_jsonlines_roundtrip": entrymod.scan_jsonlines_roundtrip,
-}
 
 
 def _x_ann_realistic(spark, sf_dir):
@@ -719,77 +539,17 @@ def _mh_mine_only(spark, sf_dir):
     )
 
 
-_IVF_BENCH_TABLE = "dtz_bench_ivfidx"
-
-
-def _ivf_index_build(spark, sf_dir):
-    """Build+append phase of the sim_topk_ivf round trip (even-id
-    build, odd-id append, stored centroids reused) — one-time cost
-    per corpus; timed as its own entry so the sweep's sim_topk_ivf
-    measures SERVING (query ∩ batch IVF-PQ), the steady-state
-    shape."""
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from data_toolz_spark.catalog import drop_stale_table
-    from data_toolz_spark.operators.incremental import (
-        append_to_ivf_index,
-        build_ivf_index,
-    )
-
-    emb = entrymod.load(spark, sf_dir, "embeddings")
-    for t in ("ivf_meta", "ivf_centroids", "ivf_inv", "ivf_codebooks"):
-        drop_stale_table(spark, f"{_IVF_BENCH_TABLE}_{t}")
-    path = tempfile.mkdtemp(prefix="dtz_bench_ivfidx_") + "/index"
-    build_ivf_index(
-        emb.filter(F.col("vec_id") % 2 == 0),
-        _IVF_BENCH_TABLE,
-        dim=64,
-        n_centroids=8,
-        path=path,
-    )
-    append_to_ivf_index(
-        spark, emb.filter(F.col("vec_id") % 2 == 1), _IVF_BENCH_TABLE
-    )
-    return spark.table(f"{_IVF_BENCH_TABLE}_ivf_meta")
-
-
-def _ivf_query_pq_only(spark, sf_dir):
-    """Serve phase: full-probe query of the pre-built persistent index
-    INTERSECT the batch IVF-PQ path — the same composite the qid
-    hashes, minus the per-sweep table rebuild."""
-    from pyspark.sql import functions as F
-
-    from data_toolz_spark.operators.incremental import ivf_query_index
-    from data_toolz_spark.operators.similarity import ivfpq_topk
-
-    emb = entrymod.load(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") < 5)
-    roundtrip = ivf_query_index(
-        spark, q, _IVF_BENCH_TABLE, k=10, n_probe=8
-    )
-    pq = ivfpq_topk(
-        q, emb, query_id="vec_id", corpus_id="vec_id",
-        k=10, dim=64, n_centroids=8, n_probe=8,
-        m=8, ks=256, refine=100,
-    )
-    return roundtrip.intersect(pq)
-
-
 # sweep-time overrides: qid → the phase the sweep entry should time.
 # Applied only when the matching build entry ran earlier in the same
 # process (main() wires that up); the driver's CORRECTNESS run never
 # sees these — it calls queries() directly.
 BENCH_SPLIT = {
     "incremental_minhash_pairs": _mh_mine_only,
-    "sim_topk_ivf": _ivf_query_pq_only,
 }
 
 # pre-sweep one-time builds: (qid, build-entry name, build fn)
 BENCH_BUILDS = [
     ("incremental_minhash_pairs", "x_minhash_index_build", _mh_index_build),
-    ("sim_topk_ivf", "x_ivf_index_build", _ivf_index_build),
     # train-once for the pretrained IVF-PQ serve entry (no qid split:
     # x_ivfpq_pretrained itself consumes the stash)
     ("x_ivfpq_pretrained", "x_ivfpq_model_train", _ivfpq_model_train),
@@ -816,19 +576,6 @@ def _x_phash_mega_components(spark, sf_dir):
         .alias("ahash"),
     )
     return phash_components(hashes, max_hamming=3, n_blocks=8)
-
-
-def _x_bpe_train(spark, sf_dir):
-    """The REGISTERED text_bpe_tokens definition (r9 X61 fold): 32
-    BPE merges trained on the corpus vocabulary plus the trained
-    segmentation applied per doc.  Its own entry because the headline
-    slot is pinned pre-fold — the delta vs text_bpe_tokens is the
-    training loop's cost, almost all fixed per-rank job overhead at
-    this SF (the per-rank aggregate is vocab-sized).  Pinned to
-    ``_with_wordpiece=False`` since r12's X92 fold so this series
-    keeps measuring exactly what it measured in r9–r11; the
-    WordPiece arm is timed separately as x_wordpiece_train."""
-    return entrymod.text_bpe_tokens(spark, sf_dir, _with_wordpiece=False)
 
 
 def _x_wordpiece_train(spark, sf_dir):
@@ -1075,23 +822,6 @@ def _x_pagerank(spark, sf_dir):
     return pagerank(edges, n_iter=5)
 
 
-def _x_novel_docs_bloom(spark, sf_dir):
-    """The r9 registered definition of incremental_novel_docs: bloom
-    build + prefilter split + maybe-side anti-join + verdict column —
-    the production ingest shape (X62), timed under its own name."""
-    qid = entrymod.queries()["incremental_novel_docs"]
-    return qid(spark, sf_dir)
-
-
-def _x_lang_clf(spark, sf_dir):
-    """The REGISTERED text_lang_id definition (r10 fold): multiclass
-    integer-GD training (presence features over 2048 hashed buckets,
-    6 rounds) + argmax scoring + the legacy stopword arm.  The V1
-    headline slot is pinned pre-fold — the delta vs text_lang_id is
-    the training + scoring cost."""
-    return entrymod.text_lang_id_q(spark, sf_dir)
-
-
 def _x_shard_export(spark, sf_dir):
     """r10: deterministic corpus shuffle + training-shard manifest —
     hash-ordered shards over the documents table (token counts from
@@ -1146,12 +876,6 @@ def _x_token_pack(spark, sf_dir):
     )
 
 
-def _x_cc_quality(spark, sf_dir):
-    """The r10 dedup_cc_drop composite: transitive-closure clusters +
-    quality-aware (longest-member) canonical selection."""
-    return entrymod.dedup_cc_drop_q(spark, sf_dir)
-
-
 def _x_kcenter(spark, sf_dir):
     """Greedy k-center coreset selection (m=8) + full-corpus cover
     assignment — m-1 argmax scans with one row to the driver each,
@@ -1193,7 +917,7 @@ def _x_domain_cap(spark, sf_dir):
 def _x_unigram_train(spark, sf_dir):
     """Unigram-LM tokenizer: hard-EM training (3 rounds over the
     distinct-word table) + corpus encoding through the word→ids join.
-    Like x_bpe_train, sf0.1 wall is dominated by per-round fixed job
+    Like text_bpe_tokens, sf0.1 wall is dominated by per-round fixed job
     costs over the tiny vocab; the shapes are what transfer."""
     from data_toolz_spark.operators.unigram import (
         unigram_encode,
@@ -1251,19 +975,12 @@ def _x_ppl_strata(spark, sf_dir):
 
 
 EXTRAS = {
-    "x_bpe_train": _x_bpe_train,
-    "x_lang_clf": _x_lang_clf,
     "x_shard_export": _x_shard_export,
     "x_token_pack": _x_token_pack,
-    "x_novel_docs_bloom": _x_novel_docs_bloom,
     "x_interval_join": _x_interval_join,
     "x_pagerank": _x_pagerank,
     "x_quality_logreg": _x_quality_logreg,
     "x_dsir_weights": _x_dsir_weights,
-    # r8 fold (slot freed for embedding_decontaminate): the lsh tier
-    # of the dedup_embedding composite, timed at its old config under
-    # its old name so the per-qid series continues unbroken
-    "dedup_embedding_lsh": _dedup_embedding_lsh,
     "x_span_dedup": _x_span_dedup,
     "x_simhash_components": _x_simhash_components,
     "x_pii_redact": _x_pii_redact,
@@ -1278,7 +995,6 @@ EXTRAS = {
     "x_prepare_corpus": _x_prepare_corpus,
     "x_phash_mega_components": _x_phash_mega_components,
     # r10 session-2 additions (X80-X83)
-    "x_cc_quality": _x_cc_quality,
     "x_kcenter": _x_kcenter,
     "x_domain_cap": _x_domain_cap,
     "x_ppl_strata": _x_ppl_strata,
@@ -1294,6 +1010,39 @@ EXTRAS = {
     "x_bpe_local2048": _x_bpe_local2048,
     "x_wp_local512": _x_wp_local512,
 }
+
+
+TAIL_BUDGET = 1900  # stdout tail captures keep 2,000 chars
+
+
+def tail_lines(
+    header: dict, timings: dict[str, float], order: list[str]
+) -> list[str]:
+    """The compact lines printed after the full payload.
+
+    The last line's ``queries`` is the longest prefix of ``order``
+    whose line stays within ``TAIL_BUDGET`` chars, with times rounded.
+    Every entry after that prefix goes on a ``"spill": true`` line
+    printed before it; there is no spill line when everything fits.
+    """
+
+    def rounded(v: float) -> float:
+        return round(v, 2) if v < 10 else round(v, 1)
+
+    def line(qmap: dict[str, float], **extra) -> str:
+        return json.dumps(
+            {**header, "compact": True, **extra, "queries": qmap},
+            separators=(",", ":"),
+        )
+
+    packed: dict[str, float] = {}
+    for q in order:
+        trial = {**packed, q: rounded(timings[q])}
+        if len(line(trial)) > TAIL_BUDGET:
+            break
+        packed = trial
+    spill = {q: rounded(timings[q]) for q in order[len(packed):]}
+    return ([line(spill, spill=True)] if spill else []) + [line(packed)]
 
 
 def _sf_from_dir(path: str) -> float:
@@ -1325,21 +1074,18 @@ def _parse_args(argv: list[str]) -> tuple[int, bool, list[str]]:
 
 def main() -> int:
     min_of, repeat_all, only = _parse_args(sys.argv[1:])
-    all_qids = list(entrymod.queries())
+    queries = entrymod.queries()
     if only == ["--headline"]:
-        # V2 is a superset of V1, so one sweep feeds both totals
-        names = HEADLINE_V2
+        names = HEADLINE
     elif only:
         names = only
     else:
-        # every registered qid, headline entries first so the numbers
-        # most comparable round-over-round come from a freshly warmed
-        # JVM; "value" stays the HEADLINE total (the BASELINE.md
-        # series), per-qid timings cover everything for attribution;
-        # realistic-config LSH extras run last
+        # every registered qid, headline entries first so they run in a
+        # freshly warmed JVM; "value" stays the HEADLINE total, per-qid
+        # timings cover everything for attribution; extras run last
         names = (
             HEADLINE
-            + [q for q in all_qids if q not in HEADLINE]
+            + [q for q in queries if q not in HEADLINE]
             + list(EXTRAS)
         )
     spark = get_spark(
@@ -1359,7 +1105,6 @@ def main() -> int:
         },
     )
     spark.sparkContext.setLogLevel("ERROR")
-    queries = entrymod.queries()
 
     # JVM/codegen warmup on a tiny query so the first timed entry does
     # not absorb session startup costs.
@@ -1378,44 +1123,43 @@ def main() -> int:
     # streaming-infra warmup: the first streaming query in a session
     # pays one-time init (state-store provider, streaming listener,
     # offset-log machinery) — session cost, not query cost
-    if not os.environ.get("SPARK_GRAFT_NO_STREAM_WARMUP"):
-        warm_dir = tempfile.mkdtemp(prefix="dtz_warm_") + "/ev"
-        spark.range(10).selectExpr(
-            "timestamp_micros(id * 1000000) AS ts",
-            "'x' AS event_type",
-            "CAST(id AS DOUBLE) AS value",
-            "id AS user_id",
-            "id AS event_id",
-        ).write.mode("overwrite").parquet(warm_dir)
-        from data_toolz_spark.streaming.events import (
-            read_events_stream,
-            run_to_memory_sink,
-            sessionize_stream,
-            windowed_event_counts,
-        )
+    warm_dir = tempfile.mkdtemp(prefix="dtz_warm_") + "/ev"
+    spark.range(10).selectExpr(
+        "timestamp_micros(id * 1000000) AS ts",
+        "'x' AS event_type",
+        "CAST(id AS DOUBLE) AS value",
+        "id AS user_id",
+        "id AS event_id",
+    ).write.mode("overwrite").parquet(warm_dir)
+    from data_toolz_spark.streaming.events import (
+        read_events_stream,
+        run_to_memory_sink,
+        sessionize_stream,
+        windowed_event_counts,
+    )
 
-        run_to_memory_sink(
-            windowed_event_counts(
-                read_events_stream(spark, warm_dir),
-                window="1 hour",
-                watermark="2 hours",
-            ),
-            query_name="dtz_warmup_stream",
-            output_mode="complete",
-        )
-        # session_window plans through a different stateful operator
-        # (merging-sessions exec + its own state format) — warm it too
-        # so stream_sessions, like stream_windowed_counts, measures the
-        # query rather than one-time operator init
-        run_to_memory_sink(
-            sessionize_stream(
-                read_events_stream(spark, warm_dir),
-                gap_minutes=30.0,
-                watermark="2 hours",
-            ),
-            query_name="dtz_warmup_sessions",
-            output_mode="complete",
-        )
+    run_to_memory_sink(
+        windowed_event_counts(
+            read_events_stream(spark, warm_dir),
+            window="1 hour",
+            watermark="2 hours",
+        ),
+        query_name="dtz_warmup_stream",
+        output_mode="complete",
+    )
+    # session_window plans through a different stateful operator
+    # (merging-sessions exec + its own state format) — warm it too so
+    # stream_sessions, like stream_windowed_counts, measures the query
+    # rather than one-time operator init
+    run_to_memory_sink(
+        sessionize_stream(
+            read_events_stream(spark, warm_dir),
+            gap_minutes=30.0,
+            watermark="2 hours",
+        ),
+        query_name="dtz_warmup_sessions",
+        output_mode="complete",
+    )
 
     from data_toolz_spark.cache import clear_session_caches
 
@@ -1433,7 +1177,7 @@ def main() -> int:
     def _k_for(name: str) -> int:
         if repeat_all or name in explicit:
             return min_of
-        return min_of if name in HEADLINE_V2 else 1
+        return min_of if name in HEADLINE else 1
 
     def _timed(name: str, fn, k: int = 1) -> None:
         ts: list[float] = []
@@ -1474,10 +1218,8 @@ def main() -> int:
     for name in names:
         if name in split_active:
             fn = BENCH_SPLIT[name]
-        elif name in DEFN_PIN:
-            fn = DEFN_PIN[name]
         else:
-            fn = queries.get(name) or LEGACY.get(name) or EXTRAS[name]
+            fn = queries.get(name) or EXTRAS[name]
         _timed(
             name,
             lambda fn=fn: fn(spark, SF_DIR)
@@ -1498,16 +1240,10 @@ def main() -> int:
     total = round(
         sum(t for q, t in timings.items() if q in HEADLINE or q in only), 3
     )
-    total_v2 = (
-        round(sum(timings[q] for q in HEADLINE_V2), 3)
-        if all(q in timings for q in HEADLINE_V2)
-        else None
-    )
     payload = {
         "metric": "headline_total_wall",
         "value": total,
         "unit": "sec",
-        "headline_v2_total": total_v2,
         "queries": timings,
         "queries_repeats": repeats,
         "min_of": min_of,
@@ -1517,11 +1253,9 @@ def main() -> int:
     if stage_times is not None:
         payload["prepare_corpus_stages"] = stage_times
     print(json.dumps(payload))
-    # full-payload artifact (r12, VERDICT r11 task 3): the driver's
-    # tail capture is capped at 2,000 chars and drops the per-qid map,
-    # so every run also writes the complete payload next to bench.py —
-    # round closes copy it to a committed BENCH_DETAIL_rNN.json and
-    # the driver's own run lands as an uncommitted file it sweeps up.
+    # full-payload artifact: a 2,000-char stdout tail capture drops
+    # the per-qid map, so every run also writes the complete payload
+    # next to bench.py
     try:
         detail = dict(payload, argv=sys.argv[1:], unix_time=int(time.time()))
         detail_path = os.path.join(
@@ -1532,55 +1266,15 @@ def main() -> int:
             json.dump(detail, fh, indent=1, sort_keys=True)
     except OSError:
         pass  # a read-only checkout must not fail the bench
-    # trailing COMPACT records (VERDICT r6 item 2, r12 item 1): the
-    # full payload line grew past the driver's 2,000-char tail capture
-    # (r6: parsed null; r12: per_query/scaling empty for two straight
-    # comparisons because only a totals-only compact line survived).
-    # The LAST line therefore carries the per-qid minima itself,
-    # rounded and priority-packed to stay under the capture window:
-    # headline members first, then the remaining registered qids, then
-    # the slowest extras until the byte budget is spent.  A preceding
-    # spill line carries whatever didn't fit (full-stdout readers can
-    # merge it; tail-capture readers at least get the priority set),
-    # and BENCH_DETAIL_latest.json keeps full precision for everything.
-    def _rounded(v: float) -> float:
-        return round(v, 2) if v < 10 else round(v, 1)
-
-    _tail_budget = 1900  # driver tail capture is 2,000 chars
-
-    def _compact_line(qmap: dict[str, float]) -> str:
-        return json.dumps(
-            {
-                "metric": "headline_total_wall",
-                "value": total,
-                "unit": "sec",
-                "headline_v2_total": total_v2,
-                "sf": payload["sf"],
-                "compact": True,
-                "queries": qmap,
-            },
-            separators=(",", ":"),
-        )
-
-    _registered = set(queries)
-    _priority = [q for q in HEADLINE_V2 if q in timings]
-    _priority += sorted(q for q in timings if q in _registered and q not in _priority)
-    _rest = sorted(
-        (q for q in timings if q not in _priority),
-        key=lambda q: -timings[q],
+    registered = set(queries)
+    order = [q for q in HEADLINE if q in timings]
+    order += sorted(q for q in timings if q in registered and q not in order)
+    order += sorted(
+        (q for q in timings if q not in order), key=lambda q: -timings[q]
     )
-    _packed: dict[str, float] = {}
-    _spill: dict[str, float] = {}
-    for q in _priority + _rest:
-        trial = dict(_packed)
-        trial[q] = _rounded(timings[q])
-        if len(_compact_line(trial)) <= _tail_budget:
-            _packed = trial
-        else:
-            _spill[q] = _rounded(timings[q])
-    if _spill:
-        print(_compact_line(_spill))
-    print(_compact_line(_packed))
+    header = {k: payload[k] for k in ("metric", "value", "unit", "sf")}
+    for line in tail_lines(header, timings, order):
+        print(line)
     return 0
 
 

@@ -16,10 +16,14 @@ the answer to a ~``2^lg_k``-byte mergeable state per group:
   pattern (``operators/incremental.py``): fold each increment's sketch
   into the running row and 100 TB of history is never re-read.
 
-HLL union is deterministic, order-independent, and associative over
-sketch STATE — unioning the same set of part-sketches gives the same
-estimate regardless of how many parts there are or how they are
-grouped (pinned by tests; this is what makes daily folding drift-free).
+Once the part-sketches are past the SET→HLL promotion (a few hundred
+keys each at lg_k=12), HLL union is a register max: unioning the same
+set of part-sketches gives the same estimate in any order and whether
+they are unioned in one pass or in stages (pinned by tests; this is
+what makes daily folding drift-free).  Below that boundary the union
+inserts coupons in arrival order, so the same sketches — or the same
+rows split along other part boundaries — can land an estimate one or
+two apart; every such estimate stays inside the error bound.
 It is NOT bit-identical to a single pass over the raw rows: the union
 path promotes sketches to the dense HLL_8 representation, so a unioned
 estimate can differ from a one-shot sketch by a value inside the
@@ -105,10 +109,11 @@ def rollup_sketches(
     """Union stored sketch rows up to a coarser grouping.
 
     ``rollup_sketches(t, [])`` gives the global distinct estimate from
-    per-partition rows.  HLL union is associative and order-independent
-    over sketch state, so the rollup is drift-free: any regrouping of
-    the same part-sketches yields the same estimate (tested), and every
-    estimate stays inside the sketch's published error vs exact.
+    per-partition rows.  Past the SET→HLL promotion the union is a
+    register max, so any regrouping of the same part-sketches yields
+    the same estimate (tested); below it the estimate can move by one
+    or two with union order.  Every estimate stays inside the sketch's
+    published error vs exact.
     """
     merged = hll_merge(sketch_col)
     grouped = (

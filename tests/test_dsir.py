@@ -109,40 +109,35 @@ def test_validation(spark):
 
 def test_gumbel_k1_is_softmax_sampling(spark):
     """For k=1 the Gumbel-argmax law says P(pick i) = softmax(logw)_i
-    EXACTLY; check empirical frequencies over many seeds against the
-    analytic softmax."""
+    EXACTLY; check empirical frequencies over many trials against the
+    analytic softmax.  One frame of trial × id is perturbed in one
+    call (the hash keys on both columns, so every trial draws fresh
+    noise) and each trial's argmax is one aggregate — a single job."""
+    from pyspark.sql import functions as F
+
     from data_toolz_spark.operators.sampling import gumbel_topk_sample
 
     logw = {1: 0.0, 2: math.log(3.0), 3: math.log(6.0)}
     df = spark.createDataFrame(
         [(i, w) for i, w in logw.items()], "id long, w double"
     )
-    n_seeds = 400
+    n_trials = 4000
+    draws = spark.range(n_trials).withColumnRenamed("id", "trial")
+    draws = draws.crossJoin(df)
+    scored = gumbel_topk_sample(
+        draws, "w", k=len(logw) * n_trials, key_cols=["trial", "id"],
+        score_col="g",
+    )
+    winners = scored.groupBy("trial").agg(F.max_by("id", "g").alias("id"))
     wins = {1: 0, 2: 0, 3: 0}
-    rows = []
-    for s in range(n_seeds):
-        rows.append(
-            gumbel_topk_sample(df, "w", k=1, key_cols=["id"], seed=s)
-        )
-    # union all draws into one job instead of 400 collects — as a
-    # BALANCED tree: the left-deep reduce built a 400-deep plan whose
-    # Catalyst analysis alone took ~2 min (guide §3.3, planning time on
-    # very wide/deep unions); depth log2(400) ≈ 9 plans in seconds
-    while len(rows) > 1:
-        rows = [
-            rows[i].unionByName(rows[i + 1])
-            if i + 1 < len(rows)
-            else rows[i]
-            for i in range(0, len(rows), 2)
-        ]
-    all_draws = rows[0]
-    for r in all_draws.collect():
-        wins[r["id"]] += 1
+    for r in winners.groupBy("id").count().collect():
+        wins[r["id"]] = r["count"]
+    assert sum(wins.values()) == n_trials, wins
     z = 1 + 3 + 6
     for i, weight in ((1, 1), (2, 3), (3, 6)):
         p = weight / z
-        se = math.sqrt(p * (1 - p) / n_seeds)
-        assert abs(wins[i] / n_seeds - p) < 5 * se, (i, wins)
+        se = math.sqrt(p * (1 - p) / n_trials)
+        assert abs(wins[i] / n_trials - p) < 5 * se, (i, wins)
 
 
 def test_gumbel_deterministic_and_partition_invariant(spark):

@@ -1,6 +1,6 @@
 """HLL sketch surface: accuracy, and the incremental-rollup contract —
-union over part-sketches is deterministic, order-independent, and
-grouping-independent (what makes stored per-day sketch rows safe to
+union over the same HLL-mode part-sketches is order- and
+staging-independent (what makes stored per-day sketch rows safe to
 fold).  Union is NOT bit-identical to a one-shot sketch (dense
 promotion differs); both must stay inside the sketch's error bound."""
 
@@ -35,10 +35,34 @@ def test_approx_distinct_within_tolerance(spark, documents):
 
 
 def test_union_grouping_invariance(spark, documents):
-    """The incremental contract: unioning the SAME coverage of the data
-    through different part boundaries (2-way vs 7-way disjoint splits)
-    gives the same estimate — folding daily vs weekly cannot drift."""
-    est = {}
+    """The incremental contract: the SAME 7 part-sketches give the same
+    estimate whether unioned flat or in two stages (parts 0-3 first,
+    then that sketch ∪ parts 4-6), in any physical layout — folding
+    daily vs weekly cannot drift.  Each part holds 1,000 keys, past the
+    SET→HLL promotion, so the union is a register max.  Below that
+    boundary DataSketches inserts coupons in arrival order and the
+    estimate can move by one or two; different part boundaries over the
+    documents (2-way vs 7-way splits) are therefore held to the error
+    bound only."""
+    keys = spark.range(7000).select(
+        F.col("id").alias("k"), F.pmod("id", F.lit(7)).alias("part")
+    )
+    t = distinct_sketch_table(keys, ["part"], "k").cache()
+    try:
+        stage = F.when(F.col("part") <= 3, 0).otherwise(F.col("part"))
+        ests = set()
+        for layout in (t, t.repartition(5), t.coalesce(1)):
+            ests.add(rollup_sketches(layout, []).collect()[0][1])
+            staged = rollup_sketches(
+                layout.withColumn("stage", stage), ["stage"]
+            )
+            ests.add(rollup_sketches(staged, []).collect()[0][1])
+        assert len(ests) == 1, ests
+        assert abs(ests.pop() - 7000) <= 0.08 * 7000
+    finally:
+        t.unpersist()
+
+    exact = documents.select("doc_id").distinct().count()
     for parts in (2, 7):
         t = distinct_sketch_table(
             documents.withColumn(
@@ -47,10 +71,8 @@ def test_union_grouping_invariance(spark, documents):
             ["part"],
             "doc_id",
         )
-        est[parts] = rollup_sketches(t, []).collect()[0]["approx_distinct"]
-    assert est[2] == est[7]
-    exact = documents.select("doc_id").distinct().count()
-    assert abs(est[2] - exact) <= max(5, 0.08 * exact)
+        est = rollup_sketches(t, []).collect()[0]["approx_distinct"]
+        assert abs(est - exact) <= max(5, 0.08 * exact), (parts, est)
 
 
 def test_rollup_is_order_independent(spark, documents):

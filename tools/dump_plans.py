@@ -20,10 +20,13 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 
 SHOW = [
     ("q1_pricing_summary", "Filter-DSL pushdown + partial/final aggregate"),
-    ("scan_parquet", "column pruning (3-column ReadSchema)"),
     ("join_region_volume", "broadcast dim chain, fact shuffles once"),
     ("asof_join_orders", "union + single window sort (no range join)"),
-    ("dedup_minhash", "collapse → band join → verify → expand"),
+    (
+        "dedup_cc_drop",
+        "collapse → band join → verify → fingerprint-level connected "
+        "components → two-stage longest-member argmax",
+    ),
     (
         "sim_topk_ann",
         "payload-free band join + unit-vector verify + two-stage top-k",
@@ -134,14 +137,7 @@ def main() -> int:
         "",
     ]
     for qid, note in SHOW:
-        # folded-out qids (e.g. scan_parquet) keep their module-level
-        # callable even when absent from the 50-slot registry
-        fn = (
-            queries.get(qid)
-            or getattr(entrymod, qid, None)
-            or getattr(entrymod, f"{qid}_q")
-        )
-        plan = formatted(fn(spark, SF_DIR))
+        plan = formatted(queries[qid](spark, SF_DIR))
         out.append(f"## {qid} — {note}\n")
         out.append("```")
         out.append(plan.rstrip())
