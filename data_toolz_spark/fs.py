@@ -96,7 +96,7 @@ class FsUtil:
         return self._jpath(path).getFileSystem(self._conf)
 
     @staticmethod
-    def _status_detail(status) -> dict[str, Any]:
+    def _status_name(status) -> str:
         # fsspec-shaped names: local paths are bare ('/tmp/x'), remote
         # paths keep the authority ('bucket/key' for s3a://bucket/key)
         # — dropping the bucket would break name-based joins in ported
@@ -104,10 +104,12 @@ class FsUtil:
         uri = status.getPath().toUri()
         authority = uri.getAuthority()
         name = uri.getPath()
-        if authority:
-            name = authority + name
+        return authority + name if authority else name
+
+    @classmethod
+    def _status_detail(cls, status) -> dict[str, Any]:
         return {
-            "name": name,
+            "name": cls._status_name(status),
             "size": status.getLen(),
             "type": "directory" if status.isDirectory() else "file",
             "modified": _dt.datetime.fromtimestamp(
@@ -242,23 +244,39 @@ class FsUtil:
             return {d["name"]: d for d in details}
         return [d["name"] for d in details]
 
+    def _files(self, path: str):
+        """(name, size) of every file under a path, recursively.
+
+        The local filesystem is walked with ``listStatus``: its
+        ``listFiles`` builds a ``LocatedFileStatus`` per file, which
+        reads the permissions and, without native Hadoop, forks an
+        ``ls -ld`` for each one.  Other schemes keep ``listFiles`` —
+        on S3A that is one flat paginated LIST, where a walk would
+        cost one LIST per directory."""
+        fs = self._fs(path)
+        root = self._jpath(path)
+        if fs.getUri().getScheme() != "file":
+            it = fs.listFiles(root, True)
+            while it.hasNext():
+                status = it.next()
+                yield self._status_name(status), status.getLen()
+            return
+        pending = [root]
+        while pending:
+            for status in fs.listStatus(pending.pop()):
+                if status.isDirectory():
+                    pending.append(status.getPath())
+                else:
+                    yield self._status_name(status), status.getLen()
+
     def find(self, path: str) -> list[str]:
-        """All FILES under a path, recursively (fsspec ``find``) —
-        Hadoop's ``listFiles(recursive=True)`` RemoteIterator."""
-        it = self._fs(path).listFiles(self._jpath(path), True)
-        out = []
-        while it.hasNext():
-            out.append(self._status_detail(it.next())["name"])
-        return sorted(out)
+        """All FILES under a path, recursively (fsspec ``find``)."""
+        return sorted(name for name, _ in self._files(path))
 
     def du(self, path: str, total: bool = True):
         """Bytes under a path (fsspec ``du``): one number, or a
         per-file dict with ``total=False``."""
-        it = self._fs(path).listFiles(self._jpath(path), True)
-        sizes: dict[str, int] = {}
-        while it.hasNext():
-            d = self._status_detail(it.next())
-            sizes[d["name"]] = int(d["size"])
+        sizes = dict(self._files(path))
         return sum(sizes.values()) if total else sizes
 
     def size(self, path: str) -> int:

@@ -89,6 +89,19 @@ def _weights_frame(spark, nz: list[tuple], k: int):
     return F.broadcast(spark.createDataFrame(wpdf))
 
 
+def _check_lr(fn: str, lr_num: int, lr_den: int, n: int, fscale: int) -> None:
+    """Bound the step ratio: ``Δw = (g·lr_num) // (lr_den·n·fscale)``
+    fits int64 whenever ``lr_num ≤ lr_den·n·fscale``, because the
+    overflow guard keeps ``|g|`` below 2^62.  Above that bound the
+    local arms' exact quotient would not fit their int64 weights."""
+    if lr_num > lr_den * n * fscale:
+        raise ValueError(
+            f"{fn}: lr_num={lr_num} exceeds lr_den·n·feature_scale="
+            f"{lr_den * n * fscale} (n={n}) — the weight update could "
+            "overflow int64; lower the learning rate"
+        )
+
+
 def _p_scaled(margin: Column, fscale: int) -> Column:
     """Hard sigmoid in P_SCALE units: clamp(m / (4·fscale) + ½, 0, 1).
     ``margin`` is in W_SCALE·fscale units and W_SCALE == P_SCALE, so
@@ -166,6 +179,7 @@ def logreg_fit(
         n = int(stats["n"])
         if n == 0:
             raise ValueError("logreg_fit: no labeled rows")
+        _check_lr("logreg_fit", lr_num, lr_den, n, feature_scale)
         for j in range(k):
             maxf = int(stats[f"m{j}"] or 0)
             if n * P_SCALE * max(maxf, 1) >= (1 << 62):
@@ -589,6 +603,7 @@ def multiclass_fit(
             )
             n_groups = int(codes.max()) + 1
             n = int(pdf["__id"].nunique())
+            _check_lr("multiclass_fit", lr_num, lr_den, n, feature_scale)
             lab_idx = {c: i for i, c in enumerate(classes)}
             li = pdf["__lbl"].map(lab_idx).to_numpy(np.int64)
             bucket = pdf["bucket"].to_numpy(np.int64)
@@ -656,6 +671,7 @@ def multiclass_fit(
         )
         if n == 0:
             raise ValueError("multiclass_fit: no labeled rows")
+        _check_lr("multiclass_fit", lr_num, lr_den, n, feature_scale)
         w = [[0] * (n_buckets + 1) for _ in range(k)]
         for _ in range(n_iter):
             nz = [

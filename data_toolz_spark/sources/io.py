@@ -237,8 +237,8 @@ class DataIO:
         expressions (``{"n_rows": F.count(F.lit(1)), "max_ts":
         F.max("ts")}``).  Metrics land in ``self.last_write_metrics``
         after the call; the path return stays reference-shaped.
-        Incompatible with ``suffix`` (the chunked path runs a count
-        action first, which would consume the observation) and with
+        Incompatible with ``suffix`` (an un-partitioned chunked write
+        runs extra writes for the empty tail files) and with
         ``cluster_by`` (range partitioning's sampling pass is a
         separate action over the same plan).
 
@@ -282,10 +282,11 @@ class DataIO:
         if observe:
             if suffix or cluster_by:
                 raise ValueError(
-                    "observe requires a single-action write: the chunked "
-                    "(suffix) path runs a count first and cluster_by runs "
-                    "a range-sampling pass, either of which would consume "
-                    "the observation before the write"
+                    "observe requires a single-action write: an "
+                    "un-partitioned chunked (suffix) write runs extra "
+                    "writes for the empty tail files and cluster_by runs "
+                    "a range-sampling pass, either of which would run "
+                    "the observed plan more than once"
                 )
             from pyspark.sql import Column, Observation
 
@@ -406,9 +407,9 @@ class DataIO:
         bit-for-bit (io.py:79,94): chunk i holds rows
         ``[i*ceil(n/k), (i+1)*ceil(n/k))`` in sorted row order, i.e.
         ``floor((row_number()-1) / ceil(n/k))`` — 10 rows into 4 chunks
-        gives 3/3/3/1, NOT ntile's balanced 3/3/2/2.  Each chunk is then
-        written in its own append pass with the partition dirs collapsed
-        to one-file-per-dir.  Un-partitioned writes materialize empty
+        gives 3/3/3/1, NOT ntile's balanced 3/3/2/2.  Each chunk is
+        written as one file by the one task that holds its partition
+        dir's rows.  Un-partitioned writes materialize empty
         tail chunks as schema-only files (``coalesce(1)`` keeps the
         single write task alive), matching the reference's guarantee
         (io.py:79-83); partitioned writes emit one file per *non-empty*
@@ -417,13 +418,14 @@ class DataIO:
         ``suffix`` names select chunk *count*, not file names).
 
         Scale note: this is a parity operator — it costs ONE write job
-        (the chunk id rides along as a trailing ``partitionBy`` column,
-        then a driver-side O(#dirs) rename hoists the files out of the
-        ``__chunk=i`` dirs), and with NO partition columns the
-        row-order contract forces the whole dataset through a
-        single-task sort window (warned below).  For bulk output sizing
-        at scale prefer ``maxRecordsPerFile`` / plain ``partitionBy``,
-        which need no row-order contract.
+        with ONE exchange, the window's own (the chunk id rides along
+        as a trailing ``partitionBy`` column, written straight from the
+        window's partitioning, then a driver-side O(#dirs) rename
+        hoists the files out of the ``__chunk=i`` dirs), and with NO
+        partition columns the row-order contract forces the whole
+        dataset through a single-task sort window (warned below).  For
+        bulk output sizing at scale prefer ``maxRecordsPerFile`` /
+        plain ``partitionBy``, which need no row-order contract.
         """
         if not partition_by:
             warnings.warn(
@@ -447,20 +449,16 @@ class DataIO:
                 F.floor((F.row_number().over(window) - 1) / chunk_size) + 1
             ).cast("int"),
         )
-        # One job: repartition on (partition cols, chunk) so every leaf
-        # dir is written by exactly one task (exactly one file per chunk
-        # per dir), write with __chunk as the trailing partition column.
-        # (The previous shape — n_chunks sequential jobs filtering a
-        # persisted frame — re-scheduled the whole plan per chunk and
-        # was the slowest bench entry.)
-        # sortWithinPartitions restores the reference's intra-file row
-        # order (the iloc slices are cut from sorted order; the
-        # repartition alone would leave rows hash-shuffled within each
-        # chunk file).  Cheap: the order columns are already computed
-        # for row_number, and the sort is per-task, no extra exchange.
+        # One job, one exchange: the window already hash-partitions on
+        # the partition columns (a single partition without them), and
+        # AQE may coalesce those tasks but never splits a key, so every
+        # partition dir — and every __chunk dir under it — is written
+        # by exactly one task: one file per chunk per dir.  The
+        # per-task sort puts rows in the writer's required order
+        # (partition cols, __chunk), so Spark adds no sort of its own,
+        # and keeps the reference's sorted slice order inside each file.
         writer = (
-            chunked.repartition(*partition_by, "__chunk")
-            .sortWithinPartitions(*(order_cols or ["__chunk"]))
+            chunked.sortWithinPartitions(*partition_by, "__chunk", *order_cols)
             .write.mode(mode)
             .partitionBy(*partition_by, "__chunk")
         )
@@ -498,8 +496,8 @@ class DataIO:
         """Move data files out of trailing ``__chunk=i`` dirs (one level
         up) and delete the dirs; returns the set of chunk ids seen.
         Driver-side Hadoop FileSystem pass, O(#partition dirs) — same
-        cost class as ``_apply_partition_transformer``.  Task-file names
-        are unique across one job, so hoisting cannot collide."""
+        cost class as ``_apply_partition_transformer``.  The chunk id is
+        woven into each hoisted name, so hoisting cannot collide."""
         jvm = spark._jvm
         hadoop_conf = spark.sparkContext._jsc.hadoopConfiguration()
         root = jvm.org.apache.hadoop.fs.Path(path)

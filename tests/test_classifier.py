@@ -191,6 +191,41 @@ def test_gradient_overflow_guard(spark):
     assert len(m.weights) == 2
 
 
+def test_learning_rate_bound(spark, monkeypatch):
+    """A learning rate above ``n·feature_scale`` (lr_num > lr_den·n·
+    feature_scale) makes the exact weight update exceed int64, which
+    the local arms would hit as an OverflowError mid-fit: both fits
+    reject it up front, in both arms, with a ValueError naming the
+    bound; the bound itself still trains."""
+    import data_toolz_spark.operators.classifier as clfmod
+    from data_toolz_spark.operators.classifier import multiclass_fit
+
+    df = spark.createDataFrame([(1.0, 1)], "x double, label int")
+    docs = spark.createDataFrame(
+        [(1, "a b", "x"), (2, "c d", "y")],
+        "doc_id long, text string, lang string",
+    )
+    big = 1 << 62
+    for cap in (clfmod._LOCAL_FIT_CAP, 0):
+        monkeypatch.setattr(clfmod, "_LOCAL_FIT_CAP", cap)
+        with pytest.raises(ValueError, match="lr_den·n·feature_scale"):
+            logreg_fit(
+                df, ["x"], "label", n_iter=1, lr_num=big, lr_den=1,
+                feature_scale=1,
+            )
+        with pytest.raises(ValueError, match="lr_den·n·feature_scale"):
+            multiclass_fit(
+                docs, "text", "lang", id_col="doc_id", n_buckets=32,
+                n_iter=1, lr_num=big, lr_den=1, feature_scale=1,
+            )
+        # lr_num == lr_den·n·feature_scale is the largest accepted
+        m = logreg_fit(
+            df, ["x"], "label", n_iter=1, lr_num=2, lr_den=1,
+            feature_scale=2,
+        )
+        assert len(m.weights) == 2
+
+
 # ---------------------------------------------------------------------------
 # r10: multiclass integer-exact linear classifier (fastText-shaped)
 # ---------------------------------------------------------------------------

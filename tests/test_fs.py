@@ -134,6 +134,43 @@ def test_glob_find_du_size_predicates(fs, tmp_path):
     assert fs.size(str(tmp_path / "new.bin")) == 0
 
 
+def test_find_du_local_walk_matches_list_files(spark, fs, tmp_path):
+    """On the local filesystem find/du walk the tree with listStatus;
+    they must return exactly what Hadoop's recursive listFiles does on
+    a nested tree holding a Spark-written dataset (_SUCCESS markers
+    listed, .crc checksum files hidden) next to plain files."""
+    root = tmp_path / "tree"
+    (root / "a" / "b").mkdir(parents=True)
+    (root / "a" / "x.txt").write_bytes(b"12345")
+    (root / "a" / "b" / "y.bin").write_bytes(b"678")
+    (root / "empty").mkdir()
+    spark.range(20).selectExpr("id", "id % 2 AS k").write.partitionBy(
+        "k"
+    ).parquet(str(root / "ds"))
+
+    jvm = spark._jvm
+    jroot = jvm.org.apache.hadoop.fs.Path(str(root))
+    it = jroot.getFileSystem(
+        spark.sparkContext._jsc.hadoopConfiguration()
+    ).listFiles(jroot, True)
+    listed = {}
+    while it.hasNext():
+        status = it.next()
+        listed[status.getPath().toUri().getPath()] = status.getLen()
+
+    assert fs.find(str(root)) == sorted(listed)
+    assert fs.du(str(root), total=False) == listed
+    assert fs.du(str(root)) == sum(listed.values())
+    names = [f.rsplit("/", 1)[1] for f in listed]
+    assert "_SUCCESS" in names
+    assert not any(n.endswith(".crc") for n in names)
+    assert any(f.endswith("/a/b/y.bin") for f in listed)
+    # a file path lists itself
+    one = str(root / "a" / "x.txt")
+    assert fs.find(one) == [one]
+    assert fs.du(one, total=False) == {one: 5}
+
+
 def test_fs5_dynamic_delegation_gate(fs):
     """FS5: unknown methods resolve through fsspec when installed;
     without it the AttributeError names the gap (import-gated — this

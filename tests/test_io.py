@@ -448,6 +448,41 @@ def test_chunked_write_preserves_intra_file_row_order(spark, tmp_path):
         assert rows == sorted(rows)
 
 
+def _last_final_plan(spark) -> str:
+    """The final physical plan tree of the session's last SQL execution
+    (with AQE: the ``Final Plan`` section, not the initial one)."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    executions = spark._jsparkSession.sharedState().statusStore().executionsList()
+    tree = executions.last().physicalPlanDescription().split("\n\n")[0]
+    if "== Final Plan ==" in tree:
+        tree = tree.split("== Final Plan ==")[1].split("== Initial Plan ==")[0]
+    return tree
+
+
+def test_chunked_write_is_one_exchange(spark, tmp_path):
+    """A partitioned chunked write is written straight from the sort
+    window's hash exchange: the final plan has ONE Exchange (a second
+    repartition on (partition cols, __chunk) would shuffle every row
+    again) and no more than the two per-task Sorts (the window's and
+    the writer-order one)."""
+    import re
+
+    df = spark.range(300).withColumn("key", (F.col("id") % 3).cast("string"))
+    path = str(tmp_path / "one_exchange")
+    DataIO().write(df, path, "dsv", partition_by=["key"], suffix=["c0", "c1"])
+    plan = _last_final_plan(spark)
+    assert "InsertIntoHadoopFsRelationCommand" in plan, plan
+    assert len(re.findall(r"\bExchange \(\d+\)", plan)) == 1, plan
+    assert len(re.findall(r"\bSort \(\d+\)", plan)) <= 2, plan
+    for key in ("key=0", "key=1", "key=2"):
+        files = [
+            f
+            for f in os.listdir(os.path.join(path, key))
+            if f.startswith("part-")
+        ]
+        assert len(files) == 2, (key, files)
+
+
 class TestCorruptRecords:
     """on_corrupt: fail (reference parity) / drop / keep-and-quarantine
     on the text formats; rejected for checksummed formats."""
