@@ -638,27 +638,30 @@ def _x_bpe_train256(spark, sf_dir):
 def _x_bpe_delta128(spark, sf_dir):
     """r12 (VERDICT r11 task 1): DELTA-maintained pair-count training
     — 128 merges over the corpus's word-TRIGRAM unit table (~27k
-    distinct units at sf0.1, above the auto crossover), batch_size=64.
-    Per round, candidates come from the persisted (l, r, cnt) table
-    and only AFFECTED units are recounted (signed before/after pass),
-    instead of re-exploding all ~800k adjacent pairs: measured 65 s
-    delta vs 86 s recount for 256 merges on this table (r12), with
-    the gap widening as the table grows (a 1.16M-unit n-gram-union
-    table makes the recount path intractable).  Output bit-identical
-    to recount/sequential (tests/test_bpe.py differentials)."""
+    distinct units at sf0.1), batch_size=64, on the distributed loop
+    (``_LOCAL_UNIT_CAP`` forced to 0 — the table is far under it).
+    Per round, candidates come from the (l, r, cnt) table and only
+    AFFECTED units are recounted (signed before/after pass), instead
+    of re-exploding all ~800k adjacent pairs.  Output bit-identical to
+    sequential (tests/test_bpe.py differentials)."""
+    import data_toolz_spark.operators.bpe as bpemod
     from data_toolz_spark.operators.bpe import (
         bpe_ngram_unit_table,
         bpe_train,
     )
 
     docs = entrymod.load(spark, sf_dir, "documents")
-    merges = bpe_train(
-        bpe_ngram_unit_table(docs, 3),
-        n_merges=128,
-        min_count=2,
-        batch_size=64,
-        pair_mode="delta",
-    )
+    cap = bpemod._LOCAL_UNIT_CAP
+    bpemod._LOCAL_UNIT_CAP = 0
+    try:
+        merges = bpe_train(
+            bpe_ngram_unit_table(docs, 3),
+            n_merges=128,
+            min_count=2,
+            batch_size=64,
+        )
+    finally:
+        bpemod._LOCAL_UNIT_CAP = cap
     return spark.createDataFrame(
         [
             (m["rank"], m["left"], m["right"], m["merged"],

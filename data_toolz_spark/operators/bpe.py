@@ -33,10 +33,10 @@ vocab-sized aggregate with one driver row — K × O(|vocab|) total,
 never K × O(corpus).  Two r11/r12 refinements take K itself to real
 vocab scale: batched acceptance (``batch_size`` — up to B provably
 sequential-equal merges per aggregation round) and a delta-maintained
-pair-count table (``pair_mode="delta"`` — per round, candidates come
-from a persisted (l, r, cnt) table and only the words AFFECTED by the
-round's merges are recounted, so rounds in the Zipf tail touch a
-shrinking slice instead of re-exploding the whole vocabulary).
+pair-count table (per round, candidates come from the (l, r, cnt)
+table and only the words AFFECTED by the round's merges are
+recounted, so rounds in the Zipf tail touch a shrinking slice instead
+of re-exploding the whole vocabulary).
 """
 
 from __future__ import annotations
@@ -164,6 +164,25 @@ def _fold_replaces(
     )
 
 
+def _sym_best_index(cands: list) -> dict:
+    """Per-symbol top-2 pair counts over a candidate list:
+    ``{symbol: (best_cnt, best_pair, second_cnt)}``.  One O(n) pass;
+    gives :func:`_accept_batch` its rule-3 bound ("best old pair ≠ p
+    touching l or r") without an O(n²) scan."""
+    sym_best: dict = {}
+    for l, r, c in cands:
+        key = (l, r)
+        for s in ((l,) if l == r else (l, r)):
+            e = sym_best.get(s)
+            if e is None:
+                sym_best[s] = (c, key, -1)
+            elif c > e[0]:
+                sym_best[s] = (c, key, e[0])
+            elif c > e[2]:
+                sym_best[s] = (e[0], e[1], c)
+    return sym_best
+
+
 def _accept_batch(
     cands: list,
     trunc: int,
@@ -172,17 +191,18 @@ def _accept_batch(
 ) -> list[tuple[str, str, int]]:
     """The longest PREFIX of the sorted candidate list that is provably
     the same sequence sequential BPE would pick (r11, VERDICT task 1)
-    — computed from the collected top-C alone, so a batched round
-    costs exactly ONE Spark job, like a single sequential merge.
+    — computed from the candidate list alone, so a batched round costs
+    no Spark work beyond producing the list.
 
-    ``cands`` is the global top-C of the OLD pair counts in argmax
-    order (cnt DESC, l ASC, r ASC); ``trunc`` bounds every pair NOT
-    collected (the C-th count when the collect truncated, else
-    ``min_count − 1``); ``prior_merged`` is every merged symbol
-    produced so far (a superset of the multi-character symbols that
-    can exist — initial symbols are single characters).  Plain
-    conflict-freeness is NOT enough for equality — merging the top
-    pair changes the count landscape for everything touching its
+    ``cands`` is a prefix of the OLD pair counts ``(l, r, cnt)`` in
+    argmax order (cnt DESC, l ASC, r ASC) — the whole live table when
+    it is held on the driver, the collected top-C otherwise; ``trunc``
+    bounds every pair NOT in the list (the C-th count when the collect
+    truncated, else ``min_count − 1``); ``prior_merged`` is every
+    merged symbol produced so far (a superset of the multi-character
+    symbols that can exist — initial symbols are single characters).
+    Plain conflict-freeness is NOT enough for equality — merging the
+    top pair changes the count landscape for everything touching its
     symbols (e.g. words "ab"×170, "xa"×70, "cd"×60: sequential's 2nd
     merge is the surviving (x,a), while a conflict-skipping batch
     would take (c,d); pinned in tests).  The sound rule, by induction
@@ -202,11 +222,11 @@ def _accept_batch(
          occurrences comes from an old adjacency touching l_j or r_j
          — so its count is ≤ the best OLD pair ≠ p_j touching l_j or
          r_j.  That max is over-approximated by ``bound`` = the best
-         COLLECTED pair touching an accepted symbol, or ``trunc``
-         for anything uncollected (over-approximation only shrinks
-         the batch, never breaks equality).  Accept only while
-         cnt(p) > bound, strictly (a tie's lexicographic winner is
-         unknowable driver-side);
+         listed pair touching an accepted symbol
+         (:func:`_sym_best_index`), floored at ``trunc`` for anything
+         unlisted (over-approximation only shrinks the batch, never
+         breaks equality).  Accept only while cnt(p) > bound, strictly
+         (a tie's lexicographic winner is unknowable driver-side);
       4. **no boosts**: if an accepted pick's merged symbol may
          already exist (M_j ∈ prior_merged ∪ this batch — length ≥ 2
          rules out alphabet symbols), existing pairs (x, M_j) gain
@@ -218,108 +238,18 @@ def _accept_batch(
     are unaffected (disjoint) and keep their order, or touch an
     accepted symbol and only lose occurrences, and an accepted pick's
     own residual count is 0 (greedy left-to-right replace leaves no
-    ⟦l⟧⟦r⟧ adjacency).  Uncollected pairs sort after every collected
+    ⟦l⟧⟦r⟧ adjacency).  Unlisted pairs sort after every listed
     candidate in the same total order, and sub-``min_count`` pairs
     can spawn only sub-``min_count`` new pairs, which sequential
-    never picks.  Hence the accepted prefix == the next
-    ``len(batch)`` sequential merges exactly.
+    never picks — so a list holding only the live (≥ ``min_count``)
+    pairs is exact with ``trunc = min_count − 1``.  Hence the
+    accepted prefix == the next ``len(batch)`` sequential merges
+    exactly.
     """
+    sym_best = _sym_best_index(cands)
     batch: list[tuple[str, str, int]] = []
     used: set[str] = set()
-    bound = -1
-    for c in cands:
-        if len(batch) >= limit:
-            break
-        l, r, cnt = c["l"], c["r"], int(c["cnt"])
-        merged = l + r
-        if batch:
-            if l in used or r in used or merged in used:
-                break
-            if cnt <= bound:
-                break
-        batch.append((l, r, cnt))
-        if merged in prior_merged:
-            break  # rule 4: boosts around M_j are unbounded here
-        used.update((l, r, merged))
-        # rule 3 bound: uncollected pairs touching (l, r) are ≤ trunc;
-        # collected ones are scanned below (p itself excluded)
-        bound = max(bound, trunc)
-        for c2 in cands:
-            l2, r2, cnt2 = c2["l"], c2["r"], int(c2["cnt"])
-            if cnt2 <= bound:
-                break  # sorted: nothing later can raise the bound
-            if (l2, r2) != (l, r) and (
-                l in (l2, r2) or r in (l2, r2)
-            ):
-                bound = max(bound, cnt2)
-                break
-    return batch
-
-
-#: driver-held pair-table cap for ``pair_mode="delta"`` (rows).  The
-#: (l, r, cnt) table is vocab-ADJACENCY-sized — distinct adjacent
-#: symbol pairs, not corpus-sized — so up to this many rows it lives
-#: on the driver like every other bounded model (k·dim codebooks,
-#: count sketches): candidates then cost ZERO Spark work per round and
-#: the rule-3 acceptance bound is exact instead of truncation-padded.
-#: Above the cap the r12 distributed table takes over unchanged.
-_DRIVER_PAIR_CAP = 1_048_576
-
-#: auto-mode driver-LOCAL gate for the trainers (unit-table rows).
-#: Below this, ``pair_mode="auto"`` (and :func:`wordpiece_train`)
-#: delegate the whole merge loop to the exact driver-side trainers
-#: (:func:`bpe_train_local` / ``wordpiece_train_local``): the unit
-#: table is the bounded model state of subword training, and the
-#: collected loop costs zero Spark jobs per merge — the r12-measured
-#: gap is minutes-vs-seconds (a 210k-unit 32k-merge run is ~62 s
-#: local vs ~601 s distributed, SCALE_PROBE r12-bpe).  Above the cap
-#: the distributed loops run unchanged; explicit
-#: ``pair_mode="delta"``/``"recount"`` always keep them.
-_LOCAL_UNIT_CAP = 1_048_576
-
-
-def _sym_best_index(live: list) -> dict:
-    """Per-symbol top-2 pair counts over the live (≥ min_count) pair
-    list: ``{symbol: (best_cnt, best_pair, second_cnt)}``.  One O(n)
-    pass; gives :func:`_accept_batch_exact` the EXACT rule-3 bound
-    ("best old pair ≠ p touching l or r") without an O(n²) scan."""
-    sym_best: dict = {}
-    for l, r, c in live:
-        key = (l, r)
-        for s in ((l,) if l == r else (l, r)):
-            e = sym_best.get(s)
-            if e is None:
-                sym_best[s] = (c, key, -1)
-            elif c > e[0]:
-                sym_best[s] = (c, key, e[0])
-            elif c > e[2]:
-                sym_best[s] = (e[0], e[1], c)
-    return sym_best
-
-
-def _accept_batch_exact(
-    cands: list,
-    sym_best: dict,
-    prior_merged: set,
-    limit: int,
-) -> list[tuple[str, str, int]]:
-    """:func:`_accept_batch` with the rule-3 bound computed EXACTLY
-    from the full driver-held pair table instead of over-approximated
-    by the collect-truncation count — same four rules, same
-    sequential-equality proof, strictly larger accepted prefixes
-    (an over-approximated bound can only shrink the batch).
-
-    ``cands`` is the full live pair list in argmax order; ``sym_best``
-    is :func:`_sym_best_index` over the same list.  Soundness of the
-    live-only index: a new pair's occurrences each come from an old
-    adjacency touching the accepted pick's symbols, so a new pair
-    reaching ``min_count`` inherits from an old pair with at least
-    that count — which is live and indexed; sub-``min_count`` old
-    pairs can only spawn sub-``min_count`` new pairs, which sequential
-    never picks."""
-    batch: list[tuple[str, str, int]] = []
-    used: set[str] = set()
-    bound = -1
+    bound = trunc
     for l, r, cnt in cands:
         if len(batch) >= limit:
             break
@@ -333,14 +263,35 @@ def _accept_batch_exact(
         if merged in prior_merged:
             break  # rule 4: boosts around M_j are unbounded here
         used.update((l, r, merged))
+        # rule 3 bound: the best listed pair ≠ p touching l or r
         for s in (l, r):
-            e = sym_best.get(s)
-            if e is None:
-                continue
-            b = e[2] if e[1] == (l, r) else e[0]
-            if b > bound:
-                bound = b
+            best_cnt, best_pair, second_cnt = sym_best[s]
+            bound = max(
+                bound, second_cnt if best_pair == (l, r) else best_cnt
+            )
     return batch
+
+
+#: driver-held pair-table cap (rows).  The (l, r, cnt) table is
+#: vocab-ADJACENCY-sized — distinct adjacent symbol pairs, not
+#: corpus-sized — so up to this many rows it lives on the driver like
+#: every other bounded model (k·dim codebooks, count sketches):
+#: candidates then cost ZERO Spark work per round and the rule-3
+#: acceptance bound is exact instead of truncation-padded.  Above the
+#: cap the table is a persisted DataFrame.
+_DRIVER_PAIR_CAP = 1_048_576
+
+#: driver-LOCAL gate for the trainers (unit-table rows).  Below this,
+#: :func:`bpe_train` and :func:`wordpiece_train` delegate the whole
+#: merge loop to the exact driver-side trainers
+#: (:func:`bpe_train_local` / ``wordpiece_train_local``): the unit
+#: table is the bounded model state of subword training, and the
+#: collected loop costs zero Spark jobs per merge — the r12-measured
+#: gap is minutes-vs-seconds (a 210k-unit 32k-merge run is ~62 s
+#: local vs ~601 s distributed, SCALE_PROBE r12-bpe).  Above the cap
+#: the distributed loops run; tests and probes set it to 0 to force
+#: them.
+_LOCAL_UNIT_CAP = 1_048_576
 
 
 def _pairs_arr(state_col: Column, sep: str, weight: Column) -> Column:
@@ -362,25 +313,39 @@ def _pairs_arr(state_col: Column, sep: str, weight: Column) -> Column:
     )
 
 
-#: r13: use the merge-adjacent WINDOW recount (:func:`_window_delta_rows`)
-#: in the delta arms instead of the full signed re-explode of affected
-#: words.  Module-level so probes/tests can interleave both recount
-#: variants in one session (the r12-established A/B convention) and as
-#: a fallback knob; both variants aggregate to the identical delta
-#: (pinned by test_window_delta_rows_equal_full_signed_recount and the
-#: delta differentials).
-_WINDOW_RECOUNT = True
+def _sym_rows(state_col: Column, sep: str, weight: Column) -> Column:
+    """Symbol-occurrence rows of an encoded state, shaped as the SAME
+    struct as :func:`_pairs_arr` rows with ``r = NULL`` — so pair and
+    symbol deltas ride one exploded array (WordPiece's symbol table)."""
+    return F.transform(
+        _symbols(state_col, sep),
+        lambda s: F.struct(
+            s.alias("l"),
+            F.lit(None).cast("string").alias("r"),
+            weight.alias("w"),
+        ),
+    )
+
 
 #: minimum average ENCODED unit length (chars of the sep-wrapped state
-#: string) for the window recount to engage.  Measured crossover
-#: (interleaved A/B, sf0.1, tools/r13_wdelta_ab.py): word table
-#: (~25 wrapped chars) full recount wins 2.60 vs 3.33 s — the two
-#: regex scans cost more than the short explode they replace; trigram
-#: units (~60 chars) flat 24.2 vs 23.8 s; 8-gram units (~129 chars,
-#: 224k rows) window wins 27.1 vs 139.6 s (5.2×) — the long-unit
-#: regime a real subword corpus (and the 100 TB above-local-cap word
-#: vocab with long compounds/URLs) actually runs.  96 sits in the flat
-#: zone between the measured arms.
+#: string) for the merge-adjacent WINDOW recount
+#: (:func:`_window_delta_rows`) to replace the full signed re-explode
+#: of affected words.  Measured crossover (interleaved A/B, sf0.1,
+#: tools/r13_wdelta_ab.py): word table (~25 wrapped chars) full
+#: recount wins 2.60 vs 3.33 s — the two regex scans cost more than
+#: the short explode they replace; trigram units (~60 chars) flat
+#: 24.2 vs 23.8 s; 8-gram units (~129 chars, 224k rows) window wins
+#: 27.1 vs 139.6 s (5.2×) — the long-unit regime a real subword
+#: corpus (and the 100 TB above-local-cap word vocab with long
+#: compounds/URLs) actually runs.  96 sits in the flat zone between
+#: the measured arms.  Both trainers price the gate ONCE, on the
+#: initial state's average length (the same job that counts the
+#: rows), and hold the arm for the whole run — the wrapped length only
+#: shrinks as merges land, so a table that starts just above 96 may
+#: spend its late rounds where the full recount was measured faster,
+#: and one just below never switches to the window.  Both arms
+#: aggregate to the identical delta; tests and probes force one with
+#: 0.0 / ``math.inf``.
 _WINDOW_MIN_AVG_LEN = 96.0
 
 
@@ -539,19 +504,18 @@ def _delta_recount_src(
     sep: str,
     batch: Sequence[tuple[str, str, str]],
     *,
-    use_window: bool | None = None,
+    use_window: bool,
+    sym_rows: bool = False,
 ) -> DataFrame:
-    """The per-round signed pair recount over the AFFECTED words —
-    one column ``p = struct<l, r, w>`` whose groupBy-sum is the exact
+    """The per-round signed recount over the AFFECTED words — one
+    column ``p = struct<l, r, w>`` whose groupBy-sum is the exact
     pair-count delta of applying ``batch`` (``(l, r, merged)``
-    triples).  With ``use_window`` (callers gate it on
-    :data:`_WINDOW_RECOUNT` and the measured
+    triples).  With ``use_window`` (callers gate it on the measured
     :data:`_WINDOW_MIN_AVG_LEN` length crossover) only the
     merge-adjacent windows are emitted; otherwise every affected
-    word's pairs re-explode twice (old at −f, new at +f) like r12 —
-    both aggregate identically (differential-pinned)."""
-    if use_window is None:
-        use_window = _WINDOW_RECOUNT
+    word's pairs re-explode twice (old at −f, new at +f) — both
+    aggregate identically (differential-pinned).  ``sym_rows`` adds
+    the symbol-count delta as ``r = NULL`` rows (:func:`_sym_rows`)."""
     if use_window:
         alt = _window_alt_pattern(sep, batch)
         return affected.select(
@@ -568,20 +532,23 @@ def _delta_recount_src(
                     sep,
                     list(batch),
                     F.col("f"),
+                    sym_rows=sym_rows,
                 )
             ).alias("p")
         )
     pats = [sep + l + sep + sep + r + sep for l, r, _ in batch]
     reps = [sep + m + sep for _, _, m in batch]
     expr = _fold_replaces(F.col("s"), list(zip(pats, reps)))
-    return affected.select(
-        F.explode(
-            F.concat(
-                _pairs_arr(F.col("s"), sep, -F.col("f")),
-                _pairs_arr(expr, sep, F.col("f")),
-            )
-        ).alias("p")
-    )
+    rows = [
+        _pairs_arr(F.col("s"), sep, -F.col("f")),
+        _pairs_arr(expr, sep, F.col("f")),
+    ]
+    if sym_rows:
+        rows += [
+            _sym_rows(F.col("s"), sep, -F.col("f")),
+            _sym_rows(expr, sep, F.col("f")),
+        ]
+    return affected.select(F.explode(F.concat(*rows)).alias("p"))
 
 
 def bpe_train(
@@ -593,7 +560,6 @@ def bpe_train(
     freq_col: str = "freq",
     sep: str = BPE_SEP,
     batch_size: int = 1,
-    pair_mode: str = "auto",
     stats: dict | None = None,
 ) -> list[dict]:
     """Learn up to ``n_merges`` BPE merges from a word-frequency table.
@@ -605,70 +571,51 @@ def bpe_train(
     empty-selection guards and stay equivalent).  Pair counting
     follows Sennrich: every adjacent occurrence counts, weighted by
     word frequency, overlaps included (``aaa`` contributes (a,a)
-    twice).
+    twice).  ``n_merges <= 0`` returns ``[]`` without a Spark job.
+
+    Up to ``_LOCAL_UNIT_CAP`` unit rows (default separator only — the
+    local trainer never encodes) the merge loop runs driver-side in
+    :func:`bpe_train_local`, bit-identical and zero Spark jobs per
+    merge.  Above it, one distributed loop maintains a pair-count
+    table and applies per-round DELTAS.  A replace is token-local (the
+    same fact the acceptance proof uses), so only words whose state
+    CONTAINS an accepted pattern change any pair count; the round
+    recounts exactly those words (:func:`_delta_recount_src`) and folds
+    the signed sum into the table.  Candidates come from the TABLE —
+    vocab-adjacency-sized — never a full re-explode of the unit table.
+    Up to ``_DRIVER_PAIR_CAP`` distinct pairs the table is held on the
+    DRIVER: candidate selection is a Python sort costing zero Spark
+    work, the per-round job is the affected-words recount alone, and
+    the rule-3 acceptance bound is exact.  Above the cap the table is
+    a persisted DataFrame whose top-C candidates are collected each
+    round, with the truncation count as the bound for the rest.
 
     ``batch_size`` (r11): accept up to B merges per aggregation round
     — the vocab-scale wall-clock fix (a 32k-merge production vocab is
     otherwise 32k sequential Spark jobs of pure launch overhead).  The
     result is BIT-IDENTICAL to ``batch_size=1`` for every corpus and
-    every B: each round takes the top-C candidates (one TakeOrdered —
-    the SAME single job a sequential merge costs) and accepts only
-    the prefix that provably matches the sequential argmax sequence
-    (see :func:`_accept_batch`; pinned by a randomized differential
-    test).  Whatever the data allows per round is pure job-count
-    savings; tie-dense corpora degrade gracefully to ≈1 merge/round
-    at no extra cost.
+    every B: each round accepts only the candidate prefix that
+    provably matches the sequential argmax sequence (see
+    :func:`_accept_batch`; pinned by randomized differential tests).
+    Whatever the data allows per round is pure job-count savings;
+    tie-dense corpora degrade gracefully to ≈1 merge/round at no
+    extra cost.
 
-    ``pair_mode`` (r12, VERDICT r11 task 1) picks how per-round pair
-    counts are produced:
-
-    * ``"delta"`` — maintain a persisted ``(l, r, cnt)``
-      pair-count table and apply per-round DELTAS.  A replace is
-      token-local (the same fact the acceptance proof uses), so only
-      words whose state CONTAINS an accepted pattern change any pair
-      count; the round recounts exactly those words before and after
-      the replace (one exploded signed pass: old pairs at ``−f``, new
-      at ``+f``) and folds the sum into the table.  Candidates come
-      from the TABLE — vocab-adjacency-sized — instead of a full
-      corpus re-explode, so at a real vocab scale each of the ~K
-      rounds touches the affected slice (shrinking fast as merges
-      move down the Zipf tail), never the whole unit table's exploded
-      pairs.  Up to ``_DRIVER_PAIR_CAP`` distinct pairs the table is
-      held on the DRIVER (r12 optimization round): candidate
-      selection is then a Python sort costing zero Spark work, the
-      per-round job shrinks to the affected-words signed recount
-      alone, and the rule-3 acceptance bound is computed exactly from
-      the full table (:func:`_accept_batch_exact`) instead of
-      truncation-padded — strictly more merges per round, same
-      sequential-equal output.  Above the cap the table stays a
-      persisted DataFrame and rounds run exactly as in r12.
-    * ``"recount"`` — the r11 behavior: re-explode every word and
-      re-aggregate all pair counts each round.  Faster on SMALL unit
-      tables (the table-maintenance stages cost more than the full
-      re-explode saves); both modes produce the identical merge list
-      (pinned by tests).
-    * ``"auto"`` (default) — ``"delta"`` when the unit table has
-      ≥ 16,384 rows, else ``"recount"`` (measured crossover between
-      ~1k and ~27k units at sf0.1: 931 bigram units recount 18 s vs
-      delta 26 s; 27k trigram units recount 86 s vs delta 65 s for
-      the same 256 merges).
-
-    ``stats``, if given a dict, is filled with loop telemetry:
-    ``pair_mode`` (the resolved mode) always, plus, on the distributed
-    arms, ``rounds`` (aggregation rounds run), ``batch_sizes``
-    (accepted merges per round) and ``round_secs`` (wall per round,
-    driver-side) — probe/observability surface, zero extra Spark
-    jobs.  The r12 auto-local arm (``pair_mode == "local"``) reports
-    the driver trainer's shape instead (``merges``, ``train_secs``,
-    ``pair_table`` — there are no per-round Spark jobs to time).
+    ``stats``, if given a dict, is filled with ``pair_table``
+    (``"local"``, ``"driver"`` or ``"distributed"``) plus, on the
+    distributed loop, ``rounds`` (aggregation rounds run),
+    ``batch_sizes`` (accepted merges per round) and ``round_secs``
+    (wall per round, driver-side) — probe/observability surface, zero
+    extra Spark jobs.  The local arm reports the driver trainer's
+    shape instead (``merges``, ``train_secs`` — there are no
+    per-round Spark jobs to time).
     """
     if batch_size < 1:
         raise ValueError("bpe_train: batch_size must be >= 1")
-    if pair_mode not in ("auto", "delta", "recount"):
-        raise ValueError(
-            f"bpe_train: pair_mode must be 'auto', 'delta' or "
-            f"'recount', got {pair_mode!r}"
-        )
+    if min_count < 1:
+        raise ValueError("bpe_train: min_count must be >= 1")
+    if n_merges <= 0:
+        return []
     state = words.select(
         _encode_word(F.col(word_col), sep).alias("s"),
         F.col(freq_col).alias("f"),
@@ -694,28 +641,17 @@ def bpe_train(
         F.avg(F.length("s")).alias("alen"),
     ).collect()[0]
     n_rows = int(_pr["n"])
-    use_window = _WINDOW_RECOUNT and (
-        float(_pr["alen"] or 0.0) >= _WINDOW_MIN_AVG_LEN
-    )
-    if (
-        pair_mode == "auto"
-        and sep == BPE_SEP
-        and n_merges > 0
-        and min_count >= 1
-        and n_rows <= _LOCAL_UNIT_CAP
-    ):
+    use_window = float(_pr["alen"] or 0.0) >= _WINDOW_MIN_AVG_LEN
+    if sep == BPE_SEP and n_rows <= _LOCAL_UNIT_CAP:
         # r12 optimization round (guide §5.4 bounded driver work, the
         # same gate shape as the CC union-find fast path): below the
         # cap the unit table is bounded model state, and the merge
         # loop never needed the cluster — delegate to the driver-side
         # exact trainer (bit-parity pinned by the local differentials
-        # + the auto-arm parity tests), zero Spark jobs per merge.
-        # Explicit pair_mode="delta"/"recount" keeps the distributed
-        # loops (the 100 TB arms and their demonstration entries);
-        # n_merges > 0 preserves the no-raise return-[] contract for
-        # negative n_merges; a custom sep stays distributed (the local
-        # trainer never encodes, so sep-dependent callers keep the
-        # machinery they asked for).
+        # + the auto-arm parity tests), zero Spark jobs per merge.  A
+        # custom sep stays distributed (the local trainer never
+        # encodes, so sep-dependent callers keep the machinery they
+        # asked for).
         merges = bpe_train_local(
             words,
             n_merges=n_merges,
@@ -725,51 +661,37 @@ def bpe_train(
             stats=stats,
         )
         if stats is not None:
-            stats["pair_mode"] = "local"
+            stats["pair_table"] = "local"
         return merges
-    if pair_mode == "auto":
-        pair_mode = "delta" if n_rows >= 16384 else "recount"
     state, nparts = right_size_iterated_state(state, n_rows)
     state = state.localCheckpoint(eager=True)
+    # the ONE full explode+aggregate the loop ever runs — every later
+    # round folds signed corrections into this table.  Within
+    # _DRIVER_PAIR_CAP rows the table lives on the DRIVER (r12
+    # optimization round, guide §5.4 bounded driver state): per-round
+    # candidates are then a Python sort — zero Spark work — and the
+    # acceptance bound is exact (bigger batches); the per-round Spark
+    # job shrinks to the affected-words signed recount alone.
+    agg = (
+        state.select(
+            F.explode(_pairs_arr(F.col("s"), sep, F.col("f"))).alias("p")
+        )
+        .groupBy(F.col("p.l").alias("l"), F.col("p.r").alias("r"))
+        .agg(F.sum("p.w").alias("cnt"))
+    )
     pairs: DataFrame | None = None
     pair_cnt: dict | None = None
-    if pair_mode == "delta":
-        # the ONE full explode+aggregate the delta path ever runs —
-        # every later round folds signed corrections into this table.
-        # Within _DRIVER_PAIR_CAP rows the table lives on the DRIVER
-        # (r12 optimization round, guide §5.4 bounded driver state):
-        # per-round candidates are then a Python sort — zero Spark
-        # work — and the acceptance bound is exact (bigger batches);
-        # the per-round Spark job shrinks to the affected-words signed
-        # recount alone.  Above the cap, the distributed table below
-        # takes over unchanged.
-        agg = (
-            state.select(
-                F.explode(_pairs_arr(F.col("s"), sep, F.col("f"))).alias(
-                    "p"
-                )
-            )
-            .groupBy(
-                F.col("p.l").alias("l"), F.col("p.r").alias("r")
-            )
-            .agg(F.sum("p.w").alias("cnt"))
-        )
-        head = agg.limit(_DRIVER_PAIR_CAP + 1).collect()
-        if len(head) <= _DRIVER_PAIR_CAP:
-            pair_cnt = {
-                (rw["l"], rw["r"]): int(rw["cnt"]) for rw in head
-            }
-        else:
-            pairs = agg.coalesce(nparts).localCheckpoint(eager=False)
+    head = agg.limit(_DRIVER_PAIR_CAP + 1).collect()
+    if len(head) <= _DRIVER_PAIR_CAP:
+        pair_cnt = {(rw["l"], rw["r"]): int(rw["cnt"]) for rw in head}
+    else:
+        pairs = agg.coalesce(nparts).localCheckpoint(eager=False)
     merges: list[dict] = []
     if stats is not None:
         stats.update(
             {"rounds": 0, "batch_sizes": [], "round_secs": [],
-             "pair_mode": pair_mode,
              "pair_table": (
-                 None if pair_mode != "delta"
-                 else "driver" if pair_cnt is not None
-                 else "distributed"
+                 "driver" if pair_cnt is not None else "distributed"
              )}
         )
     rounds_since_trunc = 0
@@ -779,61 +701,42 @@ def bpe_train(
     prior_merged: set[str] = set()
     while len(merges) < n_merges:
         t_round = time.monotonic() if stats is not None else 0.0
-        # collect generously: a deeper top-C only lowers the
-        # truncation bound (more accepted picks per round) and a few
-        # thousand tiny rows per round is negligible driver traffic
-        n_cand = 1 if batch_size == 1 else max(8 * batch_size, 2048)
         if pair_cnt is not None:
             # driver-held table: full live list in argmax order, no
             # collect truncation — acceptance bound is exact
-            live = [
-                (l, r, c)
-                for (l, r), c in pair_cnt.items()
-                if c >= min_count
-            ]
-            if not live:
-                break
-            live.sort(key=lambda t: (-t[2], t[0], t[1]))
-            batch = _accept_batch_exact(
-                live,
-                _sym_best_index(live),
-                prior_merged,
-                min(batch_size, n_merges - len(merges)),
+            cands = sorted(
+                (
+                    (l, r, c)
+                    for (l, r), c in pair_cnt.items()
+                    if c >= min_count
+                ),
+                key=lambda t: (-t[2], t[0], t[1]),
             )
+            trunc = min_count - 1
         else:
-            if pair_mode == "delta":
-                cand_src = pairs
-            else:
-                cand_src = (
-                    state.select(
-                        F.explode(
-                            _pairs_arr(F.col("s"), sep, F.col("f"))
-                        ).alias("p")
-                    )
-                    .groupBy(
-                        F.col("p.l").alias("l"), F.col("p.r").alias("r")
-                    )
-                    .agg(F.sum("p.w").alias("cnt"))
-                )
-            cands = (
-                cand_src.filter(F.col("cnt") >= min_count)
+            # collect generously: a deeper top-C only lowers the
+            # truncation bound (more accepted picks per round) and a
+            # few thousand tiny rows per round is negligible driver
+            # traffic
+            n_cand = 1 if batch_size == 1 else max(8 * batch_size, 2048)
+            cands = [
+                (rw["l"], rw["r"], int(rw["cnt"]))
+                for rw in pairs.filter(F.col("cnt") >= min_count)
                 .orderBy(F.col("cnt").desc(), F.col("l"), F.col("r"))
                 .limit(n_cand)
                 .collect()
-            )
-            if not cands:
-                break
+            ]
             trunc = (
-                int(cands[-1]["cnt"])
-                if len(cands) == n_cand
-                else min_count - 1
+                cands[-1][2] if len(cands) == n_cand else min_count - 1
             )
-            batch = _accept_batch(
-                cands,
-                trunc,
-                prior_merged,
-                min(batch_size, n_merges - len(merges)),
-            )
+        if not cands:
+            break
+        batch = _accept_batch(
+            cands,
+            trunc,
+            prior_merged,
+            min(batch_size, n_merges - len(merges)),
+        )
         pats = []
         reps = []
         for l, r, cnt in batch:
@@ -851,7 +754,7 @@ def bpe_train(
             reps.append(sep + l + r + sep)
         expr = _fold_replaces(F.col("s"), list(zip(pats, reps)))
         if pair_cnt is not None and len(merges) >= n_merges:
-            # driver-arm final round: nothing reads the folded table
+            # driver-table final round: nothing reads the folded table
             # or the rewritten state — skip both (one Spark job saved)
             if stats is not None:
                 stats["rounds"] += 1
@@ -860,66 +763,43 @@ def bpe_train(
                     round(time.monotonic() - t_round, 4)
                 )
             break
+        # a batch replace only rewrites words containing one of the
+        # accepted patterns ON the pre-batch state (an accepted pick
+        # can neither create nor destroy another accepted pick's
+        # pattern: new adjacencies always involve its merged symbol,
+        # and the batch's {l, r, merged} sets are disjoint by rule 2)
+        # — so the signed recount of exactly those words is the EXACT
+        # pair-count delta of the round.  The pattern list rides as
+        # ONE array literal (an OR-chain of B contains re-paid its
+        # analysis cost every round).
+        aff_pred = F.exists(F.lit(pats), lambda p: F.col("s").contains(p))
+        delta = _delta_recount_src(
+            state.filter(aff_pred),
+            sep,
+            [(l, r, l + r) for l, r, _ in batch],
+            use_window=use_window,
+        ).select(
+            F.col("p.l").alias("l"),
+            F.col("p.r").alias("r"),
+            F.col("p.w").alias("cnt"),
+        )
         if pair_cnt is not None:
-            # driver-arm delta: ONE job — aggregate the signed recount
-            # of exactly the affected words and fold it into the dict.
-            # r13 (VERDICT r12 task 4): the recount emits only the
-            # merge-adjacent WINDOWS (see _window_delta_rows) instead
-            # of re-exploding every pair of every affected word twice —
-            # and no longer evaluates the replace chain at all (the
-            # rewrite happens once, in the state update below).
-            aff_pred = F.exists(
-                F.lit(pats), lambda p: F.col("s").contains(p)
-            )
-            folded = (
-                _delta_recount_src(
-                    state.filter(aff_pred),
-                    sep,
-                    [(l, r, l + r) for l, r, _ in batch],
-                    use_window=use_window,
-                )
-                .groupBy(
-                    F.col("p.l").alias("l"), F.col("p.r").alias("r")
-                )
-                .agg(F.sum("p.w").alias("cnt"))
+            # driver table: ONE job — aggregate the recount and fold
+            # it into the dict
+            for rw in (
+                delta.groupBy("l", "r").agg(F.sum("cnt").alias("cnt"))
                 .collect()
-            )
-            for rw in folded:
+            ):
                 k2 = (rw["l"], rw["r"])
                 c2 = pair_cnt.get(k2, 0) + int(rw["cnt"])
                 if c2 > 0:
                     pair_cnt[k2] = c2
                 elif k2 in pair_cnt:
                     del pair_cnt[k2]
-        elif pair_mode == "delta":
-            # a batch replace only rewrites words containing one of the
-            # accepted patterns ON the pre-batch state (an accepted
-            # pick can neither create nor destroy another accepted
-            # pick's pattern: new adjacencies always involve its merged
-            # symbol, and the batch's {l, r, merged} sets are disjoint
-            # by rule 2) — so the signed recount of exactly those words
-            # is the EXACT pair-count delta of the round.  The pattern
-            # list rides as ONE array literal (an OR-chain of B
-            # contains re-paid its analysis cost every round).
-            # r13 (VERDICT r12 task 4): the recount emits only the
-            # merge-adjacent WINDOWS (_window_delta_rows) instead of
-            # re-exploding every pair of every affected word twice.
-            aff_pred = F.exists(
-                F.lit(pats), lambda p: F.col("s").contains(p)
-            )
-            delta_rows = _delta_recount_src(
-                state.filter(aff_pred),
-                sep,
-                [(l, r, l + r) for l, r, _ in batch],
-                use_window=use_window,
-            ).select(
-                F.col("p.l").alias("l"),
-                F.col("p.r").alias("r"),
-                F.col("p.w").alias("cnt"),
-            )
+        else:
             prev_pairs = pairs
             pairs = (
-                pairs.unionByName(delta_rows)
+                pairs.unionByName(delta)
                 .groupBy("l", "r")
                 .agg(F.sum("cnt").alias("cnt"))
                 .filter(F.col("cnt") > 0)
@@ -928,13 +808,13 @@ def bpe_train(
             )
             prev_pairs.unpersist()
         prev = state
-        # lazy checkpoint: materializes inside the NEXT round's
-        # aggregate job instead of paying its own job.  In recount
-        # mode the round's collect runs directly over the state
-        # subtree, so the post-job doCheckpoint truncates its lineage
-        # every round.  In delta mode the collect's first marked
-        # ancestor is the PAIRS checkpoint and doCheckpoint recursion
-        # stops there — the state chain accumulates one
+        # lazy checkpoint: materializes inside the NEXT round's job
+        # instead of paying its own.  With the driver table the
+        # round's collect runs directly over the state subtree, so the
+        # post-job doCheckpoint truncates its lineage every round.
+        # With the DataFrame table the collect's first marked ancestor
+        # is the PAIRS checkpoint and doCheckpoint recursion stops
+        # there — the state chain accumulates one
         # marked-but-untruncated layer per round (persisted blocks,
         # growing serialized lineage: task DEserialization
         # StackOverflowed at ~400 rounds in r12), so every 16 rounds
@@ -943,9 +823,6 @@ def bpe_train(
         state = state.withColumn("s", expr).localCheckpoint(eager=False)
         prev.unpersist()
         if pairs is not None:
-            # distributed-table arm only: the driver arm's per-round
-            # collect runs directly over the state subtree, so its
-            # lineage truncates every round like recount mode
             rounds_since_trunc += 1
             if rounds_since_trunc >= 16:
                 state.count()
@@ -1401,8 +1278,8 @@ def bpe_train_local(
     operator in this package.
 
     BIT-PARITY: for the same unit table this returns the identical
-    merge list to ``bpe_train`` (any ``batch_size``/``pair_mode``) —
-    same overlap-inclusive adjacent counting, same (count DESC, l ASC,
+    merge list to ``bpe_train``'s distributed loop (any
+    ``batch_size``) — same overlap-inclusive adjacent counting, same (count DESC, l ASC,
     r ASC) selection (Python string comparison is code-point order =
     Spark's UTF8_BINARY), same left-to-right replace, same
     ``min_count`` stop — pinned by randomized differentials in

@@ -24,8 +24,8 @@ maintained table:
 * a persisted ``(l, r, cnt)`` pair table AND a ``(sym, cnt)`` symbol
   table (the score's denominator needs symbol totals) are built once
   and maintained by per-merge signed recounts of only the AFFECTED
-  words (``bpe_train(pair_mode="delta")``'s device: a literal replace
-  is token-local);
+  words (``bpe_train``'s delta device, ``bpe._delta_recount_src``: a
+  literal replace is token-local);
 * per merge: ONE argmax job over pairs broadcast-joined with the
   symbol counts — the single driver row is the merge.
 
@@ -62,9 +62,10 @@ from pyspark.sql import functions as F
 
 from data_toolz_spark.operators.bpe import (
     BPE_SEP,
+    _delta_recount_src,
     _fold_replaces,
     _pairs_arr,
-    _symbols,
+    _sym_rows,
 )
 
 #: continuation marker for non-word-initial pieces (the BERT/HF
@@ -87,20 +88,6 @@ def _encode_wp_word(col: Column, sep: str) -> Column:
     # strip the marker off the FIRST symbol: drop the leading
     # ``sep + ##`` (3 chars) and re-attach the separator
     return F.concat(F.lit(sep), F.substring(enc, 4, F.length(enc)))
-
-
-def _sym_rows(state_col: Column, sep: str, weight: Column) -> Column:
-    """Symbol-occurrence rows of an encoded state, shaped as the SAME
-    struct as :func:`bpe._pairs_arr` rows with ``r = NULL`` — so pair
-    and symbol deltas ride one exploded array."""
-    return F.transform(
-        _symbols(state_col, sep),
-        lambda s: F.struct(
-            s.alias("l"),
-            F.lit(None).cast("string").alias("r"),
-            weight.alias("w"),
-        ),
-    )
 
 
 def wordpiece_train(
@@ -161,9 +148,14 @@ def wordpiece_train(
         F.avg(F.length("s")).alias("alen"),
     ).collect()[0]
     n_rows = int(_pr["n"])
-    _avg_len = float(_pr["alen"] or 0.0)
-    from data_toolz_spark.operators.bpe import _LOCAL_UNIT_CAP
+    # caps and gate read at call time (tests and probes reassign them)
+    from data_toolz_spark.operators.bpe import (
+        _DRIVER_PAIR_CAP,
+        _LOCAL_UNIT_CAP,
+        _WINDOW_MIN_AVG_LEN,
+    )
 
+    use_window = float(_pr["alen"] or 0.0) >= _WINDOW_MIN_AVG_LEN
     if sep == BPE_SEP and n_merges > 0 and n_rows <= _LOCAL_UNIT_CAP:
         # r12 optimization round (guide §5.4, the bpe_train auto-gate
         # twin): below the cap the unit table is bounded model state —
@@ -193,8 +185,6 @@ def wordpiece_train(
     # division/multiplication of exactly-represented ints, identical
     # bit-for-bit in Python and the JVM), and the per-round Spark job
     # shrinks to the affected-words signed recount alone.
-    from data_toolz_spark.operators.bpe import _DRIVER_PAIR_CAP
-
     pair_cnt: dict | None = None
     sym_cnt: dict | None = None
     pairs_agg = (
@@ -354,51 +344,14 @@ def wordpiece_train(
         # pattern change any pair or symbol count — the signed
         # recount of exactly those words is the exact delta of both
         # tables, and the sym rows ride the same exploded array as
-        # the pair rows (r = NULL tags them).  r13 (VERDICT r12 task
-        # 4): the recount emits only the merge-adjacent WINDOWS
-        # (bpe._window_delta_rows with sym_rows=True) instead of
-        # re-exploding every pair and symbol of every affected word
-        # twice — and no longer evaluates the replace on the recount
-        # side at all.
-        import data_toolz_spark.operators.bpe as bpemod
-
-        if bpemod._WINDOW_RECOUNT and (
-            _avg_len >= bpemod._WINDOW_MIN_AVG_LEN
-        ):
-            alt = bpemod._window_alt_pattern(sep, [(l, r)])
-            src = (
-                state.filter(F.col("s").contains(pat))
-                .select(
-                    "f",
-                    F.regexp_extract_all(
-                        F.col("s"), F.lit(alt), F.lit(0)
-                    ).alias("__m"),
-                    F.split(F.col("s"), alt, -1).alias("__p"),
-                )
-                .select(
-                    F.explode(
-                        bpemod._window_delta_rows(
-                            F.col("__m"),
-                            F.col("__p"),
-                            sep,
-                            [(l, r, merged)],
-                            F.col("f"),
-                            sym_rows=True,
-                        )
-                    ).alias("p")
-                )
-            )
-        else:
-            src = state.filter(F.col("s").contains(pat)).select(
-                F.explode(
-                    F.concat(
-                        _pairs_arr(F.col("s"), sep, -F.col("f")),
-                        _pairs_arr(new_s, sep, F.col("f")),
-                        _sym_rows(F.col("s"), sep, -F.col("f")),
-                        _sym_rows(new_s, sep, F.col("f")),
-                    )
-                ).alias("p")
-            )
+        # the pair rows (r = NULL tags them)
+        src = _delta_recount_src(
+            state.filter(F.col("s").contains(pat)),
+            sep,
+            [(l, r, merged)],
+            use_window=use_window,
+            sym_rows=True,
+        )
         upd = src.groupBy(
             F.col("p.l").alias("l"), F.col("p.r").alias("r")
         ).agg(F.sum("p.w").alias("cnt"))

@@ -413,22 +413,28 @@ def test_bpe_model_save_load_roundtrip(spark):
 
 
 def _batch_train_on(spark, corpus, n_merges, batch_size, min_count=2):
+    import data_toolz_spark.operators.bpe as bpemod
     from data_toolz_spark.operators.bpe import bpe_train, bpe_word_table
 
     docs = spark.createDataFrame(
         [(i, t) for i, t in enumerate(corpus)], "doc_id long, text string"
     )
-    # pair_mode="recount" pins these differentials to the DISTRIBUTED
-    # batched-acceptance machinery (_accept_batch) — auto mode now
-    # delegates small tables to the driver-local trainer (r12), which
-    # has its own differentials below
-    return bpe_train(
-        bpe_word_table(docs),
-        n_merges=n_merges,
-        min_count=min_count,
-        batch_size=batch_size,
-        pair_mode="recount",
-    )
+    # both caps at 0 pin these differentials to the DISTRIBUTED loop
+    # with the DataFrame pair table — its top-C collect drives the
+    # truncation-floored acceptance bound of _accept_batch (small
+    # tables otherwise go to the driver-local trainer, which has its
+    # own differentials below)
+    caps = bpemod._LOCAL_UNIT_CAP, bpemod._DRIVER_PAIR_CAP
+    bpemod._LOCAL_UNIT_CAP = bpemod._DRIVER_PAIR_CAP = 0
+    try:
+        return bpe_train(
+            bpe_word_table(docs),
+            n_merges=n_merges,
+            min_count=min_count,
+            batch_size=batch_size,
+        )
+    finally:
+        bpemod._LOCAL_UNIT_CAP, bpemod._DRIVER_PAIR_CAP = caps
 
 
 def _as_tuples(merges):
@@ -492,29 +498,81 @@ def test_bpe_batched_randomized_differential(spark):
         assert _as_tuples(got) == want, f"seed={seed}"
 
 
+def test_accept_batch_top_c_prefix_property():
+    """Spark-free: over random pair tables, acceptance on any top-C
+    prefix with its truncation bound is a PREFIX of acceptance on the
+    full live list with ``min_count - 1`` — over-approximating the
+    rule-3 bound only shrinks the batch, never changes a pick."""
+    import random
+
+    from data_toolz_spark.operators.bpe import _accept_batch
+
+    rng = random.Random(2020)
+    for trial in range(3000):
+        alpha = [
+            "".join(rng.choice("abcd") for _ in range(rng.randint(1, 2)))
+            for _ in range(rng.randint(2, 8))
+        ]
+        min_count = rng.randint(1, 4)
+        table = {
+            (rng.choice(alpha), rng.choice(alpha)): rng.randint(1, 30)
+            for _ in range(rng.randint(1, 40))
+        }
+        live = sorted(
+            ((l, r, c) for (l, r), c in table.items() if c >= min_count),
+            key=lambda t: (-t[2], t[0], t[1]),
+        )
+        if not live:
+            continue
+        prior = {
+            s for s in alpha if len(s) > 1 and rng.random() < 0.5
+        }
+        limit = rng.randint(1, 12)
+        full = _accept_batch(live, min_count - 1, prior, limit)
+        assert full and full[0] == live[0]
+        for c in range(1, len(live) + 1):
+            top = live[:c]
+            trunc = top[-1][2] if c < len(live) else min_count - 1
+            got = _accept_batch(top, trunc, prior, limit)
+            assert got == full[: len(got)], (trial, c, got, full)
+            assert got[0] == live[0]
+
+
 # ---------------------------------------------------------------------------
-# delta-maintained pair table (r12, VERDICT r11 task 1): pair_mode
-# "delta" must be BIT-IDENTICAL to the full per-round recount
+# delta-maintained pair table (r12, VERDICT r11 task 1): the
+# distributed loop must be BIT-IDENTICAL to the Python reference
 # ---------------------------------------------------------------------------
 
 
-def test_bpe_pair_mode_validation(spark):
+def test_bpe_train_validation(spark):
+    """Arguments are checked at entry like the sibling trainers:
+    ``min_count < 1`` and ``batch_size < 1`` raise; ``n_merges <= 0``
+    returns ``[]`` without training."""
     from data_toolz_spark.operators.bpe import bpe_train, bpe_word_table
 
-    docs = spark.createDataFrame([("aa ab",)], "text string")
-    with pytest.raises(ValueError, match="pair_mode"):
-        bpe_train(bpe_word_table(docs), n_merges=2, pair_mode="bogus")
+    wt = bpe_word_table(
+        spark.createDataFrame([("aa ab aa",)], "text string")
+    )
+    with pytest.raises(ValueError, match="min_count"):
+        bpe_train(wt, n_merges=2, min_count=0)
+    with pytest.raises(ValueError, match="batch_size"):
+        bpe_train(wt, n_merges=2, batch_size=0)
+    assert bpe_train(wt, n_merges=0) == []
+    assert bpe_train(wt, n_merges=-1) == []
 
 
-def test_bpe_delta_vs_recount_differential(spark):
+def test_bpe_delta_vs_recount_differential(spark, monkeypatch):
     """Randomized corpora over tiny alphabets (dense reuse = maximum
-    delta churn) — the delta-maintained pair table yields the same
-    merge list as the full recount, across batch sizes and min_counts
+    delta churn) — the delta-maintained pair table yields the
+    reference merge list across batch sizes and min_counts
     (min_count=1 exercises sub-threshold pairs the table must keep:
     their counts can GROW when a merged symbol already exists)."""
     import random
 
+    import data_toolz_spark.operators.bpe as bpemod
     from data_toolz_spark.operators.bpe import bpe_train, bpe_word_table
+
+    monkeypatch.setattr(bpemod, "_LOCAL_UNIT_CAP", 0)
 
     for seed, alpha, b, mc in (
         (11, "ab", 1, 2),
@@ -531,19 +589,12 @@ def test_bpe_delta_vs_recount_differential(spark):
             [(t,) for t in corpus], "text string"
         )
         wt = bpe_word_table(docs)
-        got_d = bpe_train(
-            wt, n_merges=20, min_count=mc, batch_size=b, pair_mode="delta"
-        )
-        got_r = bpe_train(
-            wt, n_merges=20, min_count=mc, batch_size=b,
-            pair_mode="recount",
-        )
-        assert _as_tuples(got_d) == _as_tuples(got_r), (seed, b, mc)
+        got_d = bpe_train(wt, n_merges=20, min_count=mc, batch_size=b)
         wf = Counter(w for line in corpus for w in line.split())
         assert _as_tuples(got_d) == _ref_train(wf, 20, mc), (seed, b, mc)
 
 
-def test_bpe_delta_boost_case(spark):
+def test_bpe_delta_boost_case(spark, monkeypatch):
     """The count-INCREASE path: merging a+b while symbol 'ab' already
     exists boosts (x, ab) pairs — the delta table must fold positive
     corrections onto existing rows, not just decrements."""
@@ -552,19 +603,18 @@ def test_bpe_delta_boost_case(spark):
     ]
     wf = Counter(w for line in corpus for w in line.split())
     want = _ref_train(wf, 6, 2)
+    import data_toolz_spark.operators.bpe as bpemod
     from data_toolz_spark.operators.bpe import bpe_train, bpe_word_table
 
+    monkeypatch.setattr(bpemod, "_LOCAL_UNIT_CAP", 0)
     docs = spark.createDataFrame([(t,) for t in corpus], "text string")
     for b in (1, 4):
-        got = bpe_train(
-            bpe_word_table(docs), n_merges=6, batch_size=b,
-            pair_mode="delta",
-        )
+        got = bpe_train(bpe_word_table(docs), n_merges=6, batch_size=b)
         assert _as_tuples(got) == want, f"batch_size={b}"
 
 
 def test_bpe_delta_driver_vs_distributed_arms(spark, monkeypatch):
-    """r12 optimization round: ``pair_mode="delta"`` holds the pair
+    """r12 optimization round: the distributed loop holds the pair
     table on the driver under ``_DRIVER_PAIR_CAP`` (exact acceptance
     bounds, zero-Spark candidate selection) and falls back to the
     persisted DataFrame above it.  Both arms must produce the same
@@ -584,19 +634,14 @@ def test_bpe_delta_driver_vs_distributed_arms(spark, monkeypatch):
     docs = spark.createDataFrame([(t,) for t in corpus], "text string")
     wt = bpe_word_table(docs)
 
+    monkeypatch.setattr(bpemod, "_LOCAL_UNIT_CAP", 0)
     stats_drv: dict = {}
-    got_drv = bpe_train(
-        wt, n_merges=18, batch_size=8, pair_mode="delta",
-        stats=stats_drv,
-    )
+    got_drv = bpe_train(wt, n_merges=18, batch_size=8, stats=stats_drv)
     assert stats_drv["pair_table"] == "driver"
 
     monkeypatch.setattr(bpemod, "_DRIVER_PAIR_CAP", 0)
     stats_dst: dict = {}
-    got_dst = bpe_train(
-        wt, n_merges=18, batch_size=8, pair_mode="delta",
-        stats=stats_dst,
-    )
+    got_dst = bpe_train(wt, n_merges=18, batch_size=8, stats=stats_dst)
     assert stats_dst["pair_table"] == "distributed"
 
     assert _as_tuples(got_drv) == _as_tuples(got_dst)
@@ -654,19 +699,23 @@ def test_bpe_batched_wide_alphabet_batches_fat(spark):
 # ---------------------------------------------------------------------------
 
 
-def test_bpe_local_differential(spark):
+def test_bpe_local_differential(spark, monkeypatch):
     """bpe_train_local is bit-identical to the distributed trainer AND
     the pure-Python Sennrich reference on randomized dense-reuse
     corpora — min_count=1 includes the count-INCREASE regime (merged
     string colliding with an existing symbol)."""
     import random
 
+    import data_toolz_spark.operators.bpe as bpemod
     from data_toolz_spark.operators.bpe import (
         bpe_train,
         bpe_train_local,
         bpe_word_table,
     )
 
+    # pin the comparison to the DISTRIBUTED trainer (below the cap
+    # bpe_train delegates right back to bpe_train_local)
+    monkeypatch.setattr(bpemod, "_LOCAL_UNIT_CAP", 0)
     for seed, alpha, mc in ((5, "ab", 2), (17, "abc", 1), (23, "abcd", 2)):
         rng = random.Random(seed)
         words = [
@@ -679,11 +728,7 @@ def test_bpe_local_differential(spark):
         )
         wt = bpe_word_table(docs)
         got = bpe_train_local(wt, n_merges=24, min_count=mc)
-        # recount pins the comparison to the DISTRIBUTED trainer (auto
-        # would delegate right back to bpe_train_local since r12)
-        assert got == bpe_train(
-            wt, n_merges=24, min_count=mc, pair_mode="recount"
-        ), (seed, mc)
+        assert got == bpe_train(wt, n_merges=24, min_count=mc), (seed, mc)
         wf = Counter(w for line in corpus for w in line.split())
         assert _as_tuples(got) == _ref_train(wf, 24, mc), (seed, mc)
 
@@ -707,18 +752,20 @@ def test_bpe_local_boost_case(spark):
     assert _as_tuples(got) == _ref_train(wf, 6, 2)
 
 
-def test_bpe_local_truncation_and_stats(spark):
+def test_bpe_local_truncation_and_stats(spark, monkeypatch):
     """max_units keeps the top-N units by (freq DESC, word ASC) and
     reports the dropped tail; training on the truncated table equals
     the distributed trainer run on the explicit top-N sub-table."""
     from pyspark.sql import functions as F
 
+    import data_toolz_spark.operators.bpe as bpemod
     from data_toolz_spark.operators.bpe import (
         bpe_train,
         bpe_train_local,
         bpe_word_table,
     )
 
+    monkeypatch.setattr(bpemod, "_LOCAL_UNIT_CAP", 0)
     corpus = ["aa ab aa ab ac ba bb zz", "aa ab ba bb qq aa"]
     docs = spark.createDataFrame([(t,) for t in corpus], "text string")
     wt = bpe_word_table(docs)
@@ -727,9 +774,7 @@ def test_bpe_local_truncation_and_stats(spark):
         wt, n_merges=8, min_count=1, max_units=3, stats=st
     )
     top3 = wt.orderBy(F.col("freq").desc(), F.col("word")).limit(3)
-    assert got == bpe_train(
-        top3, n_merges=8, min_count=1, pair_mode="recount"
-    )
+    assert got == bpe_train(top3, n_merges=8, min_count=1)
     assert st["units_kept"] == 3
     assert st["units_total"] == wt.count()
     assert st["freq_total"] > st["freq_kept"]
@@ -737,11 +782,11 @@ def test_bpe_local_truncation_and_stats(spark):
 
 
 def test_bpe_auto_local_arm_parity(spark, monkeypatch):
-    """r12 optimization round: ``pair_mode="auto"`` delegates
-    under-cap unit tables to the driver-local exact trainer.  The
-    auto pick must (a) actually take the local arm, (b) equal the
-    forced-distributed auto pick bit for bit, and (c) keep the
-    distributed arm when the cap is exceeded."""
+    """r12 optimization round: ``bpe_train`` delegates under-cap unit
+    tables to the driver-local exact trainer.  It must (a) actually
+    take the local arm, (b) equal the forced-distributed loop bit for
+    bit, and (c) keep the distributed loop when the cap is
+    exceeded."""
     import random
 
     import data_toolz_spark.operators.bpe as bpemod
@@ -760,19 +805,16 @@ def test_bpe_auto_local_arm_parity(spark, monkeypatch):
     got_local = bpe_train(
         wt, n_merges=18, batch_size=8, stats=st_local
     )
-    assert st_local["pair_mode"] == "local"
+    assert st_local["pair_table"] == "local"
 
     monkeypatch.setattr(bpemod, "_LOCAL_UNIT_CAP", 0)
     st_dist: dict = {}
     got_dist = bpe_train(wt, n_merges=18, batch_size=8, stats=st_dist)
-    assert st_dist["pair_mode"] in ("recount", "delta")
+    assert st_dist["pair_table"] == "driver"
 
     assert _as_tuples(got_local) == _as_tuples(got_dist)
     wf = Counter(w for line in corpus for w in line.split())
     assert _as_tuples(got_local) == _ref_train(wf, 18, 2)
-    # negative n_merges keeps the distributed no-raise contract
-    monkeypatch.setattr(bpemod, "_LOCAL_UNIT_CAP", 1_048_576)
-    assert bpe_train(wt, n_merges=-1) == []
 
 
 def test_bpe_local_validation(spark):
@@ -943,10 +985,13 @@ def test_window_delta_rows_equal_full_signed_recount(spark):
 
 
 def test_bpe_window_recount_toggle_parity(spark, monkeypatch):
-    """r13: bpe_train's delta arms produce the identical merge list
-    with the windowed recount (default) and the r12 full signed
-    recount (_WINDOW_RECOUNT=False) -- the toggle is a measurement/
-    fallback knob, never a semantics switch."""
+    """r13: the distributed trainers produce the identical merge list
+    with the windowed recount and the r12 full signed recount -- the
+    _WINDOW_MIN_AVG_LEN gate picks a cost, never a semantics switch
+    (0.0 forces the window arm on these short demo words, inf the
+    full recount)."""
+    import math
+
     import data_toolz_spark.operators.bpe as bpemod
 
     rows = [
@@ -955,22 +1000,18 @@ def test_bpe_window_recount_toggle_parity(spark, monkeypatch):
     ]
     words = spark.createDataFrame(rows, "word string, freq long")
     monkeypatch.setattr(bpemod, "_LOCAL_UNIT_CAP", 0)
-    # zero the length crossover so the window arm engages on these
-    # short demo words (production gates it to long-unit tables)
-    monkeypatch.setattr(bpemod, "_WINDOW_MIN_AVG_LEN", 0.0)
     out = {}
-    for flag in (True, False):
-        monkeypatch.setattr(bpemod, "_WINDOW_RECOUNT", flag)
-        out[flag] = bpemod.bpe_train(
-            words, n_merges=12, min_count=2, batch_size=4,
-            pair_mode="delta",
+    for gate in (0.0, math.inf):
+        monkeypatch.setattr(bpemod, "_WINDOW_MIN_AVG_LEN", gate)
+        out[gate] = bpemod.bpe_train(
+            words, n_merges=12, min_count=2, batch_size=4
         )
-    assert out[True] == out[False]
+    assert out[0.0] == out[math.inf]
 
     from data_toolz_spark.operators.wordpiece import wordpiece_train
 
     wp = {}
-    for flag in (True, False):
-        monkeypatch.setattr(bpemod, "_WINDOW_RECOUNT", flag)
-        wp[flag] = wordpiece_train(words, n_merges=8, min_count=2)
-    assert wp[True] == wp[False]
+    for gate in (0.0, math.inf):
+        monkeypatch.setattr(bpemod, "_WINDOW_MIN_AVG_LEN", gate)
+        wp[gate] = wordpiece_train(words, n_merges=8, min_count=2)
+    assert wp[0.0] == wp[math.inf]

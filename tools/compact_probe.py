@@ -32,7 +32,7 @@ from data_toolz_spark.sources.maintenance import (
 )
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
 
 MARKER_BEGIN = "<!-- compact-probe:begin -->"
 MARKER_END = "<!-- compact-probe:end -->"

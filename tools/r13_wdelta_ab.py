@@ -1,31 +1,33 @@
-"""r13 A/B: merge-adjacent WINDOW recount vs the r12 full signed
-recount, interleaved in ONE warmed session under the bench conf
-(the r12-established convention — this host's steal storms make
-isolated sweeps inadmissible per-entry).
+"""A/B: merge-adjacent WINDOW recount vs the full signed recount of
+the distributed subword trainers, interleaved in ONE warmed session
+under the bench conf (isolated sweeps are inadmissible per-entry on a
+host with steal storms).
 
-Arms (toggled via bpe._WINDOW_RECOUNT, semantics-identical — pinned by
-test_bpe_window_recount_toggle_parity + the window differential):
+Arms (picked by bpe._WINDOW_MIN_AVG_LEN: 0.0 forces the window
+recount, inf the full recount; semantics-identical — pinned by
+test_bpe_window_recount_toggle_parity + the window differential).
+bpe._LOCAL_UNIT_CAP = 0 forces the distributed loop throughout:
 
-* W1  x_bpe_delta128 workload: 128 merges, batch 64, pair_mode=delta,
-      word-trigram unit table (~27k units) — the distributed-delta
-      demonstration entry.
-* W2  wordpiece_train distributed arm (unit cap forced to 0),
-      12 merges on the word table — the above-cap WP regime.
-* W3  48 merges, batch 64, delta on the word-8-GRAM unit table
-      (~225k units, avg 43 raw chars) — the LONG-unit regime the
-      window recount targets.
+* W1  x_bpe_delta128 workload: 128 merges, batch 64, word-trigram
+      unit table (~27k units) — the distributed-delta demonstration
+      entry.
+* W2  wordpiece_train distributed loop, 12 merges on the word table —
+      the above-cap WP regime.
+* W3  48 merges, batch 64, on the word-8-GRAM unit table (~225k
+      units, avg 43 raw chars) — the LONG-unit regime the window
+      recount targets.
 
-The length crossover gate is zeroed here so the _WINDOW_RECOUNT
-toggle alone selects the arm.  Measured r13 (quiet, min of
-interleaved repeats): W1 23.82 window vs 24.22 full (flat), W2 3.33
-vs 2.60 (full wins — short words), W3 27.11 vs 139.64 (window 5.2×)
-— hence the production gate at bpe._WINDOW_MIN_AVG_LEN.
+Measured r13 at local[32] (quiet, min of interleaved repeats): W1
+23.82 window vs 24.22 full (flat), W2 3.33 vs 2.60 (full wins — short
+words), W3 27.11 vs 139.64 (window 5.2×) — hence the production gate
+at bpe._WINDOW_MIN_AVG_LEN.
 
 Usage: python tools/r13_wdelta_ab.py [K]
 """
 
 from __future__ import annotations
 
+import math
 import os
 import sys
 import time
@@ -38,7 +40,7 @@ from data_toolz_spark.cache import clear_session_caches
 from data_toolz_spark.session import get_spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
 K = int(sys.argv[1]) if len(sys.argv) > 1 else 3
 
 
@@ -59,8 +61,8 @@ def main() -> None:
     from data_toolz_spark.operators.wordpiece import wordpiece_train
 
     docs = entrymod.load(spark, SF_DIR, "documents")
-    # zero the production length gate: the toggle alone picks the arm
-    bpemod._WINDOW_MIN_AVG_LEN = 0.0
+    bpemod._LOCAL_UNIT_CAP = 0
+    gates = {"window": 0.0, "full": math.inf}
 
     def w1():
         return bpe_train(
@@ -68,18 +70,12 @@ def main() -> None:
             n_merges=128,
             min_count=2,
             batch_size=64,
-            pair_mode="delta",
         )
 
     def w2():
-        old = bpemod._LOCAL_UNIT_CAP
-        bpemod._LOCAL_UNIT_CAP = 0
-        try:
-            return wordpiece_train(
-                bpe_word_table(docs), n_merges=12, min_count=2
-            )
-        finally:
-            bpemod._LOCAL_UNIT_CAP = old
+        return wordpiece_train(
+            bpe_word_table(docs), n_merges=12, min_count=2
+        )
 
     def w3():
         return bpe_train(
@@ -87,7 +83,6 @@ def main() -> None:
             n_merges=48,
             min_count=2,
             batch_size=64,
-            pair_mode="delta",
         )
 
     for name, fn in (
@@ -96,32 +91,30 @@ def main() -> None:
         ("W3 bpe_8gram48", w3),
     ):
         # warm both arms once, assert merge-list parity on real data
-        bpemod._WINDOW_RECOUNT = True
-        ref_new = fn()
-        clear_session_caches(spark)
-        bpemod._WINDOW_RECOUNT = False
-        ref_old = fn()
-        clear_session_caches(spark)
-        assert ref_new == ref_old, f"{name}: merge lists diverge!"
-        results = {True: [], False: []}
+        refs = {}
+        for arm, gate in gates.items():
+            bpemod._WINDOW_MIN_AVG_LEN = gate
+            refs[arm] = fn()
+            clear_session_caches(spark)
+        assert refs["window"] == refs["full"], f"{name}: merge lists diverge!"
+        results = {arm: [] for arm in gates}
         for _ in range(K):
-            for flag in (True, False):
-                bpemod._WINDOW_RECOUNT = flag
+            for arm, gate in gates.items():
+                bpemod._WINDOW_MIN_AVG_LEN = gate
                 l0 = os.getloadavg()[0]
                 t0 = time.perf_counter()
                 fn()
                 dt = time.perf_counter() - t0
-                results[flag].append(dt)
+                results[arm].append(dt)
                 clear_session_caches(spark)
                 print(
-                    f"  {name} window={flag}: {dt:6.2f} s "
+                    f"  {name} {arm}: {dt:6.2f} s "
                     f"(load {l0:.1f}->{os.getloadavg()[0]:.1f})",
                     flush=True,
                 )
-        bpemod._WINDOW_RECOUNT = True
         print(
-            f"{name}: window min {min(results[True]):.2f} s vs "
-            f"full-recount min {min(results[False]):.2f} s "
+            f"{name}: window min {min(results['window']):.2f} s vs "
+            f"full-recount min {min(results['full']):.2f} s "
             f"(parity OK, {K} interleaved repeats)",
             flush=True,
         )
