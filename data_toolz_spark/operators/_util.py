@@ -94,6 +94,21 @@ def right_size_iterated_state(
     return df, nparts
 
 
+def truncate_lineage(df: DataFrame) -> DataFrame:
+    """LAZY lineage truncation: a reliable ``checkpoint`` when the
+    session has a checkpoint dir (cluster fault tolerance),
+    ``localCheckpoint`` otherwise.
+
+    The next action over the result materializes it, so no extra job
+    is scheduled; downstream plans then reference a flat scan instead
+    of re-walking (and re-analyzing) the whole upstream tree — the
+    device iterative loops and many-consumer pipeline stages share.
+    """
+    if df.sparkSession.sparkContext.getCheckpointDir() is not None:
+        return df.checkpoint(eager=False)
+    return df.localCheckpoint(eager=False)
+
+
 def spread(df: DataFrame) -> DataFrame:
     """Repartition up to the cluster's default parallelism when the
     source has FAR fewer splits than the cluster has cores.
@@ -126,4 +141,9 @@ def spread(df: DataFrame) -> DataFrame:
     return df
 
 
-__all__ = ["spread", "skew_safe_top_n", "right_size_iterated_state"]
+__all__ = [
+    "spread",
+    "skew_safe_top_n",
+    "right_size_iterated_state",
+    "truncate_lineage",
+]

@@ -430,13 +430,19 @@ def _minhash_members_reps(
     return members, reps
 
 
+#: Normalized-edge count up to which ``connected_components`` runs
+#: driver-side union-find over one bounded collect (256k edges ≈ 4 MB
+#: of longs) instead of the distributed star loop; tests set it to 0
+#: to force the loop.
+_LOCAL_CC_CAP = 1 << 18
+
+
 def connected_components(
     pairs: DataFrame,
     *,
     id_a: str = "id_a",
     id_b: str = "id_b",
     max_iterations: int = 25,
-    local_cutoff: int = 1 << 18,
 ) -> DataFrame:
     """Connected components over an edge list — alternating large-star
     / small-star (Kiveris et al., "Connected Components in MapReduce
@@ -473,18 +479,16 @@ def connected_components(
       to small-star WITHOUT its own distinct (small-star's
       min-aggregate is duplicate-insensitive and its trailing distinct
       restores edge uniqueness before the signature).
-    * ``local_cutoff`` (r12 optimization round, guide §1.1
-      first-principles): when the NORMALIZED edge list is at most this
-      many rows (known from the same pre-pass aggregate the loop
-      needed anyway), the transitive closure runs as driver-side
-      union-find over one bounded collect instead of O(log d)
-      distributed rounds — a few hundred verified near-dup edges do
-      not need five 3-exchange jobs of pure scheduling overhead.  The
-      output is the identical (id, component-min) mapping (union-find
-      by min label is order-independent), and the default bound
-      (256k edges ≈ 4 MB of longs) is far below driver limits; a real
-      crawl's edge set exceeds it and takes the distributed loop
-      exactly as before.
+    * when the NORMALIZED edge list is at most ``_LOCAL_CC_CAP`` rows
+      (known from the same pre-pass aggregate the loop needed
+      anyway), the transitive closure runs as driver-side union-find
+      over one bounded collect instead of O(log d) distributed rounds
+      — a few hundred verified near-dup edges do not need five
+      3-exchange jobs of pure scheduling overhead.  The output is the
+      identical (id, component-min) mapping (union-find by min label
+      is order-independent), and the bound (256k edges ≈ 4 MB of
+      longs) is far below driver limits; a real crawl's edge set
+      exceeds it and takes the distributed loop.
     """
     spark = pairs.sparkSession
 
@@ -535,21 +539,16 @@ def connected_components(
 
     # Iterative plans MUST truncate lineage each round — persist alone
     # keeps the logical plan growing (stack overflow by ~10 rounds).
-    # Use a reliable checkpoint when the session has a checkpoint dir
-    # (cluster fault tolerance); localCheckpoint otherwise.  LAZY in
-    # both cases: the signature aggregate right after is the action
-    # that materializes the checkpoint, so each round schedules ONE
+    # The truncation is lazy: the signature aggregate right after is
+    # the action that materializes it, so each round schedules ONE
     # job, not a checkpoint job plus a signature job.
-    def materialize(e: DataFrame) -> DataFrame:
-        if spark.sparkContext.getCheckpointDir() is not None:
-            return e.checkpoint(eager=False)
-        return e.localCheckpoint(eager=False)
+    from data_toolz_spark.operators._util import truncate_lineage
 
     # One pass over the (possibly expensive) input: normalized pairs —
     # self-pairs retained so isolated nodes survive — checkpointed,
     # then the loop's edge set and the final node set both read the
     # checkpoint instead of the caller's lineage.
-    base = materialize(
+    base = truncate_lineage(
         pairs.select(
             F.col(id_a).cast("long").alias("a"),
             F.col(id_b).cast("long").alias("b"),
@@ -574,7 +573,7 @@ def connected_components(
         ).alias("h"),
     ).collect()[0]
     n_all = int(pre["n_all"] or 0)
-    if n_all <= local_cutoff:
+    if n_all <= _LOCAL_CC_CAP:
         parent: dict[int, int] = {}
 
         def find(x: int) -> int:
@@ -609,7 +608,7 @@ def connected_components(
     cur_sig = (int(pre["n_edges"] or 0), int(pre["h"]))
     converged = False
     for _ in range(max_iterations):
-        nxt = materialize(small_star(large_star(cur)))
+        nxt = truncate_lineage(small_star(large_star(cur)))
         nxt_sig = signature(nxt)
         if nxt_sig == cur_sig:
             cur = nxt
@@ -786,7 +785,6 @@ def exact_jaccard_pairs(
     threshold: float,
     shingle: int = 1,
     persist: bool = True,
-    length_filter: bool = False,
 ) -> DataFrame:
     """Exact-Jaccard pairs via an inverted-index (set-similarity) join.
 
@@ -803,20 +801,10 @@ def exact_jaccard_pairs(
 
     ``block_cols`` bound the index (same language, length bucket, …);
     ``shingle > 1`` compares n-word-shingle sets instead of token sets.
-
-    ``length_filter`` (default OFF) adds the PPJoin length bound as two
-    extra non-equi join conditions.  Measured history, all with
-    identical output: round 4's controlled A/B (alternating trials,
-    shared warm shingle cache) found ~10-20% net loss at 1× sf0.1;
-    a round-5 COLD alternating A/B at 20× (cache-cleared between arms)
-    found parity — off 7.9-9.6 s vs on 7.8-8.1 s.  At θ=0.05 almost no
-    pair is size-ratio-prunable, so the bound only pays when the
-    min/max size ratio bites: leave it off at low thresholds, turn it
-    on for high thresholds (≥ ~0.7).  (Two earlier contradictory
-    figures were both measurement artifacts: round 3's "5× slower ON"
-    came from CacheManager substituting a prior call's cached shingle
-    frames into one arm, and round 5's probe briefly showed "4× faster
-    ON" by comparing arms run under different heap pressure.)
+    The PPJoin length bound (prune pairs whose size ratio is below
+    ``threshold`` before the count aggregate) is not applied: on sf0.1
+    its gain at θ=0.05 and θ=0.8 stayed inside the run-to-run spread
+    (BASELINE.md).
     """
     if threshold <= 0:
         raise ValueError("threshold must be > 0 for the inverted-index join")
@@ -863,21 +851,6 @@ def exact_jaccard_pairs(
     cond = [F.col(f"a.{c}") == F.col(f"b.{c}") for c in block_cols]
     cond.append(F.col("a.__elem") == F.col("b.__elem"))
     cond.append(F.col("a.__fp") < F.col("b.__fp"))
-    # PPJoin length filter: J(A,B) ≥ t ⇒ |A∩B| ≤ min(|A|,|B|) and
-    # |A∪B| ≥ max(|A|,|B|), so J ≤ min/max — any pair whose sizes
-    # differ by more than the threshold ratio can't qualify and is
-    # pruned BEFORE the intersection-count aggregate.  On skewed
-    # shingle frequencies this cuts the inverted-index blow-up (hot
-    # elements join many docs of wildly different sizes).
-    if length_filter:
-        cond.append(
-            F.col("a.__n").cast("double")
-            >= F.lit(float(threshold)) * F.col("b.__n")
-        )
-        cond.append(
-            F.col("b.__n").cast("double")
-            >= F.lit(float(threshold)) * F.col("a.__n")
-        )
     pair_inter = (
         a.join(b, on=cond)
         .groupBy(

@@ -48,7 +48,6 @@ def pagerank(
     damping_num: int = 85,
     damping_den: int = 100,
     scale: int = 10**9,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Integer-exact PageRank over a directed edge list.
 
@@ -119,64 +118,37 @@ def pagerank(
                     f"(CAST({damping_den} AS BIGINT) * {n_nodes})"
                 ).alias("__c"),
             )
-            if checkpoint:
-                agg = (
-                    contrib_in.unionByName(dang_in)
-                    .groupBy("dst")
-                    .agg(F.sum("__c").alias("__in"))
-                )
-                # ONE job per round: the eager checkpoint materializes
-                # the combined aggregate; both consumers below (the
-                # per-node join and the 1-row share frame) read the
-                # checkpointed rows, and the next round's ranks plan
-                # stays flat without its own checkpoint.
-                agg = agg.localCheckpoint(eager=True)
-                share = agg.filter(F.col("dst").isNull()).agg(
-                    F.coalesce(F.sum("__in"), F.lit(0)).alias("__share")
-                )
-                ranks = (
-                    nodes.join(
-                        agg.filter(F.col("dst").isNotNull())
-                        .withColumnRenamed("dst", "node"),
-                        on="node",
-                        how="left",
-                    )
-                    .crossJoin(share)  # exactly one row — a broadcast
-                    .select(
-                        "node",
-                        (
-                            F.lit(teleport).cast("long")
-                            + F.col("__share")
-                            + F.coalesce(F.col("__in"), F.lit(0))
-                        ).alias("rank"),
-                    )
-                )
-            else:
-                # debug path (no lineage truncation): the folded
-                # aggregate would embed the previous ranks TWICE per
-                # round (union + share crossJoin) — 4^n_iter plan
-                # growth that stalls the analyzer.  Collect the
-                # dangling share per round instead: same arithmetic,
-                # and the unchecked plan stays linear (prev ranks
-                # embedded exactly once, in the contribution join).
-                d_share = (
-                    dang_in.agg(F.sum("__c").alias("s")).collect()[0]["s"]
-                    or 0
-                )
-                contrib = contrib_in.groupBy("dst").agg(
-                    F.sum("__c").alias("__in")
-                )
-                ranks = nodes.join(
-                    contrib.withColumnRenamed("dst", "node"),
+            agg = (
+                contrib_in.unionByName(dang_in)
+                .groupBy("dst")
+                .agg(F.sum("__c").alias("__in"))
+            )
+            # ONE job per round: the eager checkpoint materializes
+            # the combined aggregate; both consumers below (the
+            # per-node join and the 1-row share frame) read the
+            # checkpointed rows, and the next round's ranks plan
+            # stays flat without its own checkpoint.
+            agg = agg.localCheckpoint(eager=True)
+            share = agg.filter(F.col("dst").isNull()).agg(
+                F.coalesce(F.sum("__in"), F.lit(0)).alias("__share")
+            )
+            ranks = (
+                nodes.join(
+                    agg.filter(F.col("dst").isNotNull())
+                    .withColumnRenamed("dst", "node"),
                     on="node",
                     how="left",
-                ).select(
+                )
+                .crossJoin(share)  # exactly one row — a broadcast
+                .select(
                     "node",
                     (
-                        F.lit(teleport + int(d_share)).cast("long")
+                        F.lit(teleport).cast("long")
+                        + F.col("__share")
                         + F.coalesce(F.col("__in"), F.lit(0))
                     ).alias("rank"),
                 )
+            )
         return ranks
     finally:
         ed.unpersist()

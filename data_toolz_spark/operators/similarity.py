@@ -1234,7 +1234,6 @@ def cosine_near_duplicates(
     vec_col: str = "embedding",
     threshold: float = 0.9,
     block_cols: Sequence[str] = (),
-    use_arrow: bool = True,
 ) -> DataFrame:
     """Embedding near-dup pairs: cosine ≥ threshold, blocked self-join.
 
@@ -1242,15 +1241,17 @@ def cosine_near_duplicates(
     oracle-checkable; swap the block for ``lsh_bucket`` equality to get
     the approximate variant at cluster scale.
 
-    With ``use_arrow`` (default) each block is scored as ONE numpy
-    Gram matmul inside ``applyInPandas`` — O(k²·dim) flops but BLAS
-    flops, not interpreted-expression flops, and no k² joined rows ever
-    shuffle.  The contract is the usual blocked-verify one: a single
-    block must fit in one executor's memory (the same assumption the
-    pairwise join makes about its biggest skew bucket, made explicit).
-    ``use_arrow=False`` keeps the pure-JVM pairwise-join formulation.
+    The input picks the body.  With ``block_cols`` each block is
+    scored as ONE numpy Gram matmul inside ``applyInPandas`` —
+    O(k²·dim) flops but BLAS flops, not interpreted-expression flops,
+    and no k² joined rows ever shuffle.  The contract is the usual
+    blocked-verify one: a single block must fit in one executor's
+    memory (the same assumption a pairwise join makes about its
+    biggest skew bucket, made explicit).  Without ``block_cols`` the
+    whole frame is one block, so the pure-JVM pairwise self-join runs
+    instead of funnelling every vector into one Python worker.
     """
-    if use_arrow and block_cols:
+    if block_cols:
         out_ddl = "id_a long, id_b long, cosine double"
 
         def block_pairs(pdf: pd.DataFrame) -> pd.DataFrame:

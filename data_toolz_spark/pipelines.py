@@ -375,7 +375,6 @@ def prepare_training_corpus(
     pack_budget: int | None = None,
     token_pack: Mapping | None = None,
     seed: int = 42,
-    persist_cleaned: bool = True,
     materialize_to: str | None = None,
     input_token: str = "",
     materialize_retention: str = "prune",
@@ -729,11 +728,9 @@ def prepare_training_corpus(
         # sf0.1 the recompute is seconds and the A/B is within noise;
         # at 100 TB running the text stages twice is the single
         # largest avoidable CPU cost in the pipeline, so the persist
-        # (MEMORY_AND_DISK: spill, never evict-to-recompute) is on
-        # when ``persist_cleaned`` — tracked for release by the
-        # session cache hygiene.
-        if persist_cleaned:
-            out = track(out.persist(StorageLevel.MEMORY_AND_DISK))
+        # (MEMORY_AND_DISK: spill, never evict-to-recompute) always
+        # runs — tracked for release by the session cache hygiene.
+        out = track(out.persist(StorageLevel.MEMORY_AND_DISK))
 
         # r6: the component map is built over the FINGERPRINT graph
         # (minhash_components) — member pairs are never materialized,
@@ -796,26 +793,14 @@ def prepare_training_corpus(
             fingerprint_components,
         )
 
-        if persist_cleaned and cc is None:
+        from data_toolz_spark.operators._util import truncate_lineage
+
+        if cc is None:
             from pyspark import StorageLevel
 
             from data_toolz_spark.cache import track
 
             out = track(out.persist(StorageLevel.MEMORY_AND_DISK))
-
-        spark = out.sparkSession
-
-        def _trunc(df: DataFrame) -> DataFrame:
-            # LAZY lineage truncation after each tier: the next tier's
-            # fingerprint scan (or the caller's first action) is the
-            # materializing job, so no extra pass is scheduled — but
-            # the downstream plan references a flat scan instead of a
-            # tree that re-nests every anti-join under the chunk /
-            # decontamination self-joins (the analyzer's
-            # DeduplicateRelations pass blows up on that shape).
-            if spark.sparkContext.getCheckpointDir() is not None:
-                return df.checkpoint(eager=False)
-            return df.localCheckpoint(eager=False)
 
         for spec in media_dedup:
             fp = _media_fingerprints(out, spec, id_col)
@@ -831,7 +816,15 @@ def prepare_training_corpus(
             drops = comp.filter(
                 F.col("id") != F.col("component")
             ).select(F.col("id").alias(id_col))
-            out = _trunc(out.join(drops, on=id_col, how="left_anti"))
+            # truncate after each tier: the next tier's fingerprint
+            # scan (or the caller's first action) materializes it, and
+            # the downstream plan references a flat scan instead of a
+            # tree that re-nests every anti-join under the chunk /
+            # decontamination self-joins (the analyzer's
+            # DeduplicateRelations pass blows up on that shape)
+            out = truncate_lineage(
+                out.join(drops, on=id_col, how="left_anti")
+            )
         if mat is not None:
             out = mat.save("media_dedup", out)
 
@@ -891,17 +884,14 @@ def prepare_training_corpus(
         #    full upstream tree per occurrence (persist does not
         #    shrink the logical plan) — the lazy checkpoint truncates
         #    lineage, the same device as the media tiers.
-        if persist_cleaned:
-            from pyspark import StorageLevel
+        from pyspark import StorageLevel
 
-            from data_toolz_spark.cache import track
+        from data_toolz_spark.cache import track
+        from data_toolz_spark.operators._util import truncate_lineage
 
-            out = track(out.persist(StorageLevel.MEMORY_AND_DISK))
-        spark_ = out.sparkSession
-        if spark_.sparkContext.getCheckpointDir() is not None:
-            out = out.checkpoint(eager=False)
-        else:
-            out = out.localCheckpoint(eager=False)
+        out = truncate_lineage(
+            track(out.persist(StorageLevel.MEMORY_AND_DISK))
+        )
 
         spec = dict(ppl_strata)
         qs = [tuple(q) for q in spec.get("qs", ((1, 3), (2, 3)))]
@@ -1096,16 +1086,14 @@ def prepare_training_corpus(
         # the encode plan embeds the full upstream tree and each
         # split's pack re-reads it — same persist + lineage-truncation
         # device as the strata stage
-        if persist_cleaned:
-            from pyspark import StorageLevel
+        from pyspark import StorageLevel
 
-            from data_toolz_spark.cache import track
+        from data_toolz_spark.cache import track
+        from data_toolz_spark.operators._util import truncate_lineage
 
-            ids = track(ids.persist(StorageLevel.MEMORY_AND_DISK))
-        if out.sparkSession.sparkContext.getCheckpointDir() is not None:
-            ids = ids.checkpoint(eager=False)
-        else:
-            ids = ids.localCheckpoint(eager=False)
+        ids = truncate_lineage(
+            track(ids.persist(StorageLevel.MEMORY_AND_DISK))
+        )
         with_spans = bool(spec.get("with_spans", False))
         packed = None
         for s in sorted(fracs):

@@ -68,6 +68,8 @@ EXISTS = "exists"
 PREFIX = "prefix"
 MATCHER_KEYS = frozenset({ANYTHING_BUT, NUMERIC, EXISTS, PREFIX})
 
+# one table for both evaluators: the operators build a Column
+# predicate from a Column and act as plain comparisons on Python values
 NUMERIC_OPS = {
     "=": lambda c, v: c == v,
     ">": lambda c, v: c > v,
@@ -470,7 +472,7 @@ def _eval_criterium(value: Any, missing: bool, criterium: Any) -> bool:
                         f"'{NUMERIC}' operation must be one of "
                         f"{sorted(NUMERIC_OPS)}, got {op!r}"
                     )
-                ok = ok and bool(_py_compare(op, value, threshold))
+                ok = ok and bool(NUMERIC_OPS[op](value, threshold))
             return ok
         if key == EXISTS:
             return bool(criterium[key]) == (not missing)
@@ -483,14 +485,3 @@ def _eval_criterium(value: Any, missing: bool, criterium: Any) -> bool:
             )
     raise TypeError(f"unsupported filter criterium: {criterium!r}")
 
-
-def _py_compare(op: str, value: Any, threshold: Any) -> bool:
-    if op == "=":
-        return value == threshold
-    if op == ">":
-        return value > threshold
-    if op == ">=":
-        return value >= threshold
-    if op == "<":
-        return value < threshold
-    return value <= threshold

@@ -33,6 +33,7 @@ from typing import Mapping, Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from data_toolz_spark.fs import FsUtil
 from data_toolz_spark.sources.io import DataIO
 
 
@@ -47,16 +48,14 @@ def dataset_stats(spark: SparkSession, path: str) -> dict:
     """Driver-side file census of a dataset directory (recursive):
     ``{n_files, total_bytes, min_bytes, max_bytes, avg_bytes}``.
     Hidden/committer files (``_SUCCESS``, ``.crc`` …) are excluded.
-    O(#files) listing — the same cost any scan's file index pays."""
-    _, fs, root = _hadoop_fs(spark, path)
-    sizes: list[int] = []
-    it = fs.listFiles(root, True)
-    while it.hasNext():
-        status = it.next()
-        name = status.getPath().getName()
-        if name.startswith("_") or name.startswith("."):
-            continue
-        sizes.append(status.getLen())
+    O(#files) listing — the same cost any scan's file index pays —
+    through :meth:`FsUtil._files`, which walks the local filesystem
+    without forking a process per file."""
+    sizes = [
+        size
+        for name, size in FsUtil(spark)._files(path)
+        if not name.rsplit("/", 1)[-1].startswith(("_", "."))
+    ]
     if not sizes:
         return {
             "n_files": 0,

@@ -9,6 +9,7 @@ import datetime
 import pytest
 
 from data_toolz_spark.fs import FsUtil
+from data_toolz_spark.sources.maintenance import dataset_stats
 
 
 @pytest.fixture()
@@ -135,10 +136,11 @@ def test_glob_find_du_size_predicates(fs, tmp_path):
 
 
 def test_find_du_local_walk_matches_list_files(spark, fs, tmp_path):
-    """On the local filesystem find/du walk the tree with listStatus;
-    they must return exactly what Hadoop's recursive listFiles does on
-    a nested tree holding a Spark-written dataset (_SUCCESS markers
-    listed, .crc checksum files hidden) next to plain files."""
+    """On the local filesystem find/du (and dataset_stats) walk the
+    tree with listStatus; they must return exactly what Hadoop's
+    recursive listFiles does on a nested tree holding a Spark-written
+    dataset (_SUCCESS markers listed, .crc checksum files hidden) next
+    to plain files."""
     root = tmp_path / "tree"
     (root / "a" / "b").mkdir(parents=True)
     (root / "a" / "x.txt").write_bytes(b"12345")
@@ -169,6 +171,18 @@ def test_find_du_local_walk_matches_list_files(spark, fs, tmp_path):
     one = str(root / "a" / "x.txt")
     assert fs.find(one) == [one]
     assert fs.du(one, total=False) == {one: 5}
+    # dataset_stats walks the same way and drops _/. names from the
+    # listing (the _SUCCESS markers here)
+    kept = [
+        size
+        for f, size in listed.items()
+        if not f.rsplit("/", 1)[1].startswith(("_", "."))
+    ]
+    stats = dataset_stats(spark, str(root))
+    assert len(kept) < len(listed)
+    assert stats["n_files"] == len(kept)
+    assert stats["total_bytes"] == sum(kept)
+    assert (stats["min_bytes"], stats["max_bytes"]) == (min(kept), max(kept))
 
 
 def test_fs5_dynamic_delegation_gate(fs):

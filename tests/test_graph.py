@@ -50,8 +50,7 @@ def test_matches_python_reference(spark):
     edges = _rand_edges(5)
     df = spark.createDataFrame(edges, "src long, dst long")
     got = {
-        r["node"]: r["rank"]
-        for r in pagerank(df, n_iter=6, checkpoint=False).collect()
+        r["node"]: r["rank"] for r in pagerank(df, n_iter=6).collect()
     }
     assert got == _ref_pagerank(edges, n_iter=6)
 

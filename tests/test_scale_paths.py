@@ -8,6 +8,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from data_toolz_spark.operators import dedup as dedupmod
 from data_toolz_spark.operators.dedup import (
     connected_components,
     near_duplicate_drop_list,
@@ -53,9 +54,11 @@ def test_connected_components_deep_chain(spark):
     assert len(cc) == 31
 
 
-def test_connected_components_local_vs_distributed_parity(spark):
+def test_connected_components_local_vs_distributed_parity(
+    spark, monkeypatch
+):
     # r12: small edge lists take a driver-side union-find fast path;
-    # local_cutoff=0 forces the distributed star loop on the same
+    # _LOCAL_CC_CAP = 0 forces the distributed star loop on the same
     # input — both must yield the identical (id, component) map.
     # Covers chains (multi-round contraction), a separate component,
     # self-pairs (isolated nodes), and negative ids (fingerprint
@@ -73,7 +76,8 @@ def test_connected_components_local_vs_distributed_parity(spark):
     ]
     pairs = _pairs(spark, edges)
     local = _cc_map(connected_components(pairs))
-    dist = _cc_map(connected_components(pairs, local_cutoff=0))
+    monkeypatch.setattr(dedupmod, "_LOCAL_CC_CAP", 0)
+    dist = _cc_map(connected_components(pairs))
     assert local == dist
     assert local[777] == 777 and local[-99] == -99
 
@@ -195,16 +199,17 @@ def test_simhash64_vote_sanity(spark):
     assert got[2] == 0
 
 
-def test_connected_components_raises_on_iteration_exhaustion(spark):
+def test_connected_components_raises_on_iteration_exhaustion(
+    spark, monkeypatch
+):
     import pytest
 
     edges = [(i, i + 1) for i in range(30)]
-    # local_cutoff=0: the exhaustion guard lives in the distributed
+    # _LOCAL_CC_CAP = 0: the exhaustion guard lives in the distributed
     # star loop; the r12 local fast path always converges in one pass
+    monkeypatch.setattr(dedupmod, "_LOCAL_CC_CAP", 0)
     with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(
-            _pairs(spark, edges), max_iterations=1, local_cutoff=0
-        )
+        connected_components(_pairs(spark, edges), max_iterations=1)
 
 
 def test_cosine_lsh_equal_bruteforce(spark, embeddings):

@@ -66,7 +66,7 @@ def timed(fn) -> tuple[float, int]:
 
     Without the release, Spark's CacheManager silently substitutes a
     PREVIOUS operator's still-cached plan fragments (e.g. the shingle
-    sets both jaccard variants build) into later plans, so later rows
+    sets a jaccard call builds) into later plans, so later rows
     measure warm-cache hybrids — the confound behind round 3's
     contradictory PPJoin numbers.  Each measurement here is cold.
     """
@@ -113,7 +113,6 @@ def main() -> int:
     clear_session_caches(spark)
 
     rows = []
-    ppjoin_rows = []
     for mult in mults:
         d = replicate(docs, "doc_id", mult, 1_000_000)
         e = replicate(emb, "vec_id", mult, 1_000_000)
@@ -219,38 +218,15 @@ def main() -> int:
               f"ivf {t_ivf}s, lsh {t_cl}s/{n_cl}, lsh12 {t_cl12}s, "
               f"idx_build {t_build}s, incr_mine {t_inc}s/{n_inc}",
               flush=True)
-        # PPJoin length-filter A/B: measure BOTH arms back-to-back here
-        # — reusing t_ij from earlier in the loop would compare a run
-        # made under different heap/GC conditions (the r5 probe showed
-        # a phantom 4x "win" that a controlled alternating A/B
-        # (7.9-9.6 s off vs 7.8-8.1 s on at 20x) did not reproduce)
-        if mult == mults[-1]:
-            t_off, n_off = timed(
-                lambda: exact_jaccard_pairs(
-                    d, "doc_id", "text", block_cols=["lang"],
-                    threshold=0.05, shingle=3, length_filter=False,
-                )
-            )
-            t_lf, n_lf = timed(
-                lambda: exact_jaccard_pairs(
-                    d, "doc_id", "text", block_cols=["lang"],
-                    threshold=0.05, shingle=3, length_filter=True,
-                )
-            )
-            ppjoin_rows.append((mult, t_lf, t_off, n_lf, n_off))
-            print(
-                f"ppjoin at {mult}×: on {t_lf}s/{n_lf}, off {t_off}s/{n_off}",
-                flush=True,
-            )
         # write after every mult so an interrupted probe still records
-        _write_md(rows, ppjoin_rows)
+        _write_md(rows)
 
-    _write_md(rows, ppjoin_rows)
+    _write_md(rows)
     print("wrote SCALE_PROBE.md")
     return 0
 
 
-def _write_md(rows, ppjoin_rows) -> None:
+def _write_md(rows) -> None:
     lines = [
         "# SCALE PROBE — heavy operators at 1×/5×/20× sf0.1",
         "",
@@ -310,18 +286,6 @@ def _write_md(rows, ppjoin_rows) -> None:
             f"| {m}× | {ne:,} | {tann} | {tann12} | {tivf} "
             f"| {tcl} | {tcl12} | {ncl:,} |"
         )
-    if ppjoin_rows:
-        lines += [
-            "",
-            "PPJoin length-filter effect (same inverted-index join, "
-            "bound on vs off):",
-            "",
-            "| mult | with filter s | without s | pairs (equal) |",
-            "|---|---|---|---|",
-        ]
-        for m, t_on, t_off, n_on, n_off in ppjoin_rows:
-            eq = f"{n_on:,}" if n_on == n_off else f"{n_on:,}≠{n_off:,}"
-            lines.append(f"| {m}× | {t_on} | {t_off} | {eq} |")
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     with open(os.path.join(root, "SCALE_PROBE.md"), "w") as fh:
         fh.write("\n".join(lines) + "\n")
