@@ -22,6 +22,14 @@ ids, never shingle strings.  Design notes per operator:
 * ``exact_jaccard_pairs`` — inverted-index set-similarity join with
   identical-set collapse; the brute-force verify path and the oracle
   twin for the LSH pipeline.
+* ``simhash_band_pairs`` / ``simhash_components`` — the SimHash column
+  on the generic Hamming path (``fingerprint_band_pairs`` /
+  ``fingerprint_components``), which every fingerprint family shares.
+
+Every near-dup family runs the same three private steps:
+``_band_self_join`` (candidate pairs of a banded table),
+``_lift_components`` (fingerprint-graph closure → member components)
+and ``_expand_rep_pairs`` (representative pairs → member pairs).
 """
 
 from __future__ import annotations
@@ -230,15 +238,36 @@ def minhash_near_duplicates(
     verified_reps = _verified_rep_pairs(
         reps, threshold=threshold, n_hashes=n_hashes, bands=bands
     )
-    ids = members.select("__fp", "__id")
-    inter = (
-        verified_reps.join(
-            ids.select(F.col("__fp").alias("fp_a"), F.col("__id").alias("__ida")),
-            on="fp_a",
+    return _expand_rep_pairs(verified_reps, members, block_cols=())
+
+
+def _expand_rep_pairs(
+    rep_pairs: DataFrame, members: DataFrame, block_cols: Sequence[str]
+) -> DataFrame:
+    """Member pairs ``(id_a, id_b, jaccard)`` from verified
+    representative pairs ``(*block_cols, fp_a, fp_b, jaccard)``.
+
+    Each rep pair fans out to its members' id pairs; members of one
+    identical set (same ``block_cols`` and ``__fp`` in ``members``,
+    non-empty ``__elems``) pair up with jaccard 1.0.  Pure join
+    fan-out — no re-hashing, no re-verify."""
+    ids = members.select(*block_cols, "__fp", "__id")
+    inter_pairs = (
+        rep_pairs.join(
+            ids.select(
+                *block_cols,
+                F.col("__fp").alias("fp_a"),
+                F.col("__id").alias("__ida"),
+            ),
+            on=[*block_cols, "fp_a"],
         )
         .join(
-            ids.select(F.col("__fp").alias("fp_b"), F.col("__id").alias("__idb")),
-            on="fp_b",
+            ids.select(
+                *block_cols,
+                F.col("__fp").alias("fp_b"),
+                F.col("__id").alias("__idb"),
+            ),
+            on=[*block_cols, "fp_b"],
         )
         .select(
             F.least("__ida", "__idb").alias("id_a"),
@@ -246,23 +275,49 @@ def minhash_near_duplicates(
             "jaccard",
         )
     )
-    nonempty = members.filter(F.size("__elems") > 0).select("__fp", "__id")
-    intra = (
+    nonempty = members.filter(F.size("__elems") > 0).select(
+        *block_cols, "__fp", "__id"
+    )
+    intra_cond = [F.col(f"a.{c}") == F.col(f"b.{c}") for c in block_cols]
+    intra_cond.append(F.col("a.__fp") == F.col("b.__fp"))
+    intra_cond.append(F.col("a.__id") < F.col("b.__id"))
+    intra_pairs = (
         nonempty.alias("a")
-        .join(
-            nonempty.alias("b"),
-            on=[
-                F.col("a.__fp") == F.col("b.__fp"),
-                F.col("a.__id") < F.col("b.__id"),
-            ],
-        )
+        .join(nonempty.alias("b"), on=intra_cond)
         .select(
             F.col("a.__id").alias("id_a"),
             F.col("b.__id").alias("id_b"),
             F.lit(1.0).alias("jaccard"),
         )
     )
-    return inter.unionByName(intra)
+    return inter_pairs.unionByName(intra_pairs)
+
+
+def _band_self_join(
+    banded: DataFrame,
+    key: str,
+    band_cols: Sequence[str],
+    *,
+    pair: tuple[str, str],
+    carry: Sequence[Column] = (),
+) -> DataFrame:
+    """Candidate pairs of a banded table: rows that agree on every
+    ``band_cols`` column, with ``key`` ordered a < b, one row per key
+    pair (named ``pair``) however many bands it shares.  ``carry`` are
+    extra output columns over the ``a.``/``b.`` sides, e.g. a verify
+    input computed before the pair dedup."""
+    a, b = banded.alias("a"), banded.alias("b")
+    cond = [F.col(f"a.{c}") == F.col(f"b.{c}") for c in band_cols]
+    cond.append(F.col(f"a.{key}") < F.col(f"b.{key}"))
+    return (
+        a.join(b, on=cond)
+        .select(
+            F.col(f"a.{key}").alias(pair[0]),
+            F.col(f"b.{key}").alias(pair[1]),
+            *carry,
+        )
+        .dropDuplicates(list(pair))
+    )
 
 
 def _verified_rep_pairs(
@@ -282,21 +337,8 @@ def _verified_rep_pairs(
         "__fp",
         F.posexplode(bucketize(F.col("__elems"))).alias("__band", "__bucket"),
     )
-    left, right = banded.alias("a"), banded.alias("b")
-    candidates = (
-        left.join(
-            right,
-            on=[
-                F.col("a.__band") == F.col("b.__band"),
-                F.col("a.__bucket") == F.col("b.__bucket"),
-                F.col("a.__fp") < F.col("b.__fp"),
-            ],
-        )
-        .select(
-            F.col("a.__fp").alias("fp_a"),
-            F.col("b.__fp").alias("fp_b"),
-        )
-        .dropDuplicates(["fp_a", "fp_b"])
+    candidates = _band_self_join(
+        banded, "__fp", ["__band", "__bucket"], pair=("fp_a", "fp_b")
     )
     rep_sets = reps.select("__fp", "__elems")
     return (
@@ -367,11 +409,26 @@ def minhash_components(
     vr = _verified_rep_pairs(
         nonempty_reps, threshold=threshold, n_hashes=n_hashes, bands=bands
     )
+    mem = members.filter(F.size("__elems") > 0).select("__id", "__fp")
+    return _lift_components(vr, nonempty_reps, mem)
+
+
+def _lift_components(
+    fp_pairs: DataFrame, fps: DataFrame, members: DataFrame
+) -> DataFrame:
+    """Member component map ``(id, component)`` from the fingerprint
+    graph: ``fp_pairs`` ``(fp_a, fp_b)`` are its verified edges,
+    ``fps`` ``(__fp, __cnt)`` its nodes with their member counts,
+    ``members`` ``(__id, __fp)`` one row per document.
+
+    The transitive closure runs over fingerprints (a k-copy cluster is
+    ONE node); members join in once and take their component's
+    min-member id as label — O(corpus) rows, never O(pairs)."""
     # fp-level components; identical clusters (__cnt > 1) with no
     # cross-fp edge are their own component — their members form a
-    # jaccard-1.0 clique in the pair graph
-    fp_cc = connected_components(vr, id_a="fp_a", id_b="fp_b")
-    lone_multi = nonempty_reps.filter(F.col("__cnt") > 1).select(
+    # clique in the pair graph
+    fp_cc = connected_components(fp_pairs, id_a="fp_a", id_b="fp_b")
+    lone_multi = fps.filter(F.col("__cnt") > 1).select(
         F.col("__fp").alias("id"), F.col("__fp").alias("component")
     )
     fp_comp = (
@@ -379,9 +436,8 @@ def minhash_components(
         .groupBy("id")
         .agg(F.min("component").alias("__fpc"))
     )
-    mem = members.filter(F.size("__elems") > 0).select("__id", "__fp")
-    tagged = mem.join(
-        fp_comp, on=mem["__fp"] == fp_comp["id"]
+    tagged = members.join(
+        fp_comp, on=members["__fp"] == fp_comp["id"]
     ).select("__id", "__fpc")
     from pyspark.sql.window import Window
 
@@ -617,10 +673,10 @@ def connected_components(
         cur, cur_sig = nxt, nxt_sig
     if not converged:
         # A partial fixed point is a WRONG (id, component) mapping —
-        # near_duplicate_drop_list(exact=True) would silently corrupt
-        # the drop list.  Star contraction halves component diameter
-        # per round, so 25 rounds cover diameters up to ~2^25; hitting
-        # this means pathological data or too-low max_iterations.
+        # near_duplicate_drop_list would silently corrupt the drop
+        # list.  Star contraction halves component diameter per round,
+        # so 25 rounds cover diameters up to ~2^25; hitting this means
+        # pathological data or too-low max_iterations.
         raise RuntimeError(
             "connected_components did not converge within "
             f"{max_iterations} iterations; raise max_iterations "
@@ -646,22 +702,14 @@ def near_duplicate_drop_list(
     *,
     id_a: str = "id_a",
     id_b: str = "id_b",
-    exact: bool = True,
 ) -> DataFrame:
     """Keep-lowest-id dedup policy over near-dup pairs.
 
-    With ``exact=True`` (default) clusters are the TRUE transitive
-    closure via ``connected_components``; every non-minimum member of
-    a component is dropped — correct even when the pair relation only
-    covers clusters through chains (a~b, b~c but never a~c).
-
-    ``exact=False`` is the single-aggregate greedy variant (drop every
-    distinct ``id_b``): equivalent whenever pairs cover clusters
-    (identical-set clusters, high-threshold LSH output) and one shuffle
-    cheaper — the bulk-pipeline fast path.
+    Clusters are the TRUE transitive closure via
+    ``connected_components``; every non-minimum member of a component
+    is dropped — correct even when the pair relation only covers
+    clusters through chains (a~b, b~c but never a~c).
     """
-    if not exact:
-        return pairs.select(F.col(id_b).alias("drop_id")).distinct()
     cc = connected_components(pairs, id_a=id_a, id_b=id_b)
     return cc.filter(F.col("id") != F.col("component")).select(
         F.col("id").alias("drop_id")
@@ -760,7 +808,7 @@ def quality_aware_drop_list(
     cluster: transitive closure over ``pairs``
     (:func:`connected_components`), then
     :func:`component_representatives` — the quality-aware twin of
-    ``near_duplicate_drop_list(exact=True)``.  Output: ``drop_id``.
+    ``near_duplicate_drop_list``.  Output: ``drop_id``.
     """
     cc = connected_components(pairs, id_a=id_a, id_b=id_b)
     reps = component_representatives(
@@ -872,48 +920,7 @@ def exact_jaccard_pairs(
             6,
         ).alias("jaccard"),
     ).filter(F.col("jaccard") >= threshold)
-    # expand representative pairs back to member id pairs
-    ids = members.select(*block_cols, "__fp", "__id")
-    join_a = [*block_cols, "fp_a"]
-    inter_pairs = (
-        rep_pairs.join(
-            ids.select(
-                *block_cols,
-                F.col("__fp").alias("fp_a"),
-                F.col("__id").alias("__ida"),
-            ),
-            on=join_a,
-        )
-        .join(
-            ids.select(
-                *block_cols,
-                F.col("__fp").alias("fp_b"),
-                F.col("__id").alias("__idb"),
-            ),
-            on=[*block_cols, "fp_b"],
-        )
-        .select(
-            F.least("__ida", "__idb").alias("id_a"),
-            F.greatest("__ida", "__idb").alias("id_b"),
-            "jaccard",
-        )
-    )
-    nonempty = members.filter(F.size("__elems") > 0).select(
-        *block_cols, "__fp", "__id"
-    )
-    intra_cond = [F.col(f"a.{c}") == F.col(f"b.{c}") for c in block_cols]
-    intra_cond.append(F.col("a.__fp") == F.col("b.__fp"))
-    intra_cond.append(F.col("a.__id") < F.col("b.__id"))
-    intra_pairs = (
-        nonempty.alias("a")
-        .join(nonempty.alias("b"), on=intra_cond)
-        .select(
-            F.col("a.__id").alias("id_a"),
-            F.col("b.__id").alias("id_b"),
-            F.lit(1.0).alias("jaccard"),
-        )
-    )
-    return inter_pairs.unionByName(intra_pairs)
+    return _expand_rep_pairs(rep_pairs, members, block_cols)
 
 
 # ---------------------------------------------------------------------------
@@ -1076,46 +1083,18 @@ def simhash64(
     return kernel(F.transform(toks, token_hash))
 
 
-def _simhash_blocks(
-    text_col, max_hamming, n_blocks, bits, portable_hash, sh_name
-):
-    """Shared fingerprint + pigeonhole-block expressions for the pair
-    and component paths: ``(fingerprint_col, block_vals_array)`` where
-    block ``b`` covers bits [lo, lo+width), extracted via shiftright +
-    mask (bitwise AND, not %: modulo is sign-preserving and the top
-    block of a 64-bit fingerprint has the sign bit set)."""
-    n_blocks = n_blocks or (max_hamming + 1)
-    if n_blocks < max_hamming + 1:
-        raise ValueError(
-            "n_blocks must be >= max_hamming + 1 for exact recall"
-        )
-    if n_blocks > bits:
-        # width-0 blocks would all collide on value 0 — every doc pair
-        # becomes a candidate and the join silently degrades to O(n²)
-        raise ValueError(f"n_blocks must be <= bits ({bits})")
+def _simhash_frame(
+    df: DataFrame, id_col: str, text_col: str, bits: int, portable_hash: bool
+) -> DataFrame:
+    """``(__id, __sh)``: the ``bits``-wide SimHash column that the
+    generic Hamming band path runs on."""
     if bits == 32:
         fingerprint = simhash32(text_col)
     elif bits == 64:
         fingerprint = simhash64(text_col, portable_hash=portable_hash)
     else:
         raise ValueError("bits must be 32 or 64")
-    bounds = []
-    per = bits // n_blocks
-    extra = bits % n_blocks
-    lo = 0
-    for b in range(n_blocks):
-        width = per + (1 if b < extra else 0)
-        bounds.append((lo, width))
-        lo += width
-    block_vals = F.array(
-        *[
-            F.shiftrightunsigned(F.col(sh_name), lo).bitwiseAND(
-                F.lit((1 << width) - 1)
-            )
-            for lo, width in bounds
-        ]
-    )
-    return fingerprint, block_vals
+    return df.select(F.col(id_col).alias("__id"), fingerprint.alias("__sh"))
 
 
 def simhash_components(
@@ -1129,12 +1108,12 @@ def simhash_components(
     portable_hash: bool = True,
 ) -> DataFrame:
     """SimHash component map ``(id, component)`` without materializing
-    member pairs — the skew-safe drop-list path, SimHash twin of
-    :func:`minhash_components`.
+    member pairs — the skew-safe drop-list path.
 
     Both the candidate join AND the output of ``simhash_band_pairs``
     are k² for k identical documents (identical fingerprints collide
-    in every block); here band blocking runs over DISTINCT fingerprints
+    in every block); this is :func:`fingerprint_components` over the
+    SimHash column, so band blocking runs over DISTINCT fingerprints
     (one node each), the transitive closure runs on the fingerprint
     graph, and members join in once for their component's min-member
     label.  Output parity with ``connected_components(
@@ -1142,55 +1121,13 @@ def simhash_components(
     same treatment of equal-fingerprint clusters (hamming 0 pairs in
     the pair graph ⇒ one fp-node component here).
     """
-    fingerprint, block_vals = _simhash_blocks(
-        text_col, max_hamming, n_blocks, bits, portable_hash, "__sh"
-    )
-    base = df.select(
-        F.col(id_col).alias("__id"), fingerprint.alias("__sh")
-    )
-    fps = base.groupBy("__sh").agg(F.count(F.lit(1)).alias("__cnt"))
-    banded = fps.select(
-        "__sh", F.posexplode(block_vals).alias("__blk", "__val")
-    )
-    a, b = banded.alias("a"), banded.alias("b")
-    fp_pairs = (
-        a.join(
-            b,
-            on=[
-                F.col("a.__blk") == F.col("b.__blk"),
-                F.col("a.__val") == F.col("b.__val"),
-                F.col("a.__sh") < F.col("b.__sh"),
-            ],
-        )
-        .select(
-            F.col("a.__sh").alias("sh_a"),
-            F.col("b.__sh").alias("sh_b"),
-        )
-        .dropDuplicates(["sh_a", "sh_b"])
-        .withColumn(
-            "__ham",
-            F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b"))),
-        )
-        .filter(F.col("__ham") <= max_hamming)
-    )
-    fp_cc = connected_components(fp_pairs, id_a="sh_a", id_b="sh_b")
-    lone_multi = fps.filter(F.col("__cnt") > 1).select(
-        F.col("__sh").alias("id"), F.col("__sh").alias("component")
-    )
-    fp_comp = (
-        fp_cc.unionByName(lone_multi)
-        .groupBy("id")
-        .agg(F.min("component").alias("__fpc"))
-    )
-    tagged = base.join(
-        fp_comp, on=base["__sh"] == fp_comp["id"]
-    ).select("__id", "__fpc")
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("__fpc")
-    return tagged.select(
-        F.col("__id").alias("id"),
-        F.min("__id").over(w).alias("component"),
+    return fingerprint_components(
+        _simhash_frame(df, id_col, text_col, bits, portable_hash),
+        "__id",
+        "__sh",
+        max_hamming=max_hamming,
+        n_blocks=n_blocks,
+        bits=bits,
     )
 
 
@@ -1205,14 +1142,8 @@ def simhash_band_pairs(
     portable_hash: bool = True,
 ) -> DataFrame:
     """Pairs whose SimHash Hamming distance ≤ ``max_hamming`` — band
-    blocking, EXACT by pigeonhole.
-
-    Split the ``bits``-wide fingerprint into ``n_blocks =
-    max_hamming + 1`` contiguous bit blocks: two fingerprints differing
-    in ≤ max_hamming bits must agree on at least one whole block, so
-    the (block_idx, block_value) self-join finds every qualifying
-    pair — this is a lossless blocking scheme, not an approximation.
-    Verify is one ``bit_count(xor)`` per candidate.
+    blocking, EXACT by pigeonhole (:func:`fingerprint_band_pairs` over
+    the SimHash column).
 
     ``bits=32`` (default) keeps the cross-engine md5-derived
     fingerprint; ``bits=64`` is the SCALE setting — a 32-bit
@@ -1224,42 +1155,16 @@ def simhash_band_pairs(
     hash: True (default) = md5-derived (any ANSI-SQL engine reproduces
     the fingerprint), False = ``xxhash64`` (fastest; Spark-only).
 
-    Scale shape: the band table carries (id, block_idx, block_value)
-    longs only; candidate volume is Σ|bucket|² over blocks, bounded by
-    fingerprint entropy instead of |corpus|².  The metadata-blocked
-    O(block²) variant survives as the brute-force oracle twin
-    (``simhash_near_duplicates``).
+    The metadata-blocked O(block²) variant survives as the brute-force
+    oracle twin (``simhash_near_duplicates``).
     """
-    fingerprint, block_vals = _simhash_blocks(
-        text_col, max_hamming, n_blocks, bits, portable_hash, "__sh"
-    )
-    base = df.select(
-        F.col(id_col).alias("__id"), fingerprint.alias("__sh")
-    )
-    banded = base.select(
+    return fingerprint_band_pairs(
+        _simhash_frame(df, id_col, text_col, bits, portable_hash),
         "__id",
         "__sh",
-        F.posexplode(block_vals).alias("__blk", "__val"),
-    )
-    a, b = banded.alias("a"), banded.alias("b")
-    return (
-        a.join(
-            b,
-            on=[
-                F.col("a.__blk") == F.col("b.__blk"),
-                F.col("a.__val") == F.col("b.__val"),
-                F.col("a.__id") < F.col("b.__id"),
-            ],
-        )
-        .select(
-            F.col("a.__id").alias("id_a"),
-            F.col("b.__id").alias("id_b"),
-            F.bit_count(
-                F.col("a.__sh").bitwiseXOR(F.col("b.__sh"))
-            ).alias("hamming"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
-        .filter(F.col("hamming") <= max_hamming)
+        max_hamming=max_hamming,
+        n_blocks=n_blocks,
+        bits=bits,
     )
 
 
@@ -1304,13 +1209,15 @@ def _hamming_block_bounds(
     """(lo, width) per pigeonhole block over a ``bits``-wide
     fingerprint — two fingerprints within ``max_hamming`` must agree
     on at least one whole block when ``n_blocks >= max_hamming + 1``
-    (lossless blocking; same contract as ``_simhash_blocks``)."""
+    (lossless blocking)."""
     n_blocks = n_blocks or (max_hamming + 1)
     if n_blocks < max_hamming + 1:
         raise ValueError(
             "n_blocks must be >= max_hamming + 1 for exact recall"
         )
     if n_blocks > bits:
+        # width-0 blocks would all collide on value 0 — every doc pair
+        # becomes a candidate and the join silently degrades to O(n²)
         raise ValueError(f"n_blocks must be <= bits ({bits})")
     bounds = []
     per, extra, lo = bits // n_blocks, bits % n_blocks, 0
@@ -1352,19 +1259,18 @@ def fingerprint_band_pairs(
     n_blocks: int | None = None,
     bits: int = 64,
 ) -> DataFrame:
-    """Hamming-near pairs over an ARBITRARY precomputed integer
-    fingerprint column — the fingerprint-generic twin of
-    :func:`simhash_band_pairs` (which derives its fingerprint from
-    text).  Exact by pigeonhole: with ``n_blocks >= max_hamming + 1``
-    contiguous bit blocks, any pair within ``max_hamming`` agrees on
-    at least one whole block, so the (block_idx, block_value)
-    self-join finds every qualifying pair and one
-    ``bit_count(xor)`` verifies each candidate.  Serves every
-    Hamming-space fingerprint family — SimHash, perceptual image
-    hashes (aHash/dHash, ``operators/image_dedup.py``), audio
-    chromaprints — with the same scale shape: the band table carries
-    (id, block_idx, block_value) longs only and candidate volume is
-    Σ|bucket|² over blocks, never |corpus|².
+    """Hamming-near pairs ``(id_a, id_b, hamming)`` over an ARBITRARY
+    precomputed integer fingerprint column.  Exact by pigeonhole: with
+    ``n_blocks >= max_hamming + 1`` contiguous bit blocks, any pair
+    within ``max_hamming`` agrees on at least one whole block, so the
+    (block_idx, block_value) self-join finds every qualifying pair and
+    one ``bit_count(xor)`` verifies each candidate.  Serves every
+    Hamming-space fingerprint family — SimHash
+    (:func:`simhash_band_pairs`), perceptual image hashes (aHash/dHash,
+    ``operators/image_dedup.py``), audio chromaprints — with the same
+    scale shape: the band table carries (id, block_idx, block_value)
+    longs only and candidate volume is Σ|bucket|² over blocks, never
+    |corpus|².
     """
     base = df.select(
         F.col(id_col).alias("__id"), F.col(fp_col).alias("__fp")
@@ -1376,26 +1282,17 @@ def fingerprint_band_pairs(
             _hamming_block_vals("__fp", max_hamming, n_blocks, bits)
         ).alias("__blk", "__val"),
     )
-    a, b = banded.alias("a"), banded.alias("b")
-    return (
-        a.join(
-            b,
-            on=[
-                F.col("a.__blk") == F.col("b.__blk"),
-                F.col("a.__val") == F.col("b.__val"),
-                F.col("a.__id") < F.col("b.__id"),
-            ],
-        )
-        .select(
-            F.col("a.__id").alias("id_a"),
-            F.col("b.__id").alias("id_b"),
+    return _band_self_join(
+        banded,
+        "__id",
+        ["__blk", "__val"],
+        pair=("id_a", "id_b"),
+        carry=[
             F.bit_count(
                 F.col("a.__fp").bitwiseXOR(F.col("b.__fp"))
-            ).alias("hamming"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
-        .filter(F.col("hamming") <= max_hamming)
-    )
+            ).alias("hamming")
+        ],
+    ).filter(F.col("hamming") <= max_hamming)
 
 
 def fingerprint_components(
@@ -1409,7 +1306,7 @@ def fingerprint_components(
 ) -> DataFrame:
     """Component map ``(id, component)`` for an arbitrary fingerprint
     column without materializing member pairs — the skew-safe path
-    (fingerprint-generic twin of :func:`simhash_components`).  k
+    (:func:`simhash_components` runs it on the SimHash column).  k
     identical fingerprints produce k² pairs in the pair path; here
     banding and the transitive closure run over DISTINCT fingerprints
     (one node each, so a 20k-copy mega-cluster is ONE node), and
@@ -1425,46 +1322,17 @@ def fingerprint_components(
             _hamming_block_vals("__fp", max_hamming, n_blocks, bits)
         ).alias("__blk", "__val"),
     )
-    a, b = banded.alias("a"), banded.alias("b")
     fp_pairs = (
-        a.join(
-            b,
-            on=[
-                F.col("a.__blk") == F.col("b.__blk"),
-                F.col("a.__val") == F.col("b.__val"),
-                F.col("a.__fp") < F.col("b.__fp"),
-            ],
+        _band_self_join(
+            banded, "__fp", ["__blk", "__val"], pair=("fp_a", "fp_b")
         )
-        .select(
-            F.col("a.__fp").alias("fp_a"),
-            F.col("b.__fp").alias("fp_b"),
-        )
-        .dropDuplicates(["fp_a", "fp_b"])
         .withColumn(
             "__ham",
             F.bit_count(F.col("fp_a").bitwiseXOR(F.col("fp_b"))),
         )
         .filter(F.col("__ham") <= max_hamming)
     )
-    fp_cc = connected_components(fp_pairs, id_a="fp_a", id_b="fp_b")
-    lone_multi = fps.filter(F.col("__cnt") > 1).select(
-        F.col("__fp").alias("id"), F.col("__fp").alias("component")
-    )
-    fp_comp = (
-        fp_cc.unionByName(lone_multi)
-        .groupBy("id")
-        .agg(F.min("component").alias("__fpc"))
-    )
-    tagged = base.join(
-        fp_comp, on=base["__fp"] == fp_comp["id"]
-    ).select("__id", "__fpc")
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("__fpc")
-    return tagged.select(
-        F.col("__id").alias("id"),
-        F.min("__id").over(w).alias("component"),
-    )
+    return _lift_components(fp_pairs, fps, base)
 
 
 __all__ = [

@@ -25,8 +25,7 @@ split the 64-bit hash into ``max_hamming + 1`` (or more) contiguous
 blocks, self-join on (block_idx, block_value), verify with one
 ``bit_count(xor)`` — exact recall, candidate volume Σ|bucket|², and
 the components path collapses k identical images to ONE fingerprint
-node (mega-cluster skew safety, same argument as
-``simhash_components``).
+node (mega-cluster skew safety).
 
 Scale shape: hashing is one Arrow ``mapInPandas`` pass over the blob
 column (decode + two 64-bit hashes per image, all numpy); everything
@@ -292,9 +291,9 @@ def phash_components(
     """``(id, component)`` map over the perceptual-hash graph without
     materializing member pairs — the mega-cluster-safe drop-list path
     (delegates to :func:`dedup.fingerprint_components`; k identical
-    images collapse to one fingerprint node).  Same output contract
-    as ``simhash_components``: ids in some multi-member component only
-    (singletons appear in neither the pair graph nor the map)."""
+    images collapse to one fingerprint node).  Output: ids in some
+    multi-member component only (singletons appear in neither the pair
+    graph nor the map)."""
     return fingerprint_components(
         hashes.filter(F.col(hash_col).isNotNull()),
         id_col,

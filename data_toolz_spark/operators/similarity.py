@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from data_toolz_spark.functions.vectors import dot_product, unit_vector
+from data_toolz_spark.operators.dedup import _band_self_join
 
 
 def cosine_topk(
@@ -1347,21 +1348,8 @@ def cosine_near_duplicates_lsh(
             bucketize(F.col(vec_col).cast("array<double>"))
         ).alias("__table", "__bucket"),
     )
-    a, b = banded.alias("a"), banded.alias("b")
-    candidates = (
-        a.join(
-            b,
-            on=[
-                F.col("a.__table") == F.col("b.__table"),
-                F.col("a.__bucket") == F.col("b.__bucket"),
-                F.col("a.__id") < F.col("b.__id"),
-            ],
-        )
-        .select(
-            F.col("a.__id").alias("id_a"),
-            F.col("b.__id").alias("id_b"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
+    candidates = _band_self_join(
+        banded, "__id", ["__table", "__bucket"], pair=("id_a", "id_b")
     )
     units = base.select(
         F.col(id_col).alias("__uid"),

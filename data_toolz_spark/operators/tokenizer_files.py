@@ -42,15 +42,15 @@ import json
 
 from pyspark.sql import SparkSession
 
-from data_toolz_spark.sources.maintenance import _hadoop_fs
+from data_toolz_spark.fs import FsUtil
 
 #: GPT-2/HF merges.txt header line
 MERGES_VERSION = "#version: 0.2"
 
 
 def _write_text(spark: SparkSession, path: str, text: str) -> None:
-    _, fs, p = _hadoop_fs(spark, path)
-    stream = fs.create(p, True)
+    fsu = FsUtil(spark)
+    stream = fsu._fs(path).create(fsu._jpath(path), True)
     try:
         stream.write(text.encode("utf-8"))
     finally:

@@ -46,6 +46,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructType
 from pyspark.sql.window import Window
 
+from data_toolz_spark.fs import FsUtil
 from data_toolz_spark.plans.filtering import compile_filter
 
 FILETYPES = ("parquet", "dsv", "jsonlines", "orc")
@@ -499,9 +500,8 @@ class DataIO:
         cost class as ``_apply_partition_transformer``.  The chunk id is
         woven into each hoisted name, so hoisting cannot collide."""
         jvm = spark._jvm
-        hadoop_conf = spark.sparkContext._jsc.hadoopConfiguration()
-        root = jvm.org.apache.hadoop.fs.Path(path)
-        fs = root.getFileSystem(hadoop_conf)
+        fsu = FsUtil(spark)
+        fs, root = fsu._fs(path), fsu._jpath(path)
         seen: set[int] = set()
 
         def _walk(p) -> None:
@@ -611,12 +611,8 @@ class DataIO:
         ``f=v`` directory chain afterwards via the Hadoop FileSystem —
         driver-side, O(#partition dirs).
         """
-        spark = df.sparkSession
-        jvm = spark._jvm
-        jsc = spark.sparkContext._jsc
-        hadoop_conf = jsc.hadoopConfiguration()
-        root = jvm.org.apache.hadoop.fs.Path(path)
-        fs = root.getFileSystem(hadoop_conf)
+        fsu = FsUtil(df.sparkSession)
+        fs, root = fsu._fs(path), fsu._jpath(path)
 
         leaf_dirs: list[tuple[str, list[str]]] = []
 
@@ -633,8 +629,8 @@ class DataIO:
         _walk(root, [])
         for leaf, values in leaf_dirs:
             new_rel = self.partition_transformer(path, list(partition_by), values)
-            src = jvm.org.apache.hadoop.fs.Path(leaf)
-            dst = jvm.org.apache.hadoop.fs.Path(new_rel)
+            src = fsu._jpath(leaf)
+            dst = fsu._jpath(new_rel)
             fs.mkdirs(dst.getParent())
             fs.rename(src, dst)
 

@@ -37,13 +37,6 @@ from data_toolz_spark.fs import FsUtil
 from data_toolz_spark.sources.io import DataIO
 
 
-def _hadoop_fs(spark: SparkSession, path: str):
-    jvm = spark._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    return jvm, p.getFileSystem(conf), p
-
-
 def dataset_stats(spark: SparkSession, path: str) -> dict:
     """Driver-side file census of a dataset directory (recursive):
     ``{n_files, total_bytes, min_bytes, max_bytes, avg_bytes}``.
@@ -163,18 +156,15 @@ def compact_dataset(
         )
 
     if dest is None:
-        jvm, fs, root = _hadoop_fs(spark, path)
+        fsu = FsUtil(spark)
+        fs, root = fsu._fs(path), fsu._jpath(path)
         swap_id = uuid.uuid4().hex[:8]
-        tmp_old = jvm.org.apache.hadoop.fs.Path(
-            f"{path.rstrip('/')}__old_{swap_id}"
-        )
-        new_p = jvm.org.apache.hadoop.fs.Path(out_path)
+        tmp_old = fsu._jpath(f"{path.rstrip('/')}__old_{swap_id}")
+        new_p = fsu._jpath(out_path)
         # recovery marker BEFORE the first rename: a crash between the
         # two renames leaves no dataset at `path`, and this file is
         # what tells an operator (or a sweep job) how to undo the swap
-        marker = jvm.org.apache.hadoop.fs.Path(
-            f"{path.rstrip('/')}__swap_{swap_id}.marker"
-        )
+        marker = fsu._jpath(f"{path.rstrip('/')}__swap_{swap_id}.marker")
         manifest = json.dumps(
             {
                 "original": path,
@@ -485,8 +475,8 @@ def assert_append_compatible(
     append simply lacks some columns; readers get NULLs) while still
     failing hard on type changes — the unrecoverable class.
     """
-    _, fs, root = _hadoop_fs(spark, path)
-    if not fs.exists(root):
+    fsu = FsUtil(spark)
+    if not fsu._fs(path).exists(fsu._jpath(path)):
         return
     try:
         existing = DataIO().read(spark, path, filetype).schema

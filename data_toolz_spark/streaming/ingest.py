@@ -449,9 +449,10 @@ def run_vector_ingest(
             # component representative: a greedy "drop every id_b"
             # over-drops on transitive chains (A~B, B~C, A≁C drops
             # both B and C, leaving C with no surviving
-            # representative).  exact=True runs connected components
-            # over the batch-sized pair graph — a handful of tiny
-            # driver-looped jobs per micro-batch, bounded by the batch.
+            # representative).  near_duplicate_drop_list runs connected
+            # components over the batch-sized pair graph — a handful of
+            # tiny driver-looped jobs per micro-batch, bounded by the
+            # batch.
             within = near_duplicate_drop_list(
                 cosine_near_duplicates(
                     batch_df,
@@ -459,7 +460,6 @@ def run_vector_ingest(
                     vec_col=vec_col,
                     threshold=threshold,
                 ),
-                exact=True,
             ).select(F.col("drop_id").alias("__drop"))
             drops = index_dups.unionByName(within).distinct()
             survivors = batch_df.join(

@@ -605,17 +605,19 @@ def test_simhash_components_equals_pair_path(spark, documents):
         simhash_components,
     )
 
-    pairs = simhash_band_pairs(
-        documents, "doc_id", "text", max_hamming=2, bits=64,
-        portable_hash=False,
-    )
-    want = sorted(map(tuple, connected_components(pairs).collect()))
-    got = sorted(map(tuple, simhash_components(
-        documents, "doc_id", "text", max_hamming=2, bits=64,
-        portable_hash=False,
-    ).collect()))
-    assert got == want
-    assert len(got) > 0
+    # max_hamming=0 is the single 64-bit-wide block (all-ones mask)
+    for max_hamming in (2, 0):
+        pairs = simhash_band_pairs(
+            documents, "doc_id", "text", max_hamming=max_hamming, bits=64,
+            portable_hash=False,
+        )
+        want = sorted(map(tuple, connected_components(pairs).collect()))
+        got = sorted(map(tuple, simhash_components(
+            documents, "doc_id", "text", max_hamming=max_hamming, bits=64,
+            portable_hash=False,
+        ).collect()))
+        assert got == want
+        assert len(got) > 0
 
 
 def test_simhash_components_mega_cluster(spark, documents):

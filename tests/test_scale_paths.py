@@ -82,18 +82,14 @@ def test_connected_components_local_vs_distributed_parity(
     assert local[777] == 777 and local[-99] == -99
 
 
-def test_drop_list_exact_vs_greedy(spark):
+def test_drop_list_is_transitive_closure(spark):
+    # chain 1~3, 2~3: dropping every id_b would drop only 3; the
+    # closure keeps only the component minimum 1
     pairs = _pairs(spark, [(1, 3), (2, 3)])
-    greedy = {
-        r["drop_id"]
-        for r in near_duplicate_drop_list(pairs, exact=False).collect()
+    dropped = {
+        r["drop_id"] for r in near_duplicate_drop_list(pairs).collect()
     }
-    exact = {
-        r["drop_id"]
-        for r in near_duplicate_drop_list(pairs, exact=True).collect()
-    }
-    assert greedy == {3}  # misses 2: never appears as id_b's cluster rep
-    assert exact == {2, 3}  # transitive closure keeps only min id 1
+    assert dropped == {2, 3}
 
 
 def test_simhash_band_pairs_equal_bruteforce(spark, documents):
@@ -143,7 +139,8 @@ def test_simhash_band_pairs_rejects_zero_width_blocks(spark):
 
 def test_simhash64_band_pairs_equal_bruteforce(spark, documents):
     # 64-bit scale fingerprint, both token-hash variants, vs a direct
-    # xor/bit_count self-join on the same fingerprints
+    # xor/bit_count self-join on the same fingerprints; max_hamming=0
+    # is the single 64-bit-wide block (all-ones mask)
     sample = documents.limit(120).cache()
     for portable in (True, False):
         fp = sample.select(
@@ -151,31 +148,32 @@ def test_simhash64_band_pairs_equal_bruteforce(spark, documents):
             simhash64("text", portable_hash=portable).alias("sh"),
         )
         a, b = fp.alias("a"), fp.alias("b")
-        brute = {
-            (r["id_a"], r["id_b"]): r["hamming"]
-            for r in a.join(b, F.col("a.id") < F.col("b.id"))
-            .select(
-                F.col("a.id").alias("id_a"),
-                F.col("b.id").alias("id_b"),
-                F.bit_count(
-                    F.col("a.sh").bitwiseXOR(F.col("b.sh"))
-                ).alias("hamming"),
-            )
-            .filter(F.col("hamming") <= 3)
-            .collect()
-        }
-        banded = {
-            (r["id_a"], r["id_b"]): r["hamming"]
-            for r in simhash_band_pairs(
-                sample,
-                "doc_id",
-                "text",
-                max_hamming=3,
-                bits=64,
-                portable_hash=portable,
-            ).collect()
-        }
-        assert banded == brute
+        for max_hamming in (3, 0):
+            brute = {
+                (r["id_a"], r["id_b"]): r["hamming"]
+                for r in a.join(b, F.col("a.id") < F.col("b.id"))
+                .select(
+                    F.col("a.id").alias("id_a"),
+                    F.col("b.id").alias("id_b"),
+                    F.bit_count(
+                        F.col("a.sh").bitwiseXOR(F.col("b.sh"))
+                    ).alias("hamming"),
+                )
+                .filter(F.col("hamming") <= max_hamming)
+                .collect()
+            }
+            banded = {
+                (r["id_a"], r["id_b"]): r["hamming"]
+                for r in simhash_band_pairs(
+                    sample,
+                    "doc_id",
+                    "text",
+                    max_hamming=max_hamming,
+                    bits=64,
+                    portable_hash=portable,
+                ).collect()
+            }
+            assert banded == brute
 
 
 def test_simhash64_vote_sanity(spark):

@@ -24,7 +24,7 @@ def test_single_cell_equals_exact_blocked_path(spark, embeddings):
     )
     expected = {
         r["drop_id"]
-        for r in near_duplicate_drop_list(pairs, exact=True).collect()
+        for r in near_duplicate_drop_list(pairs).collect()
     }
     assert expected  # testdata must actually contain near-dups
     got = semantic_dedup(

@@ -139,7 +139,6 @@ def main() -> int:
         t_cc, n_cc = timed(
             lambda: near_duplicate_drop_list(
                 minhash_near_duplicates(d, "doc_id", "text", threshold=0.8),
-                exact=True,
             )
         )
         t_ann, n_ann = timed(

@@ -80,7 +80,6 @@ def main() -> int:
                 minhash_near_duplicates(
                     c, "doc_id", "text", threshold=0.8
                 ),
-                exact=True,
             ).count()
             t_pairs = round(time.perf_counter() - t0, 2)
             assert n_pairs == n_comp, (n_pairs, n_comp)
