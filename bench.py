@@ -116,9 +116,12 @@ def _x_ann_realistic(spark, sf_dir):
 
 
 def _x_emb_lsh_realistic(spark, sf_dir):
-    """dedup_embedding_lsh at a SCALE config (θ=0.9 exact-replica
-    regime, n_bits=12/8 tables) vs the qid's recall-heavy θ=0.4,
-    n_bits=4/64-table oracle setting."""
+    """dedup_embedding_lsh at a SCALE config (θ=0.9, n_bits=12/8
+    tables) vs the qid's recall-heavy θ=0.4, n_bits=4/64-table oracle
+    setting.  The embeddings testdata has no pair at cosine ≥ 0.9: at
+    sf0.1 this emits 0 rows, so it times SRP bucketing and a candidate
+    join whose verify keeps nothing — not an output-parity check
+    (``dedup_embedding``'s θ=0.4 tier checks this path's output)."""
     from data_toolz_spark.operators.similarity import (
         cosine_near_duplicates_lsh,
     )

@@ -183,7 +183,6 @@ def minhash_near_duplicates(
     n_hashes: int = 64,
     bands: int = 16,
     shingle: int = 3,
-    persist: bool = True,
 ) -> DataFrame:
     """Near-duplicate pairs by MinHash-LSH, verified with exact Jaccard.
 
@@ -220,25 +219,32 @@ def minhash_near_duplicates(
     members, reps = _minhash_members_reps(
         df, id_col, text_col, shingle=shingle
     )
-    if persist:
-        # members/reps feed 4 downstream branches (band join sides,
-        # verify, expand); without a persist the shingling runs once
-        # per branch.  MEMORY_AND_DISK so large corpora spill instead
-        # of OOM; callers running one-shot pipelines can pass
-        # persist=False to keep the plan fully lazy.  Both frames are
-        # registered with cache.track so long sessions can bulk-release
-        # them (cache.release) once the returned plan is materialized —
-        # the caller has no direct handle to these intermediates.
-        from pyspark import StorageLevel
-
-        from data_toolz_spark.cache import track
-
-        members = track(members.persist(StorageLevel.MEMORY_AND_DISK))
-        reps = track(reps.persist(StorageLevel.MEMORY_AND_DISK))
+    members, reps = _persist_tracked(members, reps)
     verified_reps = _verified_rep_pairs(
         reps, threshold=threshold, n_hashes=n_hashes, bands=bands
     )
     return _expand_rep_pairs(verified_reps, members, block_cols=())
+
+
+def _persist_tracked(
+    members: DataFrame, reps: DataFrame
+) -> tuple[DataFrame, DataFrame]:
+    """Persist the per-doc and per-set frames of a near-dup pipeline.
+
+    Both feed several downstream branches (band join sides, verify,
+    expand); without a persist the shingling runs once per branch.
+    MEMORY_AND_DISK so large corpora spill instead of OOM.  Both frames
+    are registered with cache.track so long sessions can bulk-release
+    them (cache.release) once the returned plan is materialized — the
+    caller has no direct handle to these intermediates."""
+    from pyspark import StorageLevel
+
+    from data_toolz_spark.cache import track
+
+    return (
+        track(members.persist(StorageLevel.MEMORY_AND_DISK)),
+        track(reps.persist(StorageLevel.MEMORY_AND_DISK)),
+    )
 
 
 def _expand_rep_pairs(
@@ -332,24 +338,48 @@ def _verified_rep_pairs(
     half of the pair operator and the skew-safe component builder —
     candidate cost is rep-level by construction (identical sets
     collapsed upstream)."""
+    candidates = _band_self_join(
+        _rep_bands(reps, n_hashes=n_hashes, bands=bands),
+        "__fp",
+        ["__band", "__bucket"],
+        pair=("fp_a", "fp_b"),
+    )
+    rep_sets = reps.select("__fp", "__elems")
+    return _verify_jaccard(candidates, rep_sets, rep_sets, threshold)
+
+
+def _rep_bands(reps: DataFrame, *, n_hashes: int, bands: int) -> DataFrame:
+    """Band table ``(__fp, __band, __bucket)`` of set representatives:
+    one row per representative and band.  Callers that band the same
+    ``reps`` twice get one shuffle of it: the plans are equal, so the
+    exchange is reused and the band kernel runs once."""
     bucketize = _band_bucket_udf(n_hashes, bands)
-    banded = reps.select(
+    return reps.select(
         "__fp",
         F.posexplode(bucketize(F.col("__elems"))).alias("__band", "__bucket"),
     )
-    candidates = _band_self_join(
-        banded, "__fp", ["__band", "__bucket"], pair=("fp_a", "fp_b")
-    )
-    rep_sets = reps.select("__fp", "__elems")
+
+
+def _verify_jaccard(
+    candidates: DataFrame,
+    sets_a: DataFrame,
+    sets_b: DataFrame,
+    threshold: float,
+) -> DataFrame:
+    """Exact-Jaccard gate on candidate set pairs ``(fp_a, fp_b)``:
+    ``fp_a`` looks up its set in ``sets_a``, ``fp_b`` in ``sets_b``
+    (both ``(__fp, __elems)``).  Returns ``(fp_a, fp_b, jaccard)`` for
+    the pairs at ``jaccard >= threshold``, rounded to 6 for
+    cross-engine equality."""
     return (
         candidates.join(
-            rep_sets.select(
+            sets_a.select(
                 F.col("__fp").alias("fp_a"), F.col("__elems").alias("elems_a")
             ),
             on="fp_a",
         )
         .join(
-            rep_sets.select(
+            sets_b.select(
                 F.col("__fp").alias("fp_b"), F.col("__elems").alias("elems_b")
             ),
             on="fp_b",
@@ -371,7 +401,6 @@ def minhash_components(
     n_hashes: int = 64,
     bands: int = 16,
     shingle: int = 3,
-    persist: bool = True,
 ) -> DataFrame:
     """Near-duplicate component map ``(id, component)`` WITHOUT ever
     materializing member pairs — the skew-safe drop-list/split path.
@@ -398,13 +427,7 @@ def minhash_components(
     members, reps = _minhash_members_reps(
         df, id_col, text_col, shingle=shingle
     )
-    if persist:
-        from pyspark import StorageLevel
-
-        from data_toolz_spark.cache import track
-
-        members = track(members.persist(StorageLevel.MEMORY_AND_DISK))
-        reps = track(reps.persist(StorageLevel.MEMORY_AND_DISK))
+    members, reps = _persist_tracked(members, reps)
     nonempty_reps = reps.filter(F.size("__elems") > 0)
     vr = _verified_rep_pairs(
         nonempty_reps, threshold=threshold, n_hashes=n_hashes, bands=bands
@@ -832,7 +855,6 @@ def exact_jaccard_pairs(
     block_cols: Sequence[str],
     threshold: float,
     shingle: int = 1,
-    persist: bool = True,
 ) -> DataFrame:
     """Exact-Jaccard pairs via an inverted-index (set-similarity) join.
 
@@ -882,13 +904,7 @@ def exact_jaccard_pairs(
         F.any_value("__elems").alias("__elems"),
         F.count(F.lit(1)).alias("__cnt"),
     )
-    if persist:
-        from pyspark import StorageLevel
-
-        from data_toolz_spark.cache import track
-
-        members = track(members.persist(StorageLevel.MEMORY_AND_DISK))
-        reps = track(reps.persist(StorageLevel.MEMORY_AND_DISK))
+    members, reps = _persist_tracked(members, reps)
     index = reps.select(
         *block_cols,
         "__fp",

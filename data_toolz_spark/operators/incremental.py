@@ -1,30 +1,42 @@
-"""Incremental exact dedup against a persistent fingerprint catalog.
+"""Incremental dedup and search against persistent, bucketed indexes.
 
-The batch dedup operators (``operators.dedup``) answer "which documents
-in THIS corpus duplicate each other".  A production pipeline asks a
-different question daily: "which documents in today's increment are
-novel against everything ever ingested" — and re-scanning/re-shuffling
-a 100 TB history per increment is the naive answer this module avoids.
+The batch operators (``operators.dedup``, ``operators.similarity``,
+``operators.text_analysis``) answer "which documents in THIS corpus
+duplicate each other".  A production pipeline asks a different question
+daily: "which documents in today's increment duplicate anything ever
+ingested" — and re-scanning/re-shuffling a 100 TB history per increment
+is the naive answer this module avoids.
 
-Design:
+Every index here is a set of **bucketed tables** (the quota ledger is
+partitioned instead): bucketing pre-shuffles the big side ONCE at write
+time, so every later join shuffles only the (small) increment to match
+the bucket layout and reads the index in place, with no exchange above
+its scan (asserted by plan tests).  ``append_to_*`` inserts the
+increment's rows back with ``insertInto``, which keeps the layout.  The
+indexes:
 
-* the catalog is a **bucketed table** of canonical text fingerprints
-  (md5 of normalized text, ``text_fingerprint``), bucketed on the
-  fingerprint.  Bucketing pre-shuffles the big side ONCE at write
-  time; every later anti-join shuffles only the (small) increment to
-  match the bucket layout — the catalog is read in place, no exchange
-  (asserted by tests/test_plans.py-style plan checks).
-* ``novel_documents`` is a left-anti join on the fingerprint: exact
-  dedup semantics, including increment-internal duplicates when
-  ``within_increment=True`` (keep the min-id representative, the same
-  policy as ``dedup.dedup_exact``).
-* ``append_to_catalog`` inserts the novel fingerprints back, keeping
-  the bucket layout (``insertInto`` preserves bucketing for a bucketed
-  catalog).
+* **Fingerprint catalog** — exact dedup.  ``novel_documents`` is a
+  left-anti join on the canonical text fingerprint (``text_fingerprint``),
+  keeping the min-id representative of increment-internal duplicates
+  (the ``dedup.dedup_exact`` policy).
+* **MinHash band index** — near-dup.  ``incremental_near_duplicates``
+  mines the increment against the index's band, set and member tables
+  and runs the batch MinHash back half (``dedup._verified_rep_pairs``,
+  ``_verify_jaccard``, ``_expand_rep_pairs``) for the increment's own
+  pairs; appends are journaled so a half-written index is detected and
+  repaired (``repair_minhash_index``).
+* **IVF inverted file** (optionally product-quantized) — vector
+  near-dup and nearest-neighbour queries, with cell rebalancing.
+* **Hamming fingerprint index** — image, audio and video fingerprint
+  near-dup through the batch path's pigeonhole banding
+  (``dedup.fingerprint_band_pairs``).
+* **Per-site quota ledger** — ``urls.cap_per_domain`` across batches:
+  the accepted ``(id, domain)`` rows persist.
+* **Gram index** — incremental exact-substring (span) dedup.
 
-The same pattern extends to MinHash band tables for incremental
-NEAR-dup (bucket the band table on (band, bucket)); exact fingerprints
-are the common first gate and keep this module dependency-free.
+The MinHash, Hamming and gram indexes compute their fingerprints and
+band keys with the batch operators' own helpers, so an index stores the
+keys a batch run over the same corpus computes.
 """
 
 from __future__ import annotations
@@ -432,9 +444,11 @@ def incremental_near_duplicates(
     drop does explicitly.
     """
     from data_toolz_spark.operators.dedup import (
-        _band_bucket_udf,
+        _expand_rep_pairs,
         _minhash_members_reps,
-        jaccard,
+        _rep_bands,
+        _verified_rep_pairs,
+        _verify_jaccard,
     )
 
     if not allow_dirty:
@@ -464,99 +478,66 @@ def incremental_near_duplicates(
     track(members)
     track(reps)
 
-    bucketize = _band_bucket_udf(n_hashes, bands)
-    new_bands = reps.select(
-        F.col("__fp").alias("fp"),
-        F.posexplode(bucketize(F.col("__elems"))).alias("band", "bucket"),
-    )
+    new_bands = _rep_bands(reps, n_hashes=n_hashes, bands=bands)
     old_bands = spark.table(f"{table_prefix}_mh_bands")
     old_sets = spark.table(f"{table_prefix}_mh_sets")
     old_members = spark.table(f"{table_prefix}_mh_members")
 
-    new_sets = reps.select(
-        F.col("__fp").alias("fp"), F.col("__elems").alias("elems")
-    )
-    # 1. candidates increment×index (index side read in place)
+    # increment×index: candidates on a shared band bucket (index side
+    # read in place), exact-Jaccard verify against the index's sets,
+    # then fan out to both sides' member ids
     cand_old = (
         new_bands.alias("n")
         .join(
             old_bands.alias("o"),
             on=[
-                F.col("n.band") == F.col("o.band"),
-                F.col("n.bucket") == F.col("o.bucket"),
-                F.col("n.fp") != F.col("o.fp"),
+                F.col("n.__band") == F.col("o.band"),
+                F.col("n.__bucket") == F.col("o.bucket"),
+                F.col("n.__fp") != F.col("o.fp"),
             ],
         )
-        .select(F.col("n.fp").alias("fp_new"), F.col("o.fp").alias("fp_old"))
-        .dropDuplicates(["fp_new", "fp_old"])
+        .select(F.col("n.__fp").alias("fp_a"), F.col("o.fp").alias("fp_b"))
+        .dropDuplicates(["fp_a", "fp_b"])
     )
-    # 2. candidates increment×increment
-    cand_new = (
-        new_bands.alias("a")
+    verified_old = _verify_jaccard(
+        cand_old,
+        reps,
+        old_sets.select(
+            F.col("fp").alias("__fp"), F.col("elems").alias("__elems")
+        ),
+        threshold,
+    )
+    inter_old = (
+        verified_old.join(
+            members.select(
+                F.col("__fp").alias("fp_a"), F.col("__id").alias("ia")
+            ),
+            on="fp_a",
+        )
         .join(
-            new_bands.alias("b"),
-            on=[
-                F.col("a.band") == F.col("b.band"),
-                F.col("a.bucket") == F.col("b.bucket"),
-                F.col("a.fp") < F.col("b.fp"),
-            ],
+            old_members.select(
+                F.col("fp").alias("fp_b"), F.col("id").alias("ib")
+            ),
+            on="fp_b",
         )
-        .select(F.col("a.fp").alias("fp_new"), F.col("b.fp").alias("fp_old"))
-        .dropDuplicates(["fp_new", "fp_old"])
+        .select(
+            F.least("ia", "ib").alias("id_a"),
+            F.greatest("ia", "ib").alias("id_b"),
+            "jaccard",
+        )
     )
-
-    def verify(cand: DataFrame, right_sets: DataFrame) -> DataFrame:
-        return (
-            cand.join(
-                new_sets.select(
-                    F.col("fp").alias("fp_new"), F.col("elems").alias("ea")
-                ),
-                on="fp_new",
-            )
-            .join(
-                right_sets.select(
-                    F.col("fp").alias("fp_old"), F.col("elems").alias("eb")
-                ),
-                on="fp_old",
-            )
-            .withColumn(
-                "jaccard", F.round(jaccard(F.col("ea"), F.col("eb")), 6)
-            )
-            .filter(F.col("jaccard") >= threshold)
-            .select("fp_new", "fp_old", "jaccard")
-        )
-
-    # 3. expand verified fp pairs to id pairs
-    new_ids = members.select(
-        F.col("__fp").alias("fp"), F.col("__id").alias("id")
+    # increment×increment: exactly the batch operator's back half over
+    # the increment (band self-join, verify, member fan-out and
+    # identical-set twins at jaccard 1.0)
+    within_new = _expand_rep_pairs(
+        _verified_rep_pairs(
+            reps, threshold=threshold, n_hashes=n_hashes, bands=bands
+        ),
+        members,
+        block_cols=(),
     )
-
-    def expand(pairs: DataFrame, right_ids: DataFrame) -> DataFrame:
-        return (
-            pairs.join(
-                new_ids.select(
-                    F.col("fp").alias("fp_new"), F.col("id").alias("ia")
-                ),
-                on="fp_new",
-            )
-            .join(
-                right_ids.select(
-                    F.col("fp").alias("fp_old"), F.col("id").alias("ib")
-                ),
-                on="fp_old",
-            )
-            .select(
-                F.least("ia", "ib").alias("id_a"),
-                F.greatest("ia", "ib").alias("id_b"),
-                "jaccard",
-            )
-        )
-
-    inter_old = expand(verify(cand_old, old_sets), old_members)
-    inter_new = expand(verify(cand_new, new_sets), new_ids)
-    # 4. identical content: same fingerprint ⇒ jaccard 1.0 —
-    #    increment×index members of one fp, and within-increment twins.
-    #    Batch parity: minhash_near_duplicates filters empty shingle
+    # identical content increment×index: same fingerprint ⇒ jaccard
+    #    1.0.  Batch parity: _expand_rep_pairs filters empty shingle
     #    sets (size(__elems) > 0) out of its identical-content path, so
     #    empty/whitespace docs never pair.  The pair join requires
     #    n.fp == o.fp and the empty set has one deterministic
@@ -587,27 +568,7 @@ def incremental_near_duplicates(
             F.lit(1.0).alias("jaccard"),
         )
     )
-    nonempty = members.filter(F.size("__elems") > 0)
-    ident_new = (
-        nonempty.alias("a")
-        .join(
-            nonempty.alias("b"),
-            on=[
-                F.col("a.__fp") == F.col("b.__fp"),
-                F.col("a.__id") < F.col("b.__id"),
-            ],
-        )
-        .select(
-            F.col("a.__id").alias("id_a"),
-            F.col("b.__id").alias("id_b"),
-            F.lit(1.0).alias("jaccard"),
-        )
-    )
-    return (
-        inter_old.unionByName(inter_new)
-        .unionByName(ident_old)
-        .unionByName(ident_new)
-    )
+    return inter_old.unionByName(within_new).unionByName(ident_old)
 
 
 def append_to_minhash_index(

@@ -13,6 +13,7 @@ from data_toolz_spark.streaming.ingest import (
     run_dedup_ingest,
     run_fingerprint_ingest,
     run_near_dup_ingest,
+    run_quota_ingest,
     run_span_dedup_ingest,
     run_vector_ingest,
 )
@@ -23,6 +24,7 @@ __all__ = [
     "run_dedup_ingest",
     "run_fingerprint_ingest",
     "run_near_dup_ingest",
+    "run_quota_ingest",
     "run_span_dedup_ingest",
     "run_vector_ingest",
     "run_to_memory_sink",

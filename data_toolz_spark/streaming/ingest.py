@@ -34,6 +34,20 @@ from data_toolz_spark.operators.incremental import (
 )
 
 
+def _drain(stream_df: DataFrame, process_batch, checkpoint_dir: str) -> None:
+    """Run ``process_batch`` over every micro-batch of the available
+    backlog, then stop (``availableNow``): each ingest function is one
+    call per ingestion cycle, and the checkpoint carries the source
+    offsets so a rerun never re-reads a processed file."""
+    (
+        stream_df.writeStream.foreachBatch(process_batch)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+
+
 def run_dedup_ingest(
     stream_df: DataFrame,
     *,
@@ -122,13 +136,7 @@ def run_dedup_ingest(
         finally:
             novel.unpersist()
 
-    query = (
-        stream_df.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
+    _drain(stream_df, process_batch, checkpoint_dir)
 
 
 def run_near_dup_ingest(
@@ -263,36 +271,22 @@ def run_near_dup_ingest(
                 replayed = ids.limit(0).select(
                     F.col("__mid").alias("__drop")
                 )
-            flagged = (
+            # every mined pair touches the batch and has id_a < id_b,
+            # so the doc to drop is id_b when it is a batch doc (its
+            # partner is indexed or a lower-id batch doc) and id_a
+            # otherwise (id_b is the indexed side)
+            drops = (
                 pairs.join(
-                    ids.withColumnRenamed("__mid", "id_a").withColumn(
-                        "__a_in", F.lit(True)
-                    ),
-                    on="id_a",
-                    how="left",
-                ).join(
                     ids.withColumnRenamed("__mid", "id_b").withColumn(
                         "__b_in", F.lit(True)
                     ),
                     on="id_b",
                     how="left",
                 )
-            )
-            # every mined pair touches ≥1 batch doc (increment×index or
-            # increment×increment), so a null flag marks the INDEX side
-            drops = (
-                flagged.filter(F.col("__a_in").isNull())
-                .select(F.col("id_b").alias("__drop"))
-                .unionByName(
-                    flagged.filter(F.col("__b_in").isNull()).select(
-                        F.col("id_a").alias("__drop")
-                    )
-                )
-                .unionByName(
-                    flagged.filter(
-                        F.col("__a_in").isNotNull()
-                        & F.col("__b_in").isNotNull()
-                    ).select(F.col("id_b").alias("__drop"))
+                .select(
+                    F.when(F.col("__b_in"), F.col("id_b"))
+                    .otherwise(F.col("id_a"))
+                    .alias("__drop")
                 )
                 .unionByName(replayed)
                 .distinct()
@@ -349,13 +343,7 @@ def run_near_dup_ingest(
                 survivors.unpersist()
             release()
 
-    query = (
-        stream_df.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
+    _drain(stream_df, process_batch, checkpoint_dir)
 
 
 def run_vector_ingest(
@@ -481,13 +469,7 @@ def run_vector_ingest(
                 survivors.unpersist()
             release()
 
-    query = (
-        stream_df.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
+    _drain(stream_df, process_batch, checkpoint_dir)
 
 
 def run_fingerprint_ingest(
@@ -586,13 +568,7 @@ def run_fingerprint_ingest(
                 survivors.unpersist()
             release()
 
-    query = (
-        stream_df.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
+    _drain(stream_df, process_batch, checkpoint_dir)
 
 
 def run_quota_ingest(
@@ -674,22 +650,7 @@ def run_quota_ingest(
                 admitted.unpersist()
             release()
 
-    query = (
-        stream_df.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-
-
-__all__ = [
-    "run_dedup_ingest",
-    "run_near_dup_ingest",
-    "run_vector_ingest",
-    "run_fingerprint_ingest",
-    "run_quota_ingest",
-]
+    _drain(stream_df, process_batch, checkpoint_dir)
 
 
 def run_span_dedup_ingest(
@@ -747,13 +708,14 @@ def run_span_dedup_ingest(
         finally:
             cleaned.unpersist()
 
-    query = (
-        stream_df.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
+    _drain(stream_df, process_batch, checkpoint_dir)
 
 
-__all__ += ["run_span_dedup_ingest"]
+__all__ = [
+    "run_dedup_ingest",
+    "run_near_dup_ingest",
+    "run_vector_ingest",
+    "run_fingerprint_ingest",
+    "run_quota_ingest",
+    "run_span_dedup_ingest",
+]

@@ -856,11 +856,20 @@ def test_streaming_quota_ingest_across_cycles(spark, tmp_path):
     within-batch winners follow the deterministic hash lottery."""
     import hashlib
 
+    import data_toolz_spark.streaming as streaming
     from data_toolz_spark.catalog import drop_stale_table
     from data_toolz_spark.operators.incremental import (
         build_quota_ledger,
     )
+    from data_toolz_spark.streaming import ingest
     from data_toolz_spark.streaming.ingest import run_quota_ingest
+
+    # every ingest function is part of the package's public surface
+    unexported = [
+        name for name in ingest.__all__
+        if name not in streaming.__all__ or not hasattr(streaming, name)
+    ]
+    assert not unexported, unexported
 
     src = str(tmp_path / "qsrc")
     out = str(tmp_path / "qcorpus")
