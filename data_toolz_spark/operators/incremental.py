@@ -49,6 +49,14 @@ from pyspark.sql import functions as F
 from data_toolz_spark.functions.text import text_fingerprint
 
 
+def _meta_row(spark: SparkSession, table: str):
+    """The one row of an index's meta table (its pinned config)."""
+    rows = spark.table(table).collect()
+    if len(rows) != 1:
+        raise ValueError(f"{table} must hold exactly one row")
+    return rows[0]
+
+
 def build_fingerprint_catalog(
     df: DataFrame,
     table: str,
@@ -244,6 +252,9 @@ def append_to_catalog(
 # DIRTY.  Mining refuses a dirty index; ``repair_minhash_index``
 # re-appends the same increment IDEMPOTENTLY (per-table anti-joins, so
 # whatever already landed is skipped) and closes the open transactions.
+# Append and repair differ only in those row filters: both take their
+# rows from ``_minhash_index_rows`` and write them through
+# ``_mh_insert`` (bands, sets, then members LAST).
 # The single-table indexes (fingerprint catalog, IVF inverted file)
 # don't need this: their one ``insertInto`` is job-atomic.
 
@@ -311,6 +322,54 @@ def compact_minhash_journal(
     return True
 
 
+#: The MinHash index's row tables, in write order (members LAST).
+_MH_ROW_TABLES = ("bands", "sets", "members")
+
+
+def _minhash_index_rows(
+    df: DataFrame, m, *, id_col: str, text_col: str
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The index rows of ``df`` under the LSH config ``m`` (``n_hashes``,
+    ``bands``, ``shingle``): ``(bands, sets, members)`` as
+    ``(fp, band, bucket)`` / ``(fp, elems)`` / ``(fp, id)``.
+
+    One ``_minhash_members_reps`` pass, persisted and tracked
+    (``dedup._persist_tracked``) so the three frames share it; bands
+    are ``dedup._rep_bands``, the table mining bands an increment
+    with, so the index stores the keys a batch run computes."""
+    from data_toolz_spark.operators.dedup import (
+        _minhash_members_reps,
+        _persist_tracked,
+        _rep_bands,
+    )
+
+    members, reps = _persist_tracked(
+        *_minhash_members_reps(df, id_col, text_col, shingle=m["shingle"])
+    )
+    bands = _rep_bands(reps, n_hashes=m["n_hashes"], bands=m["bands"])
+    return (
+        bands.select(
+            F.col("__fp").alias("fp"),
+            F.col("__band").alias("band"),
+            F.col("__bucket").alias("bucket"),
+        ),
+        reps.select(
+            F.col("__fp").alias("fp"), F.col("__elems").alias("elems")
+        ),
+        members.select(F.col("__fp").alias("fp"), F.col("__id").alias("id")),
+    )
+
+
+def _mh_insert(
+    table_prefix: str, bands: DataFrame, sets: DataFrame, members: DataFrame
+) -> None:
+    """Insert index rows in the one write order: bands, sets, members.
+    Members go LAST — ``validate_minhash_index`` reads a set fp with
+    no members as the mark of a died append."""
+    for name, frame in zip(_MH_ROW_TABLES, (bands, sets, members)):
+        frame.write.insertInto(f"{table_prefix}_mh_{name}")
+
+
 def build_minhash_index(
     df: DataFrame,
     table_prefix: str,
@@ -339,69 +398,43 @@ def build_minhash_index(
 
     Identical hashing/banding across runs is guaranteed by the shared
     ``_minhash_members_reps`` front half and the seeded band kernel.
+    Build, append and repair all take their rows from
+    ``_minhash_index_rows``; one corpus pass feeds the three writes,
+    and the build ends with ``cache.release()``, which frees that
+    pass's persisted frames (and any other tracked ones).
     """
-    from data_toolz_spark.operators.dedup import (
-        _band_bucket_udf,
-        _minhash_members_reps,
-    )
+    from data_toolz_spark.cache import release
     from data_toolz_spark.sources.io import DataIO
 
     if n_hashes % bands != 0:
         raise ValueError("n_hashes must be divisible by bands")
-    io = DataIO()
-    members, reps = _minhash_members_reps(
-        df, id_col, text_col, shingle=shingle
-    )
-    # r13 (guide §1.2 — count your scans): the three bucketed writes
-    # below each materialize their own plan, so without a persist the
-    # corpus shingle+hash pass ran THREE times (members, and reps'
-    # groupBy twice).  Persist the shared front half for the build's
-    # duration — one corpus pass feeds all three sinks — and release
-    # as soon as the writes (actions) are done.
-    from pyspark import StorageLevel
-
-    members = members.persist(StorageLevel.MEMORY_AND_DISK)
-    reps = reps.persist(StorageLevel.MEMORY_AND_DISK)
-    bucketize = _band_bucket_udf(n_hashes, bands)
-    banded = reps.select(
-        F.col("__fp").alias("fp"),
-        F.posexplode(bucketize(F.col("__elems"))).alias("band", "bucket"),
-    )
     spark = df.sparkSession
     meta = spark.createDataFrame(
         [(n_hashes, bands, shingle, float(threshold))],
         "n_hashes int, bands int, shingle int, threshold double",
     )
     meta.write.mode("overwrite").saveAsTable(f"{table_prefix}_mh_meta")
+    rows = _minhash_index_rows(
+        df,
+        {"n_hashes": n_hashes, "bands": bands, "shingle": shingle},
+        id_col=id_col,
+        text_col=text_col,
+    )
     try:
-        io.write_bucketed(
-            banded,
-            f"{table_prefix}_mh_bands",
-            bucket_by=["band", "bucket"],
-            n_buckets=n_buckets,
-            path=None if path is None else f"{path}/bands",
-        )
-        io.write_bucketed(
-            reps.select(
-                F.col("__fp").alias("fp"), F.col("__elems").alias("elems")
-            ),
-            f"{table_prefix}_mh_sets",
-            bucket_by=["fp"],
-            n_buckets=n_buckets,
-            path=None if path is None else f"{path}/sets",
-        )
-        io.write_bucketed(
-            members.select(
-                F.col("__fp").alias("fp"), F.col("__id").alias("id")
-            ),
-            f"{table_prefix}_mh_members",
-            bucket_by=["fp"],
-            n_buckets=n_buckets,
-            path=None if path is None else f"{path}/members",
-        )
+        for name, frame, bucket_by in zip(
+            _MH_ROW_TABLES, rows, (["band", "bucket"], ["fp"], ["fp"])
+        ):
+            DataIO().write_bucketed(
+                frame,
+                f"{table_prefix}_mh_{name}",
+                bucket_by=bucket_by,
+                n_buckets=n_buckets,
+                path=None if path is None else f"{path}/{name}",
+            )
     finally:
-        members.unpersist()
-        reps.unpersist()
+        # the build is one complete action: free the persisted front
+        # half now rather than at the caller's next release
+        release()
     # fresh (empty) append journal: the build itself needs no bracket —
     # a died build is rebuilt from scratch — but appends record their
     # begin/commit here so a crash between the three insertIntos is
@@ -446,6 +479,7 @@ def incremental_near_duplicates(
     from data_toolz_spark.operators.dedup import (
         _expand_rep_pairs,
         _minhash_members_reps,
+        _persist_tracked,
         _rep_bands,
         _verified_rep_pairs,
         _verify_jaccard,
@@ -464,19 +498,13 @@ def incremental_near_duplicates(
                 "for the partial increment)."
             )
 
-    m = spark.table(f"{table_prefix}_mh_meta").first()
+    m = _meta_row(spark, f"{table_prefix}_mh_meta")
     n_hashes, bands, shingle, threshold = (
         m["n_hashes"], m["bands"], m["shingle"], m["threshold"],
     )
-    members, reps = _minhash_members_reps(
-        increment, id_col, text_col, shingle=shingle
+    members, reps = _persist_tracked(
+        *_minhash_members_reps(increment, id_col, text_col, shingle=shingle)
     )
-    members = members.persist()
-    reps = reps.persist()
-    from data_toolz_spark.cache import track
-
-    track(members)
-    track(reps)
 
     new_bands = _rep_bands(reps, n_hashes=n_hashes, bands=bands)
     old_bands = spark.table(f"{table_prefix}_mh_bands")
@@ -593,40 +621,23 @@ def append_to_minhash_index(
     """
     import uuid
 
-    from data_toolz_spark.operators.dedup import (
-        _band_bucket_udf,
-        _minhash_members_reps,
-    )
-
-    m = spark.table(f"{table_prefix}_mh_meta").first()
-    members, reps = _minhash_members_reps(
-        increment, id_col, text_col, shingle=m["shingle"]
-    )
-    known = spark.table(f"{table_prefix}_mh_sets").select("fp")
-    novel_reps = (
-        reps.select(
-            F.col("__fp").alias("fp"), F.col("__elems").alias("elems")
-        )
-        .join(known, on="fp", how="left_anti")
-    )
-    novel_reps = novel_reps.persist()
     from data_toolz_spark.cache import track
 
-    track(novel_reps)
+    bands, sets, members = _minhash_index_rows(
+        increment,
+        _meta_row(spark, f"{table_prefix}_mh_meta"),
+        id_col=id_col,
+        text_col=text_col,
+    )
+    known = spark.table(f"{table_prefix}_mh_sets").select("fp")
+    novel = track(sets.join(known, on="fp", how="left_anti").persist())
     txn = uuid.uuid4().hex
     _mh_journal_append(spark, table_prefix, txn, "begin")
-    bucketize = _band_bucket_udf(m["n_hashes"], m["bands"])
-    (
-        novel_reps.select(
-            "fp",
-            F.posexplode(bucketize(F.col("elems"))).alias("band", "bucket"),
-        ).write.insertInto(f"{table_prefix}_mh_bands")
-    )
-    novel_reps.write.insertInto(f"{table_prefix}_mh_sets")
-    (
-        members.select(
-            F.col("__fp").alias("fp"), F.col("__id").alias("id")
-        ).write.insertInto(f"{table_prefix}_mh_members")
+    _mh_insert(
+        table_prefix,
+        bands.join(novel.select("fp"), on="fp", how="left_semi"),
+        novel,
+        members,
     )
     _mh_journal_append(spark, table_prefix, txn, "commit")
 
@@ -649,7 +660,7 @@ def validate_minhash_index(
     Returns counts per violation plus ``consistent`` (journal clean
     AND zero structural violations).
     """
-    m = spark.table(f"{table_prefix}_mh_meta").first()
+    m = _meta_row(spark, f"{table_prefix}_mh_meta")
     bands = spark.table(f"{table_prefix}_mh_bands")
     sets_fp = spark.table(f"{table_prefix}_mh_sets").select("fp")
     members_fp = (
@@ -725,56 +736,33 @@ def repair_minhash_index(
     batch → txn mapping outside the journal (e.g. the ingest sink's
     batch ids); the journal alone cannot say.
     """
-    from data_toolz_spark.operators.dedup import (
-        _band_bucket_udf,
-        _minhash_members_reps,
+    bands, sets, members = _minhash_index_rows(
+        increment,
+        _meta_row(spark, f"{table_prefix}_mh_meta"),
+        id_col=id_col,
+        text_col=text_col,
     )
-
-    m = spark.table(f"{table_prefix}_mh_meta").first()
-    members, reps = _minhash_members_reps(
-        increment, id_col, text_col, shingle=m["shingle"]
-    )
-    reps = reps.select(
-        F.col("__fp").alias("fp"), F.col("__elems").alias("elems")
-    ).persist()
-    from data_toolz_spark.cache import track
-
-    track(reps)
-    inc_fps = reps.select("fp")
-
-    # bands: fps with no band rows yet (probe restricted to inc fps)
+    # each table gets the rows it is missing; the index side of the
+    # bands and members probes is restricted to the increment's fps
+    inc_fps = F.broadcast(sets.select("fp"))
     bands_have = (
         spark.table(f"{table_prefix}_mh_bands")
-        .join(F.broadcast(inc_fps), on="fp")
+        .join(inc_fps, on="fp")
         .select("fp")
         .distinct()
     )
-    bucketize = _band_bucket_udf(m["n_hashes"], m["bands"])
-    (
-        reps.join(bands_have, on="fp", how="left_anti")
-        .select(
-            "fp",
-            F.posexplode(bucketize(F.col("elems"))).alias("band", "bucket"),
-        )
-        .write.insertInto(f"{table_prefix}_mh_bands")
+    members_have = spark.table(f"{table_prefix}_mh_members").join(
+        inc_fps, on="fp"
     )
-    # sets: fps not present yet
-    known_sets = spark.table(f"{table_prefix}_mh_sets").select("fp")
-    (
-        reps.join(known_sets, on="fp", how="left_anti")
-        .write.insertInto(f"{table_prefix}_mh_sets")
-    )
-    # members: (fp, id) rows not present yet
-    new_members = members.select(
-        F.col("__fp").alias("fp"), F.col("__id").alias("id")
-    )
-    existing_members = spark.table(f"{table_prefix}_mh_members").join(
-        F.broadcast(inc_fps), on="fp"
-    )
-    (
-        new_members.join(
-            existing_members, on=["fp", "id"], how="left_anti"
-        ).write.insertInto(f"{table_prefix}_mh_members")
+    _mh_insert(
+        table_prefix,
+        bands.join(bands_have, on="fp", how="left_anti"),
+        sets.join(
+            spark.table(f"{table_prefix}_mh_sets").select("fp"),
+            on="fp",
+            how="left_anti",
+        ),
+        members.join(members_have, on=["fp", "id"], how="left_anti"),
     )
     # close the journal ONLY if the index is structurally whole again.
     # The journal records that appends died, not WHICH increments they
@@ -1087,7 +1075,7 @@ def _meta_pq_residual(meta) -> bool:
 
 
 def _load_centroids(spark: SparkSession, table_prefix: str):
-    meta = spark.table(f"{table_prefix}_ivf_meta").first()
+    meta = _meta_row(spark, f"{table_prefix}_ivf_meta")
     rows = spark.table(f"{table_prefix}_ivf_centroids").collect()
     centers = np.zeros((meta["n_centroids"], meta["dim"]), dtype=np.float64)
     for r in rows:
@@ -1446,7 +1434,7 @@ def validate_ivf_index(spark: SparkSession, table_prefix: str) -> dict:
         .filter(F.col("n") > 1)
         .count()
     )
-    meta = spark.table(f"{table_prefix}_ivf_meta").first()
+    meta = _meta_row(spark, f"{table_prefix}_ivf_meta")
     known = {
         int(r["cell"])
         for r in spark.table(f"{table_prefix}_ivf_centroids")
@@ -1578,7 +1566,7 @@ def rebalance_ivf_index(
         )
     if split_factor < 2:
         raise ValueError("rebalance_ivf_index: split_factor must be >= 2")
-    meta = spark.table(f"{table_prefix}_ivf_meta").first()
+    meta = _meta_row(spark, f"{table_prefix}_ivf_meta")
     if _meta_pq_residual(meta):
         raise ValueError(
             "rebalance_ivf_index: a by-residual PQ index stores codes "
@@ -1910,15 +1898,6 @@ def build_hamming_index(
     return f"{table_prefix}_hfp_bands"
 
 
-def _hfp_meta(spark: SparkSession, table_prefix: str):
-    rows = spark.table(f"{table_prefix}_hfp_meta").collect()
-    if len(rows) != 1:
-        raise ValueError(
-            f"{table_prefix}_hfp_meta must hold exactly one row"
-        )
-    return rows[0]
-
-
 def hamming_query_index(
     spark: SparkSession,
     batch: DataFrame,
@@ -1931,7 +1910,7 @@ def hamming_query_index(
     ``(query_id, index_id, hamming)``.  The batch's banded rows name
     the pv partitions worth reading (one bounded ``collect`` of ≤
     n_partitions ints); unprobed partitions are never scanned."""
-    m = _hfp_meta(spark, table_prefix)
+    m = _meta_row(spark, f"{table_prefix}_hfp_meta")
     banded = _hfp_banded(
         batch, id_col, fp_col,
         max_hamming=m["max_hamming"], n_blocks=m["n_blocks"],
@@ -1985,7 +1964,7 @@ def append_to_hamming_index(
     ``insertInto`` (single table, no journal; the
     :func:`append_to_catalog` argument), dynamic-partition append so
     only the pv partitions the increment touches are written."""
-    m = _hfp_meta(spark, table_prefix)
+    m = _meta_row(spark, f"{table_prefix}_hfp_meta")
     banded = _hfp_banded(
         increment, id_col, fp_col,
         max_hamming=m["max_hamming"], n_blocks=m["n_blocks"],
@@ -2069,15 +2048,6 @@ def _require_integral_id(df: DataFrame, id_col: str, fn: str) -> None:
         )
 
 
-def _quota_meta(spark: SparkSession, table_prefix: str):
-    rows = spark.table(f"{table_prefix}_quota_meta").collect()
-    if len(rows) != 1:
-        raise ValueError(
-            f"{table_prefix}_quota_meta must hold exactly one row"
-        )
-    return rows[0]
-
-
 def quota_admit(
     spark: SparkSession,
     batch: DataFrame,
@@ -2112,7 +2082,7 @@ def quota_admit(
     from data_toolz_spark.operators.sampling import _order_hash
 
     _require_integral_id(batch, id_col, "quota_admit")
-    m = _quota_meta(spark, table_prefix)
+    m = _meta_row(spark, f"{table_prefix}_quota_meta")
     cap, n_parts, seed = (
         int(m["max_per_domain"]),
         int(m["n_partitions"]),
@@ -2164,7 +2134,7 @@ def append_to_quota_ledger(
     dynamic-partition ``insertInto`` touching only the pd partitions
     the batch's domains name."""
     _require_integral_id(admitted, id_col, "append_to_quota_ledger")
-    m = _quota_meta(spark, table_prefix)
+    m = _meta_row(spark, f"{table_prefix}_quota_meta")
     (
         admitted.select(
             F.col(id_col).cast("long").alias("id"),
@@ -2203,6 +2173,22 @@ __all__ += [
 # ids precede B's).
 
 
+def _gram_rows(
+    df: DataFrame, *, n: int, id_col: str, text_col: str
+) -> DataFrame:
+    """Gram-index rows ``(gram, first_id)`` of ``df``: one row per
+    distinct word-``n``-gram hash with its min holding doc id."""
+    from data_toolz_spark.operators.text_analysis import (
+        positioned_gram_hashes,
+    )
+
+    return (
+        positioned_gram_hashes(df, n=n, id_col=id_col, text_col=text_col)
+        .groupBy(F.col("__k").alias("gram"))
+        .agg(F.min("__id").alias("first_id"))
+    )
+
+
 def build_gram_index(
     df: DataFrame,
     table: str,
@@ -2220,18 +2206,10 @@ def build_gram_index(
     grams are ``xxhash64`` longs, so nothing text-sized is stored.
     Index the corpus AS WRITTEN (after any batch span dedup), since
     its grams are what future increments must not repeat."""
-    from data_toolz_spark.operators.text_analysis import (
-        positioned_gram_hashes,
-    )
     from data_toolz_spark.sources.io import DataIO
 
-    grams = (
-        positioned_gram_hashes(df, n=n, id_col=id_col, text_col=text_col)
-        .groupBy(F.col("__k").alias("gram"))
-        .agg(F.min("__id").alias("first_id"))
-    )
     return DataIO().write_bucketed(
-        grams,
+        _gram_rows(df, n=n, id_col=id_col, text_col=text_col),
         table,
         bucket_by=["gram"],
         n_buckets=n_buckets,
@@ -2328,20 +2306,9 @@ def append_to_gram_index(
     New grams anti-join against the bucketed index before the
     ``insertInto`` (one job, job-atomic like the fingerprint
     catalog), keeping one row per distinct gram."""
-    from data_toolz_spark.operators.text_analysis import (
-        positioned_gram_hashes,
-    )
-
     spark = cleaned.sparkSession
-    new_grams = (
-        positioned_gram_hashes(
-            cleaned, n=n, id_col=id_col, text_col=text_col
-        )
-        .groupBy(F.col("__k").alias("gram"))
-        .agg(F.min("__id").alias("first_id"))
-    )
     (
-        new_grams.join(
+        _gram_rows(cleaned, n=n, id_col=id_col, text_col=text_col).join(
             spark.table(index_table).select("gram"),
             on="gram",
             how="left_anti",

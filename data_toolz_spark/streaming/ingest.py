@@ -2,43 +2,76 @@
 
 A document stream lands continuously; every micro-batch must be
 deduplicated against EVERYTHING ever ingested before it reaches the
-corpus — without rescanning the corpus.  This module wires Structured
-Streaming's ``foreachBatch`` to the persistent fingerprint catalog
-(``operators.incremental``): per micro-batch, the novel rows are
-selected by an anti-join that reads the bucketed catalog in place,
-appended to the corpus sink, and their fingerprints folded back into
-the catalog — so batch N+1 is deduplicated against batch N's content
-automatically.
+corpus — without rescanning the corpus.  Each ingest function here wires
+Structured Streaming's ``foreachBatch`` to one persistent index of
+``operators.incremental`` (fingerprint catalog, MinHash band index,
+IVF inverted file, Hamming band table, quota ledger, gram index), so
+batch N+1 is deduplicated against batch N's content automatically.
+Work per micro-batch is sized to the batch: the index is read in place
+and never re-shuffles.
 
-Semantics and scale notes:
+Every ingest function runs the same micro-batch cycle (``_run_cycles``);
+only its step differs.  The step selects the rows to keep and names
+its fold.  The cycle contract:
 
-* Work per micro-batch is sized to the batch (the catalog never
-  re-shuffles — the same property the batch-mode ``novel_documents``
-  plan-asserts).
-* ``foreachBatch`` is at-least-once per epoch: on a retry after a
-  partial failure, re-selected novel rows either still match (catalog
-  append did not land) or anti-join away (it did); the corpus sink
-  append CAN duplicate a batch on retry-after-sink-commit — pair with
+* **Sink before fold.**  The kept rows are persisted once, their sink
+  columns appended to ``output_path`` as parquet, and only then does
+  the fold run: the function's side writes, then the index insert.
+* **Fold last.**  ``insertInto`` invalidates every cached plan that
+  reads the index — including the kept frame's own selection — so
+  anything run after the fold would re-select against the UPDATED
+  index and see nothing new.
+* **At-least-once per epoch.**  A retry after the sink commit but
+  before the fold can append the batch to the sink twice; pair with
   an idempotent sink (e.g. overwrite-by-batch-id partitions) when
-  exactly-once matters.  Within-batch duplicates collapse to the
-  min-id representative before the sink sees them.
+  exactly-once matters.  What a retry AFTER the fold does is each
+  function's replay argument (its docstring).
+* **Release on success and failure.**  The kept frame, every frame the
+  step persisted and the intermediates the incremental operators
+  persist are registered with ``cache.track``, and ``cache.release``
+  runs when the batch ends, whether it committed or raised — a died
+  batch pins nothing for the stream's life.  (``cache.release`` frees
+  every tracked frame of the session, not only this batch's.)
+
+``availableNow`` drains the backlog then stops: each ingest function is
+one call per ingestion cycle, and the checkpoint carries the source
+offsets so a rerun never re-reads a processed file.
 """
 
 from __future__ import annotations
 
+from typing import Callable
+
 from pyspark.sql import DataFrame
 
-from data_toolz_spark.operators.incremental import (
-    append_to_catalog,
-    novel_documents,
-)
+from data_toolz_spark.cache import release, track
 
 
-def _drain(stream_df: DataFrame, process_batch, checkpoint_dir: str) -> None:
-    """Run ``process_batch`` over every micro-batch of the available
-    backlog, then stop (``availableNow``): each ingest function is one
-    call per ingestion cycle, and the checkpoint carries the source
-    offsets so a rerun never re-reads a processed file."""
+def _run_cycles(
+    stream_df: DataFrame,
+    step: Callable[
+        [DataFrame, int], tuple[DataFrame, Callable[[DataFrame], None]]
+    ],
+    *,
+    sink_cols: list[str],
+    output_path: str,
+    checkpoint_dir: str,
+) -> None:
+    """Drain the available backlog through the module's micro-batch
+    cycle.  ``step(batch_df, batch_id)`` returns the frame to keep and
+    its fold; the cycle persists the kept frame, appends its
+    ``sink_cols`` to ``output_path``, calls ``fold(kept)`` last and
+    releases every tracked frame (module docstring)."""
+
+    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
+        try:
+            kept, fold = step(batch_df, batch_id)
+            kept = track(kept.persist())
+            kept.select(*sink_cols).write.mode("append").parquet(output_path)
+            fold(kept)
+        finally:
+            release()
+
     (
         stream_df.writeStream.foreachBatch(process_batch)
         .option("checkpointLocation", checkpoint_dir)
@@ -59,16 +92,17 @@ def run_dedup_ingest(
     sketch_table: str | None = None,
     index_prefix: str | None = None,
 ) -> None:
-    """Drain the available stream backlog into a deduplicated corpus.
+    """Drain the available stream backlog into a deduplicated corpus
+    (the module's cycle).
 
-    Per micro-batch: anti-join against ``catalog_table`` (which must
-    exist — build it with :func:`build_fingerprint_catalog
+    Step: anti-join against ``catalog_table`` (which must exist —
+    build it with :func:`build_fingerprint_catalog
     <data_toolz_spark.operators.incremental.build_fingerprint_catalog>`,
-    possibly over an empty frame), append the novel rows (original
-    columns) to ``output_path`` as parquet, fold their fingerprints
-    into the catalog.  ``availableNow`` drains then stops — rerun per
-    ingestion cycle; the checkpoint carries source offsets so replayed
-    files are never re-read.
+    possibly over an empty frame); within-batch duplicates collapse to
+    the min-id representative.  The novel rows (original columns) go to
+    the sink; the fold inserts their fingerprints into the catalog.  A
+    retry after the fold re-selects nothing: the replayed rows now
+    anti-join away.
 
     ``sketch_table`` (optional) appends one HLL sketch row per batch —
     ``(batch_id, n_rows, sketch)`` over the novel ids — so "how many
@@ -86,28 +120,23 @@ def run_dedup_ingest(
     (``count_distinct`` semantics), run ``compact_dataset`` or a
     periodic ``distinct`` rewrite to reclaim the space.
     """
-    in_cols = stream_df.columns
+    from pyspark.sql import functions as F
 
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        from pyspark.sql import functions as F
+    from data_toolz_spark.operators.incremental import (
+        append_to_catalog,
+        novel_documents,
+    )
 
-        spark = batch_df.sparkSession
+    def step(batch_df: DataFrame, batch_id: int):
         novel = novel_documents(
-            spark,
+            batch_df.sparkSession,
             batch_df,
             catalog_table,
             text_col=text_col,
             id_col=id_col,
         )
-        # one pass over the anti-join result feeds all writes.  The
-        # catalog fold must come LAST: insertInto invalidates every
-        # cached plan referencing the catalog table — including
-        # ``novel`` itself — and a consumer running after the fold
-        # would re-evaluate the anti-join against the UPDATED catalog
-        # and see zero novel rows.
-        novel = novel.persist()
-        try:
-            novel.select(*in_cols).write.mode("append").parquet(output_path)
+
+        def fold(novel: DataFrame) -> None:
             if sketch_table:
                 from data_toolz_spark.functions.sketches import hll_sketch
 
@@ -133,10 +162,16 @@ def run_dedup_ingest(
                     text_col=text_col,
                 )
             append_to_catalog(novel, catalog_table, id_col=id_col)
-        finally:
-            novel.unpersist()
 
-    _drain(stream_df, process_batch, checkpoint_dir)
+        return novel, fold
+
+    _run_cycles(
+        stream_df,
+        step,
+        sink_cols=stream_df.columns,
+        output_path=output_path,
+        checkpoint_dir=checkpoint_dir,
+    )
 
 
 def run_near_dup_ingest(
@@ -151,11 +186,11 @@ def run_near_dup_ingest(
 ) -> None:
     """NEAR-duplicate streaming ingestion against the persistent
     MinHash band index — the fuzzy twin of :func:`run_dedup_ingest`
-    (r7): every micro-batch is mined with
+    (r7), on the module's cycle: every micro-batch is mined with
     ``incremental_near_duplicates`` (the index's bucketed tables read
     in place, only the batch shuffles), near-dup batch docs are
-    dropped, survivors append to the corpus sink, and the SURVIVORS
-    fold back into the index so batch N+1 dedups against batch N.
+    dropped, survivors go to the sink, and the SURVIVORS fold back
+    into the index so batch N+1 dedups against batch N.
 
     Drop policy (greedy, batch-sized joins): a batch document is
     dropped when it pairs with ANY already-indexed document (the
@@ -170,18 +205,14 @@ def run_near_dup_ingest(
     lowering the index threshold at build time, not by indexing
     drops.
 
-    Failure semantics: ``foreachBatch`` is at-least-once per epoch.
-    The sink append runs BEFORE the index fold, so a retry after
-    sink-commit-but-before-fold can duplicate output rows (same
-    contract as :func:`run_dedup_ingest` — pair with an idempotent
-    sink when exactly-once matters); a retry after the fold drops the
-    whole replayed batch via an EXPLICIT already-indexed-id check
-    (batch ids semi-joined against the members table — r8; mining no
-    longer emits the self-pairs the drop used to lean on) and writes
-    nothing new.  A job death INSIDE the fold leaves the index
-    journaled-dirty: the next batch's mining refuses it with the
-    ``repair_minhash_index`` instruction — the stream fails loudly
-    instead of mining a half-appended index.
+    Replay: a retry after the fold drops the whole replayed batch via
+    an EXPLICIT already-indexed-id check (batch ids semi-joined
+    against the members table — r8; mining no longer emits the
+    self-pairs the drop used to lean on) and writes nothing new.  A
+    job death INSIDE the fold leaves the index journaled-dirty: the
+    next batch's mining refuses it with the ``repair_minhash_index``
+    instruction — the stream fails loudly instead of mining a
+    half-appended index.
 
     Replay-check gating (r9, VERDICT r8 item 5): the members
     semi-join is an O(index) id-column scan, which the common
@@ -209,94 +240,87 @@ def run_near_dup_ingest(
     jaccard, batch_id)`` pairs per batch — the audit trail for
     threshold tuning; at-least-once like every side output here.
     """
+    from pyspark.sql import functions as F
+
     from data_toolz_spark.operators.incremental import (
         append_to_minhash_index,
         compact_minhash_journal,
         incremental_near_duplicates,
     )
 
-    in_cols = stream_df.columns
+    hwm_table = f"{index_prefix}_mh_ingest_hwm"
 
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        from pyspark.sql import functions as F
-
-        from data_toolz_spark.cache import release
-
+    def step(batch_df: DataFrame, batch_id: int):
         spark = batch_df.sparkSession
-        pairs = None
-        survivors = None
-        try:
-            pairs = incremental_near_duplicates(
+        pairs = track(
+            incremental_near_duplicates(
                 spark,
                 batch_df,
                 index_prefix,
                 id_col=id_col,
                 text_col=text_col,
             ).persist()
-            ids = batch_df.select(F.col(id_col).alias("__mid")).distinct()
-            # explicit replay drop (r8), GATED on the fold high-water
-            # mark (r9): a batch id already in the members table was
-            # folded by a previous (crashed-after-fold) attempt of this
-            # epoch — drop it.  The hwm is written before every fold,
-            # so batch_id > hwm proves no prior fold of this epoch and
-            # the O(index) members scan is skipped entirely; when the
-            # check does run it is a map-side filter against the
-            # broadcast batch ids (increment-sized output, no corpus
-            # shuffle).  Mining's id_a < id_b contract is strict, so on
-            # a true replay this check is the ONLY thing standing
-            # between it and duplicate output.
-            hwm_table = f"{index_prefix}_mh_ingest_hwm"
-            try:
-                # refresh first: the previous batch OVERWROTE this
-                # table, and a stale file-listing cache would otherwise
-                # throw FILE_NOT_EXIST here — which the fallback would
-                # silently read as "no mark", un-gating a real replay
-                spark.catalog.refreshTable(hwm_table)
-                hwm = spark.table(hwm_table).first()["hwm"]
-            except Exception:
-                hwm = -1  # no mark yet — nothing ever started a fold
-            if batch_id <= hwm:
-                replayed = (
-                    spark.table(f"{index_prefix}_mh_members")
-                    .join(
-                        F.broadcast(ids),
-                        on=F.col("id") == F.col("__mid"),
-                    )
-                    .select(F.col("id").alias("__drop"))
-                    .distinct()
+        )
+        ids = batch_df.select(F.col(id_col).alias("__mid")).distinct()
+        # explicit replay drop (r8), GATED on the fold high-water
+        # mark (r9): a batch id already in the members table was
+        # folded by a previous (crashed-after-fold) attempt of this
+        # epoch — drop it.  The hwm is written before every fold,
+        # so batch_id > hwm proves no prior fold of this epoch and
+        # the O(index) members scan is skipped entirely; when the
+        # check does run it is a map-side filter against the
+        # broadcast batch ids (increment-sized output, no corpus
+        # shuffle).  Mining's id_a < id_b contract is strict, so on
+        # a true replay this check is the ONLY thing standing
+        # between it and duplicate output.
+        try:
+            # refresh first: the previous batch OVERWROTE this
+            # table, and a stale file-listing cache would otherwise
+            # throw FILE_NOT_EXIST here — which the fallback would
+            # silently read as "no mark", un-gating a real replay
+            spark.catalog.refreshTable(hwm_table)
+            hwm = spark.table(hwm_table).first()["hwm"]
+        except Exception:
+            hwm = -1  # no mark yet — nothing ever started a fold
+        if batch_id <= hwm:
+            replayed = (
+                spark.table(f"{index_prefix}_mh_members")
+                .join(
+                    F.broadcast(ids),
+                    on=F.col("id") == F.col("__mid"),
                 )
-            else:
-                # empty frame with the id column's exact type, no
-                # members-table reference anywhere in the plan
-                replayed = ids.limit(0).select(
-                    F.col("__mid").alias("__drop")
-                )
-            # every mined pair touches the batch and has id_a < id_b,
-            # so the doc to drop is id_b when it is a batch doc (its
-            # partner is indexed or a lower-id batch doc) and id_a
-            # otherwise (id_b is the indexed side)
-            drops = (
-                pairs.join(
-                    ids.withColumnRenamed("__mid", "id_b").withColumn(
-                        "__b_in", F.lit(True)
-                    ),
-                    on="id_b",
-                    how="left",
-                )
-                .select(
-                    F.when(F.col("__b_in"), F.col("id_b"))
-                    .otherwise(F.col("id_a"))
-                    .alias("__drop")
-                )
-                .unionByName(replayed)
+                .select(F.col("id").alias("__drop"))
                 .distinct()
             )
-            survivors = batch_df.join(
-                drops, on=F.col(id_col) == F.col("__drop"), how="left_anti"
-            ).persist()
-            survivors.select(*in_cols).write.mode("append").parquet(
-                output_path
+        else:
+            # empty frame with the id column's exact type, no
+            # members-table reference anywhere in the plan
+            replayed = ids.limit(0).select(F.col("__mid").alias("__drop"))
+        # every mined pair touches the batch and has id_a < id_b,
+        # so the doc to drop is id_b when it is a batch doc (its
+        # partner is indexed or a lower-id batch doc) and id_a
+        # otherwise (id_b is the indexed side)
+        drops = (
+            pairs.join(
+                ids.withColumnRenamed("__mid", "id_b").withColumn(
+                    "__b_in", F.lit(True)
+                ),
+                on="id_b",
+                how="left",
             )
+            .select(
+                F.when(F.col("__b_in"), F.col("id_b"))
+                .otherwise(F.col("id_a"))
+                .alias("__drop")
+            )
+            .unionByName(replayed)
+            .distinct()
+        )
+        survivors = batch_df.join(
+            drops, on=F.col(id_col) == F.col("__drop"), how="left_anti"
+        )
+
+        def fold(survivors: DataFrame) -> None:
             if pairs_table:
                 (
                     pairs.withColumn("batch_id", F.lit(batch_id))
@@ -316,9 +340,6 @@ def run_near_dup_ingest(
             spark.createDataFrame(
                 [(int(max(hwm, batch_id)),)], "hwm long"
             ).write.mode("overwrite").saveAsTable(hwm_table)
-            # fold LAST (journaled): insertInto invalidates cached
-            # plans over the index tables, and a consumer after the
-            # fold would re-mine against the updated index
             append_to_minhash_index(
                 spark,
                 survivors,
@@ -331,19 +352,16 @@ def run_near_dup_ingest(
             # no-op whenever any txn is still open
             if batch_id % 64 == 63:
                 compact_minhash_journal(spark, index_prefix)
-        finally:
-            # incremental mining/appending track their internal
-            # persists; release them per batch or they accumulate for
-            # the life of the stream — and the two frames persisted
-            # directly above must release on the FAILURE path too (a
-            # died batch otherwise pins them for the stream's life)
-            if pairs is not None:
-                pairs.unpersist()
-            if survivors is not None:
-                survivors.unpersist()
-            release()
 
-    _drain(stream_df, process_batch, checkpoint_dir)
+        return survivors, fold
+
+    _run_cycles(
+        stream_df,
+        step,
+        sink_cols=stream_df.columns,
+        output_path=output_path,
+        checkpoint_dir=checkpoint_dir,
+    )
 
 
 def run_vector_ingest(
@@ -359,22 +377,20 @@ def run_vector_ingest(
 ) -> None:
     """Embedding-stream ingestion with near-dup removal against the
     persistent IVF index — the VECTOR twin of
-    :func:`run_near_dup_ingest` (r9): per micro-batch, each vector
-    queries the index (probe-cell partition pruning — the inverted
-    file's unprobed partitions are never read), batch vectors whose
-    nearest indexed cosine ≥ ``threshold`` are dropped, within-batch
-    near-dups collapse to the min-id representative (batch-sized
-    blocked Gram work), survivors append to the corpus sink and fold
-    into the inverted file — so batch N+1 dedups against batch N.
+    :func:`run_near_dup_ingest` (r9), on the module's cycle: per
+    micro-batch, each vector queries the index (probe-cell partition
+    pruning — the inverted file's unprobed partitions are never read),
+    batch vectors whose nearest indexed cosine ≥ ``threshold`` are
+    dropped, within-batch near-dups collapse to the min-id
+    representative (batch-sized blocked Gram work), survivors go to
+    the sink and fold into the inverted file — so batch N+1 dedups
+    against batch N.
 
     Requires a FLAT index (built without ``pq_m``): the drop decision
     needs exact cosines, and the PQ path returns ADC estimates; a PQ
     index raises with instructions rather than silently thresholding
     approximate scores.
 
-    Failure semantics: at-least-once per epoch, sink-append before
-    index-fold (retry after sink-commit can duplicate sink rows —
-    idempotent sink when exactly-once matters, the module contract).
     Replay protection needs NO side table here, unlike the MinHash
     ingest: a retry AFTER the fold re-queries the index that now
     CONTAINS the batch — every replayed vector matches itself at
@@ -389,25 +405,18 @@ def run_vector_ingest(
     if not 0 < threshold <= 1:
         raise ValueError("run_vector_ingest: threshold must be in (0, 1]")
 
-    in_cols = stream_df.columns
+    from pyspark.sql import functions as F
 
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        from pyspark.sql import functions as F
+    from data_toolz_spark.operators.dedup import near_duplicate_drop_list
+    from data_toolz_spark.operators.incremental import (
+        _load_centroids,
+        _meta_pq_m,
+        append_to_ivf_index,
+        ivf_query_index,
+    )
+    from data_toolz_spark.operators.similarity import cosine_near_duplicates
 
-        from data_toolz_spark.cache import release
-        from data_toolz_spark.operators.incremental import (
-            _load_centroids,
-            _meta_pq_m,
-            append_to_ivf_index,
-            ivf_query_index,
-        )
-        from data_toolz_spark.operators.dedup import (
-            near_duplicate_drop_list,
-        )
-        from data_toolz_spark.operators.similarity import (
-            cosine_near_duplicates,
-        )
-
+    def step(batch_df: DataFrame, batch_id: int):
         spark = batch_df.sparkSession
         meta, _ = _load_centroids(spark, index_prefix)
         if _meta_pq_m(meta) is not None:
@@ -418,44 +427,41 @@ def run_vector_ingest(
                 "index for ingest-time dedup (or dedup offline with "
                 "refine_with re-ranking)."
             )
-        survivors = None
-        try:
-            batch_df = batch_df.persist()
-            hits = ivf_query_index(
-                spark,
+        batch_df = track(batch_df.persist())
+        hits = ivf_query_index(
+            spark,
+            batch_df,
+            index_prefix,
+            query_id=id_col,
+            query_vec=vec_col,
+            k=1,
+            n_probe=n_probe,
+        )
+        index_dups = hits.filter(F.col("cosine") >= threshold).select(
+            F.col("query_id").alias("__drop")
+        )
+        # Within-batch collapse must be the TRUE min-id-per-
+        # component representative: a greedy "drop every id_b"
+        # over-drops on transitive chains (A~B, B~C, A≁C drops
+        # both B and C, leaving C with no surviving
+        # representative).  near_duplicate_drop_list runs connected
+        # components over the batch-sized pair graph — a handful of
+        # tiny driver-looped jobs per micro-batch, bounded by the
+        # batch.
+        within = near_duplicate_drop_list(
+            cosine_near_duplicates(
                 batch_df,
-                index_prefix,
-                query_id=id_col,
-                query_vec=vec_col,
-                k=1,
-                n_probe=n_probe,
-            )
-            index_dups = hits.filter(
-                F.col("cosine") >= threshold
-            ).select(F.col("query_id").alias("__drop"))
-            # Within-batch collapse must be the TRUE min-id-per-
-            # component representative: a greedy "drop every id_b"
-            # over-drops on transitive chains (A~B, B~C, A≁C drops
-            # both B and C, leaving C with no surviving
-            # representative).  near_duplicate_drop_list runs connected
-            # components over the batch-sized pair graph — a handful of
-            # tiny driver-looped jobs per micro-batch, bounded by the
-            # batch.
-            within = near_duplicate_drop_list(
-                cosine_near_duplicates(
-                    batch_df,
-                    id_col=id_col,
-                    vec_col=vec_col,
-                    threshold=threshold,
-                ),
-            ).select(F.col("drop_id").alias("__drop"))
-            drops = index_dups.unionByName(within).distinct()
-            survivors = batch_df.join(
-                drops, on=F.col(id_col) == F.col("__drop"), how="left_anti"
-            ).persist()
-            survivors.select(*in_cols).write.mode("append").parquet(
-                output_path
-            )
+                id_col=id_col,
+                vec_col=vec_col,
+                threshold=threshold,
+            ),
+        ).select(F.col("drop_id").alias("__drop"))
+        drops = index_dups.unionByName(within).distinct()
+        survivors = batch_df.join(
+            drops, on=F.col(id_col) == F.col("__drop"), how="left_anti"
+        )
+
+        def fold(survivors: DataFrame) -> None:
             append_to_ivf_index(
                 spark,
                 survivors,
@@ -463,13 +469,16 @@ def run_vector_ingest(
                 id_col=id_col,
                 vec_col=vec_col,
             )
-        finally:
-            batch_df.unpersist()
-            if survivors is not None:
-                survivors.unpersist()
-            release()
 
-    _drain(stream_df, process_batch, checkpoint_dir)
+        return survivors, fold
+
+    _run_cycles(
+        stream_df,
+        step,
+        sink_cols=stream_df.columns,
+        output_path=output_path,
+        checkpoint_dir=checkpoint_dir,
+    )
 
 
 def run_fingerprint_ingest(
@@ -490,85 +499,76 @@ def run_fingerprint_ingest(
     ``video_fingerprint`` all run on streaming frames — they are
     ``mapInPandas`` kernels) and point ``fp_col`` at it.
 
-    Per micro-batch: the batch's banded rows name the pv partitions
-    worth probing (unprobed index partitions are never read,
-    ``incremental.hamming_query_index``), batch rows whose Hamming
-    distance to ANY indexed fingerprint is ≤ the index's max_hamming
-    are dropped, within-batch near-dups collapse to the min-id
-    component representative (``fingerprint_components`` — skew-safe,
-    exact transitive closure), survivors append to the corpus sink and
-    fold into the band table — so batch N+1 dedups against batch N.
+    Step (the module's cycle): the batch's banded rows name the pv
+    partitions worth probing (unprobed index partitions are never
+    read, ``incremental.hamming_query_index``), batch rows whose
+    Hamming distance to ANY indexed fingerprint is ≤ the index's
+    max_hamming are dropped, within-batch near-dups collapse to the
+    min-id component representative (``fingerprint_components`` —
+    skew-safe, exact transitive closure), survivors go to the sink
+    and fold into the band table — so batch N+1 dedups against
+    batch N.
 
-    Failure semantics: at-least-once per epoch, sink-append before
-    index-fold.  Replay protection needs NO side table — the single
-    band table appends in one job-atomic ``insertInto``, and a retry
-    AFTER the fold re-probes an index that now CONTAINS the batch:
-    every replayed fingerprint matches itself at Hamming 0 and drops
-    (the :func:`run_vector_ingest` argument).  Rows with NULL
-    fingerprints (undecodable blobs) are REJECTED, not passed through:
-    they have no self-match, so a replay would duplicate them in the
-    sink — route undecodables to a quarantine path upstream.
+    Replay protection needs NO side table — the single band table
+    appends in one job-atomic ``insertInto``, and a retry AFTER the
+    fold re-probes an index that now CONTAINS the batch: every
+    replayed fingerprint matches itself at Hamming 0 and drops (the
+    :func:`run_vector_ingest` argument).  Rows with NULL fingerprints
+    (undecodable blobs) are REJECTED, not passed through: they have
+    no self-match, so a replay would duplicate them in the sink —
+    route undecodables to a quarantine path upstream.
     """
-    in_cols = stream_df.columns
+    from pyspark.sql import functions as F
 
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        from pyspark.sql import functions as F
+    from data_toolz_spark.operators.dedup import fingerprint_components
+    from data_toolz_spark.operators.incremental import (
+        _meta_row,
+        append_to_hamming_index,
+        hamming_query_index,
+    )
 
-        from data_toolz_spark.cache import release
-        from data_toolz_spark.operators.dedup import (
-            fingerprint_components,
-        )
-        from data_toolz_spark.operators.incremental import (
-            _hfp_meta,
-            append_to_hamming_index,
-            hamming_query_index,
-        )
-
+    def step(batch_df: DataFrame, batch_id: int):
         spark = batch_df.sparkSession
-        m = _hfp_meta(spark, index_prefix)
-        survivors = None
-        try:
-            batch_df = batch_df.filter(
-                F.col(fp_col).isNotNull()
-            ).persist()
-            hits = hamming_query_index(
-                spark, batch_df, index_prefix,
-                id_col=id_col, fp_col=fp_col,
-            )
-            index_dups = hits.select(
-                F.col("query_id").alias("__drop")
-            ).distinct()
-            comp = fingerprint_components(
-                batch_df,
-                id_col,
-                fp_col,
-                max_hamming=int(m["max_hamming"]),
-                n_blocks=int(m["n_blocks"]),
-                bits=int(m["bits"]),
-            )
-            within = comp.filter(
-                F.col("id") != F.col("component")
-            ).select(F.col("id").alias("__drop"))
-            drops = index_dups.unionByName(within).distinct()
-            survivors = batch_df.join(
-                drops,
-                on=F.col(id_col).cast("long") == F.col("__drop"),
-                how="left_anti",
-            ).persist()
-            survivors.select(*in_cols).write.mode("append").parquet(
-                output_path
-            )
+        m = _meta_row(spark, f"{index_prefix}_hfp_meta")
+        batch_df = track(batch_df.filter(F.col(fp_col).isNotNull()).persist())
+        hits = hamming_query_index(
+            spark, batch_df, index_prefix,
+            id_col=id_col, fp_col=fp_col,
+        )
+        index_dups = hits.select(F.col("query_id").alias("__drop")).distinct()
+        comp = fingerprint_components(
+            batch_df,
+            id_col,
+            fp_col,
+            max_hamming=int(m["max_hamming"]),
+            n_blocks=int(m["n_blocks"]),
+            bits=int(m["bits"]),
+        )
+        within = comp.filter(F.col("id") != F.col("component")).select(
+            F.col("id").alias("__drop")
+        )
+        drops = index_dups.unionByName(within).distinct()
+        survivors = batch_df.join(
+            drops,
+            on=F.col(id_col).cast("long") == F.col("__drop"),
+            how="left_anti",
+        )
+
+        def fold(survivors: DataFrame) -> None:
             append_to_hamming_index(
                 spark, survivors, index_prefix,
                 id_col=id_col, fp_col=fp_col,
             )
-        finally:
-            batch_df.unpersist()
-            if survivors is not None:
-                survivors.unpersist()
-            release()
 
-    _drain(stream_df, process_batch, checkpoint_dir)
+        return survivors, fold
+
+    _run_cycles(
+        stream_df,
+        step,
+        sink_cols=stream_df.columns,
+        output_path=output_path,
+        checkpoint_dir=checkpoint_dir,
+    )
 
 
 def run_quota_ingest(
@@ -587,21 +587,19 @@ def run_quota_ingest(
     the URL tier's slot in the batch-vs-streaming matrix the way
     ``run_fingerprint_ingest`` closed the modality tiers'.
 
-    Per micro-batch: each doc's host (``host_of`` over ``url_col``,
-    or a precomputed ``host_col``) keys into the persistent ledger
+    Step (the module's cycle): each doc's host (``host_of`` over
+    ``url_col``, or a precomputed ``host_col``) keys into the
+    persistent ledger
     (:func:`~data_toolz_spark.operators.incremental.build_quota_ledger`
     — accepted rows partitioned by domain hash, so only the
     partitions the batch's domains name are read), the batch's docs
     compete for each site's REMAINING allowance under the
-    deterministic hash lottery, admitted docs append to the corpus
-    sink, and their (id, domain) rows fold into the ledger — batch
-    N+1 sees batch N's consumption.
+    deterministic hash lottery, admitted docs go to the sink, and
+    their (id, domain) rows fold into the ledger — batch N+1 sees
+    batch N's consumption.
 
-    Failure semantics: at-least-once per epoch, sink-append before
-    ledger-fold (the module convention).  A retry AFTER the fold
-    admits nothing (every replayed id is already a ledger row), so
-    replays cannot oversubscribe a site; the retry window between
-    sink and ledger can duplicate sink rows only — dedup downstream.
+    Replay: a retry AFTER the fold admits nothing (every replayed id
+    is already a ledger row), so replays cannot oversubscribe a site.
     Docs with NULL hosts are REJECTED (no quota key, no replay row)
     — quarantine upstream.
     """
@@ -609,48 +607,41 @@ def run_quota_ingest(
         raise ValueError(
             "run_quota_ingest: pass exactly one of url_col / host_col"
         )
-    in_cols = stream_df.columns
+    from pyspark.sql import functions as F
 
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        from pyspark.sql import functions as F
+    from data_toolz_spark.operators.incremental import (
+        append_to_quota_ledger,
+        quota_admit,
+    )
+    from data_toolz_spark.operators.urls import host_of
 
-        from data_toolz_spark.cache import release
-        from data_toolz_spark.operators.incremental import (
-            append_to_quota_ledger,
-            quota_admit,
-        )
-        from data_toolz_spark.operators.urls import host_of
+    dom = host_of(F.col(url_col)) if url_col is not None else F.col(host_col)
 
+    def step(batch_df: DataFrame, batch_id: int):
         spark = batch_df.sparkSession
-        dom = (
-            host_of(F.col(url_col)) if url_col is not None
-            else F.col(host_col)
+        admitted = quota_admit(
+            spark,
+            batch_df.withColumn("__domain", dom),
+            ledger_prefix,
+            id_col=id_col,
+            domain_col="__domain",
         )
-        admitted = None
-        try:
-            admitted = quota_admit(
-                spark,
-                batch_df.withColumn("__domain", dom),
-                ledger_prefix,
-                id_col=id_col,
-                domain_col="__domain",
-            ).persist()
-            admitted.select(*in_cols).write.mode("append").parquet(
-                output_path
-            )
-            # ledger fold LAST: insertInto invalidates cached plans
-            # referencing the ledger (including admitted's own
-            # anti-join) — the run_dedup_ingest ordering argument
+
+        def fold(admitted: DataFrame) -> None:
             append_to_quota_ledger(
                 spark, admitted, ledger_prefix,
                 id_col=id_col, domain_col="__domain",
             )
-        finally:
-            if admitted is not None:
-                admitted.unpersist()
-            release()
 
-    _drain(stream_df, process_batch, checkpoint_dir)
+        return admitted, fold
+
+    _run_cycles(
+        stream_df,
+        step,
+        sink_cols=stream_df.columns,
+        output_path=output_path,
+        checkpoint_dir=checkpoint_dir,
+    )
 
 
 def run_span_dedup_ingest(
@@ -665,39 +656,34 @@ def run_span_dedup_ingest(
     id_col: str = "doc_id",
 ) -> None:
     """Drain the stream into a corpus with cross-batch EXACT-SUBSTRING
-    dedup (X94): per micro-batch, every ``n``-word span already owned
-    by the persistent gram index — or repeated within the batch — is
-    cut (``operators.incremental.dedup_spans_incremental``), the
-    cleaned rows (plus ``n_dropped_words``) append to ``output_path``,
-    and the cleaned text's grams fold back into the index, so batch
-    N+1 cannot re-ingest a passage batch N landed.
+    dedup (X94), on the module's cycle: per micro-batch, every
+    ``n``-word span already owned by the persistent gram index — or
+    repeated within the batch — is cut
+    (``operators.incremental.dedup_spans_incremental``), the cleaned
+    rows (plus ``n_dropped_words``) go to the sink, and the cleaned
+    text's grams fold back into the index, so batch N+1 cannot
+    re-ingest a passage batch N landed.
 
-    Same consistency model as :func:`run_dedup_ingest`: the index fold
-    is one job-atomic ``insertInto`` and comes LAST (it invalidates
-    cached plans reading the index — including this batch's own cut
-    plan); the anti-join inside the fold makes a replayed epoch's fold
-    idempotent, while the sink append can duplicate rows on
-    retry-after-sink-commit — pair with an idempotent sink when
-    exactly-once matters.
+    The index fold is one job-atomic ``insertInto``, and its anti-join
+    makes a replayed epoch's fold idempotent.
     """
     from data_toolz_spark.operators.incremental import (
         append_to_gram_index,
         dedup_spans_incremental,
     )
 
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
+    def step(batch_df: DataFrame, batch_id: int):
         cleaned = dedup_spans_incremental(
-            spark,
+            batch_df.sparkSession,
             batch_df,
             index_table,
             n=n,
             min_docs=min_docs,
             id_col=id_col,
             text_col=text_col,
-        ).persist()
-        try:
-            cleaned.write.mode("append").parquet(output_path)
+        )
+
+        def fold(cleaned: DataFrame) -> None:
             append_to_gram_index(
                 cleaned,
                 index_table,
@@ -705,10 +691,18 @@ def run_span_dedup_ingest(
                 id_col=id_col,
                 text_col=text_col,
             )
-        finally:
-            cleaned.unpersist()
 
-    _drain(stream_df, process_batch, checkpoint_dir)
+        return cleaned, fold
+
+    # dedup_spans_incremental's columns: the batch's, text rewritten in
+    # place, plus its count column (in place too if the batch has one)
+    _run_cycles(
+        stream_df,
+        step,
+        sink_cols=list(dict.fromkeys([*stream_df.columns, "n_dropped_words"])),
+        output_path=output_path,
+        checkpoint_dir=checkpoint_dir,
+    )
 
 
 __all__ = [

@@ -500,6 +500,63 @@ def test_minhash_repair_itself_crashing_is_recoverable(
             spark.sql(f"DROP TABLE IF EXISTS {prefix}_{t}")
 
 
+def test_minhash_index_rows_are_split_invariant(spark, tmp_path):
+    """Build, append and repair take their rows from one function, so an
+    index grown by build(A) then append(B) holds exactly the rows of
+    build(A ∪ B) — bands, sets and members compared row for row.  A and
+    B share fingerprints (docs 2k and 2k+1 below 60 are copies) and
+    each has its own, so the append's filters both keep and drop."""
+    from data_toolz_spark.catalog import drop_stale_table
+    from data_toolz_spark.operators.incremental import (
+        append_to_minhash_index,
+        build_minhash_index,
+    )
+
+    tables = ("mh_meta", "mh_bands", "mh_sets", "mh_members", "mh_journal")
+    for prefix in ("mhidx_split", "mhidx_whole"):
+        for t in tables:
+            drop_stale_table(spark, f"{prefix}_{t}")
+
+    def text(k):
+        return " ".join(
+            f"w{(k * 13 + j * 7) % 101}" for j in range(10 + k % 5)
+        )
+
+    docs = spark.createDataFrame(
+        [(i, text(i // 2 if i < 60 else i)) for i in range(120)],
+        "doc_id long, text string",
+    )
+    build_minhash_index(
+        docs.filter(F.col("doc_id") % 2 == 0), "mhidx_split",
+        n_buckets=4, path=str(tmp_path / "split"),
+    )
+    append_to_minhash_index(
+        spark, docs.filter(F.col("doc_id") % 2 == 1), "mhidx_split"
+    )
+    build_minhash_index(
+        docs, "mhidx_whole", n_buckets=4, path=str(tmp_path / "whole")
+    )
+
+    def rows(prefix, table):
+        return sorted(
+            tuple(r) for r in spark.table(f"{prefix}_{table}").collect()
+        )
+
+    for table in ("mh_bands", "mh_sets", "mh_members"):
+        got = rows("mhidx_split", table)
+        assert got, table
+        assert got == rows("mhidx_whole", table), table
+    parities = {}
+    for fp, doc_id in rows("mhidx_whole", "mh_members"):
+        parities.setdefault(fp, set()).add(doc_id % 2)
+    assert any(p == {0, 1} for p in parities.values()), (
+        "the split must share fingerprints across its two halves"
+    )
+    for prefix in ("mhidx_split", "mhidx_whole"):
+        for t in tables:
+            spark.sql(f"DROP TABLE IF EXISTS {prefix}_{t}")
+
+
 def test_catalog_side_joins_without_exchange(spark, corpus, tmp_path):
     """The property that makes the pattern scale: the (huge) catalog is
     pre-bucketed, so the anti-join plan has NO Exchange above the

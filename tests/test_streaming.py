@@ -941,6 +941,54 @@ def test_streaming_quota_ingest_across_cycles(spark, tmp_path):
         drop_stale_table(spark, f"{prefix}_{t}")
 
 
+def test_ingest_cycle_sinks_before_fold_and_releases_on_failure(
+    spark, tmp_path, monkeypatch
+):
+    """The ingest cycle contract (``streaming.ingest`` module
+    docstring), on ``run_quota_ingest``: the sink append lands BEFORE the
+    fold, so a fold that dies leaves the admitted rows in the sink and
+    none in the ledger; the stream fails loudly; and the failed batch
+    releases every frame it persisted."""
+    import data_toolz_spark.operators.incremental as incremental
+    from data_toolz_spark import cache
+    from data_toolz_spark.catalog import drop_stale_table
+    from data_toolz_spark.streaming.ingest import run_quota_ingest
+
+    src = str(tmp_path / "csrc")
+    out = str(tmp_path / "ccorpus")
+    prefix = "t_qcycle"
+    for t in ("quota_meta", "quota_rows"):
+        drop_stale_table(spark, f"{prefix}_{t}")
+    incremental.build_quota_ledger(
+        spark, prefix, max_per_domain=2, n_partitions=4, seed=5,
+        path=str(tmp_path / "cledger"),
+    )
+    spark.createDataFrame(
+        [(1, "https://a.com/p/1"), (2, "https://b.org/p/2")],
+        "doc_id long, url string",
+    ).write.mode("append").parquet(src)
+
+    def dying_fold(*args, **kwargs):
+        raise RuntimeError("simulated ledger fold death")
+
+    monkeypatch.setattr(incremental, "append_to_quota_ledger", dying_fold)
+    persistent_before = spark.sparkContext._jsc.getPersistentRDDs().size()
+    with pytest.raises(Exception, match="simulated ledger fold death"):
+        run_quota_ingest(
+            spark.readStream.schema("doc_id long, url string").parquet(src),
+            ledger_prefix=prefix, output_path=out,
+            checkpoint_dir=str(tmp_path / "cckpt"),
+            id_col="doc_id", url_col="url",
+        )
+    assert {r["doc_id"] for r in spark.read.parquet(out).collect()} == {1, 2}
+    assert spark.table(f"{prefix}_quota_rows").count() == 0
+    persistent_after = spark.sparkContext._jsc.getPersistentRDDs().size()
+    assert persistent_after <= persistent_before
+    assert cache._TRACKED == []
+    for t in ("quota_meta", "quota_rows"):
+        drop_stale_table(spark, f"{prefix}_{t}")
+
+
 def test_streaming_strata_labeling_with_stored_thresholds(spark, tmp_path):
     """bucket_by_thresholds is stream-safe (r10): thresholds computed
     batch-side (train once), then a readStream frame acquires its
