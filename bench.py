@@ -29,6 +29,9 @@ repeats, not the min.  The raw series survives in ``queries_repeats``
 1-min-loadavg pair per repeat).  ``value`` is computed from the
 minima.  ``--min-of=1`` times each entry once; ``--min-of-all``
 extends repeats to every swept entry (extras and builds included).
+``BENCH_DETAIL_latest.json``, the full payload written next to this
+file, also carries ``queries_codegen_compiles``: the Janino compiles of
+each repeat, so a warm repeat that recompiles shows with no second run.
 
 Each query is forced end-to-end with the ``noop`` sink (full execution,
 no driver-side collect, no disk write) so the measured time is scan +
@@ -120,8 +123,10 @@ def _x_emb_lsh_realistic(spark, sf_dir):
     tables) vs the qid's recall-heavy θ=0.4, n_bits=4/64-table oracle
     setting.  The embeddings testdata has no pair at cosine ≥ 0.9: at
     sf0.1 this emits 0 rows, so it times SRP bucketing and a candidate
-    join whose verify keeps nothing — not an output-parity check
-    (``dedup_embedding``'s θ=0.4 tier checks this path's output)."""
+    join whose verify keeps nothing — not an output-parity check.  This
+    config's output is checked on planted pairs by
+    ``tests/test_scale_paths.py::test_cosine_lsh_scale_config_finds_planted_pairs``
+    (and ``dedup_embedding``'s θ=0.4 tier checks the path at large)."""
     from data_toolz_spark.operators.similarity import (
         cosine_near_duplicates_lsh,
     )
@@ -1185,14 +1190,23 @@ def main() -> int:
             return min_of
         return min_of if name in HEADLINE else 1
 
+    # Janino compiles per repeat: a warm repeat that still compiles
+    # means the generated-class cache no longer holds the working set
+    # (session.DEFAULT_CONF, spark.sql.codegen.cache.maxEntries)
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    compiles: dict[str, list[int]] = {}
+
     def _timed(name: str, fn, k: int = 1) -> None:
         ts: list[float] = []
         lds: list[list[float]] = []
+        cgs: list[int] = []
         for _ in range(k):
             l0 = os.getloadavg()[0]
+            c0 = codegen.METRIC_COMPILATION_TIME().getCount()
             start = time.perf_counter()
             fn()
             ts.append(round(time.perf_counter() - start, 3))
+            cgs.append(codegen.METRIC_COMPILATION_TIME().getCount() - c0)
             lds.append([round(l0, 2), round(os.getloadavg()[0], 2)])
             # between-repeat (and between-entry) hygiene, outside the
             # timer: release operator persists + clear the SQL cache so
@@ -1201,6 +1215,7 @@ def main() -> int:
         timings[name] = min(ts)
         repeats[name] = ts
         loads[name] = lds
+        compiles[name] = cgs
 
     # pre-sweep: build the persistent MinHash index once and time it as
     # its own entry, so the sweep's incremental_minhash_pairs times
@@ -1263,7 +1278,12 @@ def main() -> int:
     # the per-qid map, so every run also writes the complete payload
     # next to bench.py
     try:
-        detail = dict(payload, argv=sys.argv[1:], unix_time=int(time.time()))
+        detail = dict(
+            payload,
+            queries_codegen_compiles=compiles,
+            argv=sys.argv[1:],
+            unix_time=int(time.time()),
+        )
         detail_path = os.path.join(
             os.path.dirname(os.path.abspath(__file__)),
             "BENCH_DETAIL_latest.json",

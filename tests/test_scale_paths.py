@@ -237,6 +237,52 @@ def test_cosine_lsh_equal_bruteforce(spark, embeddings):
     assert len(brute) > 0
 
 
+def test_cosine_lsh_scale_config_finds_planted_pairs(spark):
+    """The bench's ``x_dedup_embedding_lsh_nbits12`` config (θ = 0.9,
+    12-bit signatures, 8 tables) returns exactly the exact join's pairs.
+
+    The bench's ``embeddings`` table has no pair that close, so there
+    the entry emits nothing; here pairs at cosine 0.99, 0.98 and 0.97
+    are planted among random vectors, with a decoy at 0.85 that the
+    verify must drop."""
+    import numpy as np
+
+    rng = np.random.default_rng(7)
+    dim = 64
+    vecs = [rng.standard_normal(dim) for _ in range(40)]
+
+    def at_cosine(v, cos):
+        u = v / np.linalg.norm(v)
+        w = rng.standard_normal(dim)
+        w -= (w @ u) * u
+        w /= np.linalg.norm(w)
+        return cos * u + np.sqrt(1.0 - cos * cos) * w
+
+    planted = {}
+    for src, cos in zip((3, 11, 25, 30), (0.99, 0.98, 0.97, 0.85)):
+        planted[(src, len(vecs))] = cos
+        vecs.append(at_cosine(vecs[src], cos))
+    df = spark.createDataFrame(
+        [(i, [float(x) for x in v]) for i, v in enumerate(vecs)],
+        "vec_id long, embedding array<double>",
+    )
+    exact = {
+        (r["id_a"], r["id_b"]): r["cosine"]
+        for r in cosine_near_duplicates(
+            df, id_col="vec_id", threshold=0.9
+        ).collect()
+    }
+    lsh = {
+        (r["id_a"], r["id_b"]): r["cosine"]
+        for r in cosine_near_duplicates_lsh(
+            df, id_col="vec_id", threshold=0.9,
+            dim=dim, n_bits=12, n_tables=8,
+        ).collect()
+    }
+    assert set(exact) == {p for p, c in planted.items() if c >= 0.9}
+    assert lsh == exact
+
+
 def test_ivf_topk_exact_when_probing_all_cells(spark, embeddings):
     # n_probe == n_centroids probes every inverted-file cell, so IVF
     # must return EXACTLY the brute-force top-k (same tie-break)

@@ -22,6 +22,34 @@ def test_engine_defaults_applied(spark):
     assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
     assert spark.conf.get("spark.sql.parquet.filterPushdown") == "true"
     assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == "1024"
+
+
+def test_codegen_cache_holds_a_warm_pass(spark):
+    """A second pass over 120 frames with distinct generated code
+    compiles nothing.
+
+    Each frame's literal lands in its generated source, so every frame
+    compiles classes of its own (two each, 240 in all).  At Spark's
+    default cache of 100 entries the second pass, walking them in the
+    same order, evicts each class before it comes round again and
+    recompiles all of them."""
+    from pyspark.sql import functions as F
+
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    frames = [
+        spark.range(8).select((F.col("id") * i + i).alias("x"))
+        for i in range(1, 121)
+    ]
+
+    def run_pass() -> int:
+        before = compiles.METRIC_COMPILATION_TIME().getCount()
+        for df in frames:
+            df.write.format("noop").mode("overwrite").save()
+        return compiles.METRIC_COMPILATION_TIME().getCount() - before
+
+    assert run_pass() > 0
+    assert run_pass() == 0
 
 
 def test_endpoint_override_maps_to_s3a(spark):
