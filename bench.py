@@ -31,7 +31,9 @@ minima.  ``--min-of=1`` times each entry once; ``--min-of-all``
 extends repeats to every swept entry (extras and builds included).
 ``BENCH_DETAIL_latest.json``, the full payload written next to this
 file, also carries ``queries_codegen_compiles``: the Janino compiles of
-each repeat, so a warm repeat that recompiles shows with no second run.
+each repeat, so a warm repeat that recompiles shows with no second run,
+and ``queries_shuffle_write_bytes``: the shuffle bytes each repeat's
+executors wrote, after compression.
 
 Each query is forced end-to-end with the ``noop`` sink (full execution,
 no driver-side collect, no disk write) so the measured time is scan +
@@ -1195,18 +1197,32 @@ def main() -> int:
     # (session.DEFAULT_CONF, spark.sql.codegen.cache.maxEntries)
     codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
     compiles: dict[str, list[int]] = {}
+    # shuffle bytes per repeat, as written (after the session's
+    # spark.io.compression.codec): the executors' totalShuffleWrite
+    jsc = spark.sparkContext._jsc.sc()
+    shuffled: dict[str, list[int]] = {}
+
+    def _shuffle_written() -> int:
+        jsc.listenerBus().waitUntilEmpty()
+        execs = jsc.statusStore().executorList(False)
+        return sum(
+            execs.apply(i).totalShuffleWrite() for i in range(execs.size())
+        )
 
     def _timed(name: str, fn, k: int = 1) -> None:
         ts: list[float] = []
         lds: list[list[float]] = []
         cgs: list[int] = []
+        sws: list[int] = []
         for _ in range(k):
             l0 = os.getloadavg()[0]
             c0 = codegen.METRIC_COMPILATION_TIME().getCount()
+            s0 = _shuffle_written()
             start = time.perf_counter()
             fn()
             ts.append(round(time.perf_counter() - start, 3))
             cgs.append(codegen.METRIC_COMPILATION_TIME().getCount() - c0)
+            sws.append(_shuffle_written() - s0)
             lds.append([round(l0, 2), round(os.getloadavg()[0], 2)])
             # between-repeat (and between-entry) hygiene, outside the
             # timer: release operator persists + clear the SQL cache so
@@ -1216,6 +1232,7 @@ def main() -> int:
         repeats[name] = ts
         loads[name] = lds
         compiles[name] = cgs
+        shuffled[name] = sws
 
     # pre-sweep: build the persistent MinHash index once and time it as
     # its own entry, so the sweep's incremental_minhash_pairs times
@@ -1281,6 +1298,7 @@ def main() -> int:
         detail = dict(
             payload,
             queries_codegen_compiles=compiles,
+            queries_shuffle_write_bytes=shuffled,
             argv=sys.argv[1:],
             unix_time=int(time.time()),
         )

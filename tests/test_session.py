@@ -23,6 +23,68 @@ def test_engine_defaults_applied(spark):
     assert spark.conf.get("spark.sql.parquet.filterPushdown") == "true"
     assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
     assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == "1024"
+    core = spark.sparkContext.getConf()
+    assert core.get("spark.io.compression.codec") == "zstd"
+    assert core.get("spark.shuffle.sort.bypassMergeThreshold") == "0"
+
+
+def _shuffle_deps(rdd):
+    """Every ShuffleDependency in a JVM RDD's lineage."""
+    found, stack = [], [rdd]
+    while stack:
+        deps = stack.pop().dependencies()
+        for i in range(deps.size()):
+            dep = deps.apply(i)
+            if dep.getClass().getSimpleName() == "ShuffleDependency":
+                found.append(dep)
+            stack.append(dep.rdd())
+    return found
+
+
+def test_zstd_serialized_shuffle_round_trips(spark):
+    """Spark's transient bytes go through zstd, a 200-partition shuffle
+    takes the serialized writer (one compression stream per map task,
+    not one per reduce partition), and frames that pass through a
+    shuffle, a broadcast and a serialized cache read back exactly."""
+    from pyspark import StorageLevel
+    from pyspark.sql import functions as F
+
+    jvm = spark._jvm
+    conf = spark.sparkContext._jsc.sc().conf()
+    codec = jvm.org.apache.spark.io.CompressionCodec.createCodec(conf)
+    assert codec.getClass().getSimpleName() == "ZStdCompressionCodec"
+
+    n = 5000
+    src = spark.range(n).select(
+        "id", F.sha2(F.col("id").cast("string"), 256).alias("payload")
+    )
+    expected = {(r.id, r.payload) for r in src.collect()}
+
+    wide = src.repartition(200)
+    deps = _shuffle_deps(wide._jdf.queryExecution().toRdd())
+    assert deps and all(d.partitioner().numPartitions() == 200 for d in deps)
+    sort = jvm.org.apache.spark.shuffle.sort
+    for dep in deps:
+        assert not sort.SortShuffleWriter.shouldBypassMergeSort(conf, dep)
+        assert sort.SortShuffleManager.canUseSerializedShuffle(dep)
+    rows = wide.collect()
+    assert len(rows) == n and {(r.id, r.payload) for r in rows} == expected
+
+    small = spark.range(0, n, 7).select(
+        "id", (F.col("id") * 2).alias("twice")
+    )
+    joined = src.join(F.broadcast(small), "id").collect()
+    assert {(r.id, r.payload, r.twice) for r in joined} == {
+        (i, p, i * 2) for i, p in expected if i % 7 == 0
+    }
+
+    cached = src.persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        assert cached.count() == n
+        rows = cached.collect()
+        assert len(rows) == n and {(r.id, r.payload) for r in rows} == expected
+    finally:
+        cached.unpersist()
 
 
 def test_codegen_cache_holds_a_warm_pass(spark):
