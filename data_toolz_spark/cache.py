@@ -17,6 +17,7 @@ if an old plan is re-executed — slower, never wrong.
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 
 _TRACKED: list[DataFrame] = []
@@ -26,6 +27,12 @@ def track(df: DataFrame) -> DataFrame:
     """Register a persisted DataFrame for later bulk release."""
     _TRACKED.append(df)
     return df
+
+
+def persist(df: DataFrame) -> DataFrame:
+    """Persist ``df`` at MEMORY_AND_DISK (serialized; spill, never
+    evict-to-recompute) and track it for bulk release."""
+    return track(df.persist(StorageLevel.MEMORY_AND_DISK))
 
 
 def release() -> int:
@@ -52,4 +59,4 @@ def clear_session_caches(spark) -> None:
         pass
 
 
-__all__ = ["track", "release", "clear_session_caches"]
+__all__ = ["track", "persist", "release", "clear_session_caches"]

@@ -237,14 +237,9 @@ def _persist_tracked(
     are registered with cache.track so long sessions can bulk-release
     them (cache.release) once the returned plan is materialized — the
     caller has no direct handle to these intermediates."""
-    from pyspark import StorageLevel
+    from data_toolz_spark.cache import persist
 
-    from data_toolz_spark.cache import track
-
-    return (
-        track(members.persist(StorageLevel.MEMORY_AND_DISK)),
-        track(reps.persist(StorageLevel.MEMORY_AND_DISK)),
-    )
+    return persist(members), persist(reps)
 
 
 def _expand_rep_pairs(

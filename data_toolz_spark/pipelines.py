@@ -28,15 +28,39 @@ Composition details that matter at 100 TB:
   so identical-doc mega-clusters cost O(k) instead of k² edges.
 * Decontamination runs AFTER near-dup removal (fewer docs to scan) and
   BEFORE splitting (a contaminated doc must not reach any split).
-* Every stage except one is lazy DataFrame algebra folded into ONE
-  logical plan.  The exception: with ``near_dup_threshold`` set, the
-  near-dup stage runs the MinHash pair mining and the iterative
-  connected-components loop AT CALL TIME (CC is a driver loop of
-  Spark jobs — it cannot be a lazy plan node), so calling this
-  function on a large corpus does that work up front; everything
-  downstream of the returned frame stays lazy.  ``stage_counts``
-  additionally triggers one action per stage and is for audits, not
-  production runs.
+
+The stage loop: :func:`prepare_training_corpus` is a list of stage
+entries — gates, text_dedup, near_dup, media_dedup, decontaminate,
+strata, split, token_pack — each a name, its fingerprint parameters,
+the condition that enables it, and a function from frame to frame.
+One loop runs the enabled entries in order; word chunking and
+word-budget packing follow it as plain lazy algebra.  Most stage work
+is lazy, but not all: the near-dup stage runs MinHash pair mining and
+its connected-components loop at call time, each media tier
+runs its own CC loop, and the strata stage collects the bigram LM's
+vocab stats, so calling the function on a large corpus does that work
+up front.  ``stage_counts`` triggers one action per stage and is for
+audits, not production runs.
+
+The resume contract (``materialize_to``): each enabled stage writes
+its output as the table ``{prefix}_sNN_{name}`` — NN counts enabled
+stages only, and gates and split always count — then a row of
+``{prefix}_manifest`` (stage, fp, table, n_rows); the near-dup
+component map writes first as the side table ``near_dup_cc`` under
+its owning stage's fingerprint, and every stage writes at call time.
+Fingerprints chain like a Merkle list: fp_i = sha256(fp_{i-1} | stage
+name | stage params), seeded by ``input_token``, ``id_col`` and
+``text_col``, so a config change at stage k invalidates exactly
+stages >= k, while a re-run with the same config loads each completed
+stage (and its side tables) instead of recomputing it.  A manifest
+row is trusted only when its fingerprint equals the current chain
+value and its table's row count still equals the audited ``n_rows``;
+the table writes before its row, so a crash between the two just
+recomputes that stage.  Stages are deterministic functions of
+(config, input corpus), and the corpus is never hashed: the caller
+changes ``input_token`` when the data changes.  A completed run then
+prunes manifest rows and stage tables that are off its chain, unless
+``materialize_retention="keep"``.
 """
 
 from __future__ import annotations
@@ -47,6 +71,8 @@ from typing import Mapping, Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from data_toolz_spark.cache import persist
 
 
 def _fp_token(obj) -> str:
@@ -88,26 +114,9 @@ def _fp_token(obj) -> str:
 
 
 class _Materializer:
-    """Stage materialization + resume for the pipeline (r11, VERDICT
-    task 4).  Each enabled stage writes its output as a table
-    ``{prefix}_s{NN}_{name}`` plus a row in ``{prefix}_manifest``
-    (stage, fingerprint, table, n_rows).  Fingerprints chain like a
-    Merkle list: fp_i = sha256(fp_{i-1} | stage name | stage params),
-    seeded by the caller's ``input_token`` — so a config change at
-    stage k invalidates exactly stages ≥ k, while a re-run with the
-    same config resumes from the last completed stage.
-
-    Crash-safety: the stage table writes FIRST (a job-atomic
-    overwrite), the manifest row second; a crash between the two just
-    recomputes that stage on resume (the overwrite is idempotent).
-    A manifest row is trusted only when its fingerprint equals the
-    current chain value — stale rows from older configs can never
-    false-match.  The stages themselves are deterministic functions
-    of (config, input corpus), so a fingerprint match implies a
-    byte-identical stage output; the caller MUST change
-    ``input_token`` when the input data changes (the corpus is never
-    itself hashed — that would cost a full pass).
-    """
+    """Stage tables and the fingerprint-chained manifest behind
+    ``materialize_to`` (the resume contract is in the module
+    docstring)."""
 
     def __init__(self, spark, prefix: str, input_token: str):
         self.spark = spark
@@ -119,12 +128,7 @@ class _Materializer:
         #: prunes manifest rows (and their tables) outside this set
         self.valid_fps: set[str] = {self.fp}
         self.n_stage = 0
-        self.rows: dict = {}
-        if spark.catalog.tableExists(f"{prefix}_manifest"):
-            for r in spark.table(f"{prefix}_manifest").collect():
-                self.rows[r["stage"]] = (
-                    r["fp"], r["table"], int(r["n_rows"])
-                )
+        self.rows = _read_manifest(spark, prefix)
 
     def _advance(self, name: str, params: Mapping) -> None:
         self.n_stage += 1
@@ -158,9 +162,6 @@ class _Materializer:
     def load(self, name: str) -> DataFrame:
         return self.spark.table(self.rows[name][1])
 
-    def _write_manifest(self) -> None:
-        _write_manifest_rows(self.spark, self.prefix, self.rows)
-
     def save(self, name: str, df: DataFrame) -> DataFrame:
         """Write ``df`` as this stage's table, record the manifest row
         (with the audit row count — a footer-stats read of the table
@@ -172,7 +173,7 @@ class _Materializer:
         df.write.mode("overwrite").saveAsTable(tbl)
         out = self.spark.table(tbl)
         self.rows[name] = (self.fp, tbl, out.count())
-        self._write_manifest()
+        _write_manifest_rows(self.spark, self.prefix, self.rows)
         return out
 
     def finalize(self, prune: bool = True) -> list[str]:
@@ -202,17 +203,29 @@ class _Materializer:
         }
         if set(keep) != set(self.rows):
             self.rows = keep
-            self._write_manifest()
+            _write_manifest_rows(self.spark, self.prefix, self.rows)
         return _drop_unreferenced_stage_tables(
             self.spark, self.prefix,
             {r[1] for r in self.rows.values()},
         )
 
+
+def _read_manifest(spark, prefix: str) -> dict:
+    """``{prefix}_manifest`` as ``{stage: (fp, table, n_rows)}`` (empty
+    when the prefix has no manifest) — the ONE reader, paired with
+    :func:`_write_manifest_rows`."""
+    if not spark.catalog.tableExists(f"{prefix}_manifest"):
+        return {}
+    return {
+        r["stage"]: (r["fp"], r["table"], int(r["n_rows"]))
+        for r in spark.table(f"{prefix}_manifest").collect()
+    }
+
+
 def _write_manifest_rows(spark, prefix: str, rows: Mapping) -> None:
     """Overwrite ``{prefix}_manifest`` from a ``{stage: (fp, table,
     n_rows)}`` mapping — the ONE writer of the manifest schema,
-    shared by the materializer and the standalone retention helper
-    (review fix r12: a schema change now has a single home)."""
+    shared by the materializer and the standalone retention helper."""
     spark.createDataFrame(
         [
             (n, fp, t, int(c))
@@ -243,20 +256,21 @@ def list_pipeline_stages(spark, prefix: str) -> list[dict]:
     exists, and ``intact`` (current footer-stats count equals the
     audited count).  A long-lived warehouse uses this to see what a
     prefix holds before resuming or pruning."""
-    if not spark.catalog.tableExists(f"{prefix}_manifest"):
-        return []
+    rows = _read_manifest(spark, prefix)
     out = []
-    for r in spark.table(f"{prefix}_manifest").orderBy("table").collect():
-        exists = spark.catalog.tableExists(r["table"])
-        current = spark.table(r["table"]).count() if exists else None
+    for stage, (fp, table, n_rows) in sorted(
+        rows.items(), key=lambda kv: kv[1][1]
+    ):
+        exists = spark.catalog.tableExists(table)
+        current = spark.table(table).count() if exists else None
         out.append(
             {
-                "stage": r["stage"],
-                "fp": r["fp"],
-                "table": r["table"],
-                "n_rows": int(r["n_rows"]),
+                "stage": stage,
+                "fp": fp,
+                "table": table,
+                "n_rows": n_rows,
                 "table_exists": exists,
-                "intact": bool(exists and current == int(r["n_rows"])),
+                "intact": bool(exists and current == n_rows),
             }
         )
     return out
@@ -271,23 +285,19 @@ def drop_stale_pipeline_stages(spark, prefix: str) -> list[str]:
     runs the same pruning at the end of every completed materialized
     run; this standalone form cleans up prefixes whose runs crashed
     before finalizing."""
-    manifest = f"{prefix}_manifest"
-    referenced: set[str] = set()
-    if spark.catalog.tableExists(manifest):
-        rows = {
-            r["stage"]: (r["fp"], r["table"], int(r["n_rows"]))
-            for r in spark.table(manifest).collect()
-        }
-        alive = {
-            n: r
-            for n, r in rows.items()
-            if spark.catalog.tableExists(r[1])
-        }
-        if set(alive) != set(rows):
-            _write_manifest_rows(spark, prefix, alive)
-        referenced = {r[1] for r in alive.values()}
-    return _drop_unreferenced_stage_tables(spark, prefix, referenced)
+    rows = _read_manifest(spark, prefix)
+    alive = {
+        n: r for n, r in rows.items() if spark.catalog.tableExists(r[1])
+    }
+    if set(alive) != set(rows):
+        _write_manifest_rows(spark, prefix, alive)
+    return _drop_unreferenced_stage_tables(
+        spark, prefix, {r[1] for r in alive.values()}
+    )
 
+
+#: side tables a stage saves (before its own table) and loads on resume
+_SIDE_TABLES = {"near_dup": ("near_dup_cc",)}
 
 #: default Hamming radius per media fingerprint kind — the values the
 #: qid-attested tiers use (image dHash τ=3, audio Haitsma-Kalker τ=6,
@@ -441,19 +451,10 @@ def prepare_training_corpus(
       any :func:`keep_document` feature (computed in the same
       projection) or a column already on ``docs``.
 
-    ``materialize_to`` (r11, VERDICT task 4) turns on stage
-    materialization + resume: each enabled stage region (gates, text
-    dedup, near-dup + its component map, media dedup, decontaminate,
-    strata, split) writes its output as a table under this prefix
-    plus a fingerprint-chained manifest row, and a re-run with the
-    same prefix + config RESUMES — stages whose manifest fingerprint
-    matches load from their table instead of recomputing, so a 100 TB
-    run that dies at stage 9 of 11 does not redo stages 1-8.  A
-    config change at stage k invalidates exactly stages ≥ k.  The
-    input corpus is never hashed: pass a new ``input_token`` when the
-    underlying data (docs or eval_df) changes, or stale stage tables
-    will be trusted.  Default (None) leaves the one-lazy-plan
-    behavior untouched.
+    ``materialize_to`` turns on stage materialization + resume under
+    this table-name prefix (the contract is in the module docstring):
+    pass a new ``input_token`` when docs or eval_df change, or stale
+    stage tables will be trusted.  Default (None) writes nothing.
 
     ``materialize_retention`` (r12) controls end-of-run warehouse
     hygiene under ``materialize_to``: ``"prune"`` (default) drops
@@ -465,11 +466,13 @@ def prepare_training_corpus(
     packed table; the chain cannot tell "skipped on purpose" from
     "superseded", so the caller must say).
     """
+    from data_toolz_spark.operators._util import truncate_lineage
     from data_toolz_spark.operators.text_analysis import (
         keep_document,
         line_dedup,
     )
 
+    # every config error raises here, before any stage runs or writes
     if near_dup_keep not in ("min_id", "longest"):
         raise ValueError(
             "prepare_training_corpus: near_dup_keep must be 'min_id' "
@@ -480,11 +483,38 @@ def prepare_training_corpus(
             "prepare_training_corpus: materialize_retention must be "
             f"'prune' or 'keep', got {materialize_retention!r}"
         )
-    _prune = materialize_retention == "prune"
+    if quality_rank_gate is not None:
+        gate_keep = dict(quality_rank_gate).get("keep", "ge")
+        if gate_keep not in ("ge", "le"):
+            raise ValueError(
+                "quality_rank_gate: keep must be 'ge' or 'le', "
+                f"got {gate_keep!r}"
+            )
+    if lang_model is not None and not keep_langs:
+        raise ValueError(
+            "prepare_training_corpus: lang_model requires "
+            "keep_langs (the language predictions to keep)"
+        )
+    if pack_budget is not None and chunk_max_words is None:
+        raise ValueError("pack_budget requires chunk_max_words")
+    if token_pack is not None:
+        if chunk_max_words is not None:
+            raise ValueError(
+                "token_pack is exclusive with chunk_max_words/"
+                "pack_budget — pick word-chunking or token packing"
+            )
+        if not {"model", "wp_vocab", "ids_expr"} & set(token_pack):
+            raise ValueError(
+                "token_pack: pass 'model' (UnigramModel), 'wp_vocab' "
+                "(a trained WordPiece piece→id dict) or 'ids_expr' "
+                "(an id-array Column over the text)"
+            )
 
     base_cols = docs.columns
-    out = docs
-
+    fracs = dict(fractions or {"train": 0.98, "val": 0.01, "test": 0.01})
+    #: side tables by name — the near-dup component map, shared with
+    #: the split and token_pack stages
+    side_tables: dict[str, DataFrame] = {}
     mat = (
         _Materializer(
             docs.sparkSession,
@@ -498,63 +528,43 @@ def prepare_training_corpus(
         if materialize_to is not None
         else None
     )
-    # gates region (stages 0-1c): resume skips every filter below
-    _skip_gates = mat is not None and mat.hit(
-        "gates",
-        {
-            "domain_cap": domain_cap,
-            "clean": clean,
-            "thresholds": quality_thresholds,
-            "qrank": quality_rank_gate,
-            "qmodel": quality_model,
-            "qmin": quality_min_prob,
-            "lmodel": lang_model,
-            "langs": keep_langs,
-        },
-    )
 
-    # 0. per-site frequency cap (optional) — before any content work:
-    # rows a site is over quota for never pay tokenization, hashing,
-    # or dedup I/O
-    if not _skip_gates and domain_cap is not None:
-        from data_toolz_spark.operators.urls import cap_per_domain
+    def save(name: str, df: DataFrame) -> DataFrame:
+        return df if mat is None else mat.save(name, df)
 
-        out = cap_per_domain(
-            out, id_col=id_col, **dict(domain_cap)
-        ).select(*base_cols)
+    def gates(out: DataFrame) -> DataFrame:
+        # per-site frequency cap first: rows a site is over quota for
+        # never pay tokenization, hashing, or dedup I/O
+        if domain_cap is not None:
+            from data_toolz_spark.operators.urls import cap_per_domain
 
-    # 0b. text repair (optional): clean_text — NFC, control/zero-width
-    # strip, unicode-space fold, newline canonicalization — BEFORE the
-    # quality gate so its signals (alpha ratio, token stats, line
-    # dedup keys) see the repaired text.  ``clean=True`` for defaults
-    # or a dict of clean_text kwargs.
-    # truthiness would silently DISABLE the tier for clean={} — the
-    # sibling specs' "empty dict = on with defaults" convention
-    if not _skip_gates and clean is not False and clean is not None:
-        from data_toolz_spark.operators.text_analysis import clean_text
+            out = cap_per_domain(
+                out, id_col=id_col, **dict(domain_cap)
+            ).select(*base_cols)
 
-        kw = dict(clean) if isinstance(clean, Mapping) else {}
-        out = out.withColumn(text_col, clean_text(text_col, **kw))
+        # text repair (clean_text: NFC, control/zero-width strip,
+        # unicode-space fold, newline canonicalization) BEFORE the
+        # quality gate so its signals (alpha ratio, token stats, line
+        # dedup keys) see the repaired text.  ``clean=True`` for
+        # defaults or a dict of clean_text kwargs; a truthiness test
+        # would silently DISABLE the tier for clean={} — the sibling
+        # specs' "empty dict = on with defaults" convention
+        if clean is not False and clean is not None:
+            from data_toolz_spark.operators.text_analysis import clean_text
 
-    # 1. per-document quality gate (map-only)
-    if not _skip_gates:
-        out = keep_document(
-            out, text_col, thresholds=quality_thresholds
-        )
+            kw = dict(clean) if isinstance(clean, Mapping) else {}
+            out = out.withColumn(text_col, clean_text(text_col, **kw))
+
+        # per-document quality gate (map-only)
+        out = keep_document(out, text_col, thresholds=quality_thresholds)
         out = out.filter(F.col("keep"))
-        # 1a. data-derived rank-quantile quality cut (r12) — per
-        # language when lang_col is set; thresholds via the exact
-        # integer-rank histogram pass, joined back as a broadcast
+        # data-derived rank-quantile quality cut — per language when
+        # lang_col is set; thresholds via the exact integer-rank
+        # histogram pass, joined back as a broadcast
         if quality_rank_gate is not None:
             spec = dict(quality_rank_gate)
             gate_col = spec["col"]
             q_num, q_den = spec.get("q", (1, 10))
-            side = spec.get("keep", "ge")
-            if side not in ("ge", "le"):
-                raise ValueError(
-                    "quality_rank_gate: keep must be 'ge' or 'le', "
-                    f"got {side!r}"
-                )
             from pyspark.sql.functions import broadcast
 
             from data_toolz_spark.operators.text_analysis import (
@@ -589,136 +599,88 @@ def prepare_training_corpus(
                 out = out.crossJoin(broadcast(thr))  # 1-row scalar
             pred = (
                 F.col(gate_col) >= F.col("__qr_thr")
-                if side == "ge"
+                if spec.get("keep", "ge") == "ge"
                 else F.col(gate_col) <= F.col("__qr_thr")
             )
             out = out.filter(pred).drop("__qr_thr")
         out = out.select(*base_cols)
 
-    # 1b. TRAINED quality filter (r10, optional): a LogRegModel from
-    # operators/classifier.py scores the standard heuristic features
-    # (quality_features → web_artifact_features — the columns the
-    # bench's x_quality_logreg distillation trains on) as one codegen
-    # projection; rows below quality_min_prob drop.  Train once,
-    # gate every pipeline run — the GPT-3 curation move.
-    if not _skip_gates and quality_model is not None:
-        from data_toolz_spark.operators.classifier import logreg_score
-        from data_toolz_spark.operators.text_analysis import (
-            quality_features,
-            web_artifact_features,
-        )
-
-        feat = web_artifact_features(
-            quality_features(out, text_col), text_col
-        )
-        scored = logreg_score(
-            feat, quality_model, out_col="__qprob"
-        )
-        out = scored.filter(
-            F.col("__qprob") >= float(quality_min_prob)
-        ).select(*base_cols)
-
-    # 1c. TRAINED language filter (r10, optional): a MulticlassModel
-    # (the fastText-shaped LID classifier) predicts per doc; only
-    # ``keep_langs`` predictions survive.  One explode + broadcast
-    # weight join + per-doc argmax.
-    if not _skip_gates and lang_model is not None:
-        if not keep_langs:
-            raise ValueError(
-                "prepare_training_corpus: lang_model requires "
-                "keep_langs (the language predictions to keep)"
+        # TRAINED quality filter: a LogRegModel from
+        # operators/classifier.py scores the standard heuristic features
+        # (quality_features → web_artifact_features — the columns the
+        # bench's x_quality_logreg distillation trains on) as one codegen
+        # projection; rows below quality_min_prob drop.  Train once,
+        # gate every pipeline run — the GPT-3 curation move.
+        if quality_model is not None:
+            from data_toolz_spark.operators.classifier import logreg_score
+            from data_toolz_spark.operators.text_analysis import (
+                quality_features,
+                web_artifact_features,
             )
-        from data_toolz_spark.operators.classifier import (
-            multiclass_score,
-        )
 
-        out = multiclass_score(
-            out, lang_model, text_col=text_col, id_col=id_col,
-            out_col="__lang_pred",
-        )
-        out = out.filter(
-            F.col("__lang_pred").isin(*list(keep_langs))
-        ).select(*base_cols)
+            feat = web_artifact_features(
+                quality_features(out, text_col), text_col
+            )
+            scored = logreg_score(
+                feat, quality_model, out_col="__qprob"
+            )
+            out = scored.filter(
+                F.col("__qprob") >= float(quality_min_prob)
+            ).select(*base_cols)
 
-    if mat is not None:
-        out = (
-            mat.load("gates")
-            if _skip_gates
-            else mat.save("gates", out)
-        )
+        # TRAINED language filter: a MulticlassModel (the
+        # fastText-shaped LID classifier) predicts per doc; only
+        # ``keep_langs`` predictions survive.  One explode + broadcast
+        # weight join + per-doc argmax.
+        if lang_model is not None:
+            from data_toolz_spark.operators.classifier import (
+                multiclass_score,
+            )
 
-    # text-dedup region (stages 2-2b)
-    _td_on = (
-        line_dedup_max_doc_freq is not None or span_dedup_n is not None
-    )
-    _skip_td = (
-        mat is not None
-        and _td_on
-        and mat.hit(
-            "text_dedup",
-            {
-                "line_max": line_dedup_max_doc_freq,
-                "line_sep": line_sep,
-                "span_n": span_dedup_n,
-            },
-        )
-    )
+            out = multiclass_score(
+                out, lang_model, text_col=text_col, id_col=id_col,
+                out_col="__lang_pred",
+            )
+            out = out.filter(
+                F.col("__lang_pred").isin(*list(keep_langs))
+            ).select(*base_cols)
+        return out
 
-    # 2. cross-document boilerplate removal (optional)
-    if not _skip_td and line_dedup_max_doc_freq is not None:
-        cleaned = line_dedup(
-            out,
-            id_col=id_col,
-            text_col=text_col,
-            max_doc_freq=line_dedup_max_doc_freq,
-            sep=line_sep,
-        ).select(id_col, F.col("clean_text"))
-        out = (
-            out.drop(text_col)
-            .join(cleaned, on=id_col)
-            .withColumnRenamed("clean_text", text_col)
-            .select(*base_cols)
-        )
+    def text_dedup(out: DataFrame) -> DataFrame:
+        # cross-document boilerplate removal
+        if line_dedup_max_doc_freq is not None:
+            cleaned = line_dedup(
+                out,
+                id_col=id_col,
+                text_col=text_col,
+                max_doc_freq=line_dedup_max_doc_freq,
+                sep=line_sep,
+            ).select(id_col, F.col("clean_text"))
+            out = (
+                out.drop(text_col)
+                .join(cleaned, on=id_col)
+                .withColumnRenamed("clean_text", text_col)
+                .select(*base_cols)
+            )
 
-    # 2b. exact duplicate-span removal (optional): cut repeated
-    # passages (ExactSubstr) before near-dup detection so a shared
-    # boilerplate block does not glue otherwise-distinct docs into one
-    # MinHash cluster
-    if not _skip_td and span_dedup_n is not None:
-        from data_toolz_spark.operators.text_analysis import (
-            remove_duplicate_spans,
-        )
+        # exact duplicate-span removal: cut repeated passages
+        # (ExactSubstr) before near-dup detection so a shared
+        # boilerplate block does not glue otherwise-distinct docs into
+        # one MinHash cluster
+        if span_dedup_n is not None:
+            from data_toolz_spark.operators.text_analysis import (
+                remove_duplicate_spans,
+            )
 
-        out = remove_duplicate_spans(
-            out, id_col=id_col, text_col=text_col, n=span_dedup_n
-        ).select(*base_cols)
-    if mat is not None and _td_on:
-        out = (
-            mat.load("text_dedup")
-            if _skip_td
-            else mat.save("text_dedup", out)
-        )
+            out = remove_duplicate_spans(
+                out, id_col=id_col, text_col=text_col, n=span_dedup_n
+            ).select(*base_cols)
+        return out
 
-    # 3. near-duplicate removal; the CC map is computed ONCE and shared
-    # with the split below (drop list = non-representative members,
-    # route key = component min) — the leakage-safety coupling
-    cc = None
-    _skip_nd = (
-        mat is not None
-        and near_dup_threshold is not None
-        and mat.hit(
-            "near_dup",
-            {"threshold": near_dup_threshold, "keep": near_dup_keep},
-            side=("near_dup_cc",),
-        )
-    )
-    if _skip_nd:
-        out = mat.load("near_dup")
-        cc = mat.load("near_dup_cc")
-    elif near_dup_threshold is not None:
-        from pyspark import StorageLevel
-
-        from data_toolz_spark.cache import track
+    def near_dup(out: DataFrame) -> DataFrame:
+        # the CC map is computed ONCE and shared with the split (drop
+        # list = non-representative members, route key = component
+        # min) — the leakage-safety coupling
         from data_toolz_spark.operators.dedup import minhash_components
 
         # The CC stage materializes at call time (its pair checkpoint
@@ -728,26 +690,26 @@ def prepare_training_corpus(
         # sf0.1 the recompute is seconds and the A/B is within noise;
         # at 100 TB running the text stages twice is the single
         # largest avoidable CPU cost in the pipeline, so the persist
-        # (MEMORY_AND_DISK: spill, never evict-to-recompute) always
-        # runs — tracked for release by the session cache hygiene.
-        out = track(out.persist(StorageLevel.MEMORY_AND_DISK))
+        # (spill, never evict-to-recompute) always runs — tracked for
+        # release by the session cache hygiene.
+        out = persist(out)
 
-        # r6: the component map is built over the FINGERPRINT graph
+        # the component map is built over the FINGERPRINT graph
         # (minhash_components) — member pairs are never materialized,
         # so a crawl's mega-clusters of identical docs cost O(k), not
-        # the k² edges the pair-expansion path would feed the CC loop
-        cc = minhash_components(
-            out, id_col, text_col, threshold=near_dup_threshold
+        # the k² edges the pair-expansion path would feed the CC loop.
+        # It is needed twice (drops here, split routing below) and must
+        # survive a crash before the split, hence the side table.
+        cc = side_tables["near_dup_cc"] = save(
+            "near_dup_cc",
+            minhash_components(
+                out, id_col, text_col, threshold=near_dup_threshold
+            ),
         )
-        if mat is not None:
-            # the map is needed twice (drops here, split routing
-            # below) and must survive a crash before the split — the
-            # side table saves under the owning stage's fingerprint
-            cc = mat.save("near_dup_cc", cc)
         if near_dup_keep == "longest":
             # quality-aware survivor: the cluster's longest member
-            # (ties → min id) — the split routing below still keys on
-            # the component MIN, so leakage-safety is untouched
+            # (ties → min id) — the split routing still keys on the
+            # component MIN, so leakage-safety is untouched
             from data_toolz_spark.operators.dedup import (
                 component_representatives,
             )
@@ -767,41 +729,25 @@ def prepare_training_corpus(
             drops = cc.filter(
                 F.col("id") != F.col("component")
             ).select(F.col("id").alias(id_col))
-        out = out.join(drops, on=id_col, how="left_anti")
-        if mat is not None:
-            out = mat.save("near_dup", out)
+        return out.join(drops, on=id_col, how="left_anti")
 
-    # 3b. content-fingerprint near-dup tiers (r10, optional): image /
-    # audio / video binary columns hash in one Arrow pass each, pairs
-    # mine through the generic Hamming banding, and the skew-safe
-    # component map drops everything but the min-id representative.
-    # Runs AFTER the text tier (fewer docs to decode — decode is the
-    # expensive step) and BEFORE decontamination/splitting.  Like the
-    # text tier, each component keeps exactly ONE surviving member, so
-    # split leakage-safety holds downstream without coupling these
-    # maps into component_split.  Each tier's CC loop materializes at
-    # call time (same contract as stage 3), hence the persist.
-    _skip_md = (
-        mat is not None
-        and bool(media_dedup)
-        and mat.hit("media_dedup", {"specs": list(media_dedup)})
-    )
-    if _skip_md:
-        out = mat.load("media_dedup")
-    elif media_dedup:
+    def media(out: DataFrame) -> DataFrame:
+        # image / audio / video binary columns hash in one Arrow pass
+        # each, pairs mine through the generic Hamming banding, and the
+        # skew-safe component map drops everything but the min-id
+        # representative.  Runs AFTER the text tier (fewer docs to
+        # decode — decode is the expensive step).  Like the text tier,
+        # each component keeps exactly ONE surviving member, so split
+        # leakage-safety holds downstream without coupling these maps
+        # into component_split.  Each tier's CC loop materializes at
+        # call time, hence the persist (the near-dup stage already
+        # persisted when it ran).
         from data_toolz_spark.operators.dedup import (
             fingerprint_components,
         )
 
-        from data_toolz_spark.operators._util import truncate_lineage
-
-        if cc is None:
-            from pyspark import StorageLevel
-
-            from data_toolz_spark.cache import track
-
-            out = track(out.persist(StorageLevel.MEMORY_AND_DISK))
-
+        if near_dup_threshold is None:
+            out = persist(out)
         for spec in media_dedup:
             fp = _media_fingerprints(out, spec, id_col)
             tau = int(
@@ -825,18 +771,9 @@ def prepare_training_corpus(
             out = truncate_lineage(
                 out.join(drops, on=id_col, how="left_anti")
             )
-        if mat is not None:
-            out = mat.save("media_dedup", out)
+        return out
 
-    # 4. benchmark decontamination (optional)
-    _skip_dc = (
-        mat is not None
-        and eval_df is not None
-        and mat.hit("decontaminate", {"n": decontaminate_n})
-    )
-    if _skip_dc:
-        out = mat.load("decontaminate")
-    elif eval_df is not None:
+    def decontaminate(out: DataFrame) -> DataFrame:
         from data_toolz_spark.operators.decontamination import (
             ngram_decontaminate,
         )
@@ -848,24 +785,13 @@ def prepare_training_corpus(
             text_col=text_col,
             n=decontaminate_n,
         ).select(id_col)
-        out = out.join(flagged, on=id_col, how="left_anti")
-        if mat is not None:
-            out = mat.save("decontaminate", out)
+        return out.join(flagged, on=id_col, how="left_anti")
 
-    # 4b. CCNet perplexity strata (r10, optional): bigram LM trained
-    # on the surviving corpus, exact rank thresholds, labels joined
-    # back by id.  After decontamination (train on the cleanest text),
-    # before the split (samplers stratify within splits downstream).
-    _skip_ps = (
-        mat is not None
-        and ppl_strata is not None
-        and mat.hit(
-            "strata", {"spec": dict(ppl_strata), "lang": lang_col}
-        )
-    )
-    if _skip_ps:
-        out = mat.load("strata")
-    elif ppl_strata is not None:
+    def strata(out: DataFrame) -> DataFrame:
+        # CCNet perplexity strata: bigram LM trained on the surviving
+        # corpus, exact rank thresholds, labels joined back by id.
+        # After decontamination (train on the cleanest text), before
+        # the split (samplers stratify within splits downstream).
         from data_toolz_spark.operators.text_analysis import (
             bigram_logprob,
             bucket_by_thresholds,
@@ -884,14 +810,7 @@ def prepare_training_corpus(
         #    full upstream tree per occurrence (persist does not
         #    shrink the logical plan) — the lazy checkpoint truncates
         #    lineage, the same device as the media tiers.
-        from pyspark import StorageLevel
-
-        from data_toolz_spark.cache import track
-        from data_toolz_spark.operators._util import truncate_lineage
-
-        out = truncate_lineage(
-            track(out.persist(StorageLevel.MEMORY_AND_DISK))
-        )
+        out = truncate_lineage(persist(out))
 
         spec = dict(ppl_strata)
         qs = [tuple(q) for q in spec.get("qs", ((1, 3), (2, 3)))]
@@ -903,11 +822,11 @@ def prepare_training_corpus(
         # GROUP — CCNet's per-language percentiles: a language whose
         # LM scores run globally high still splits into its own
         # head/middle/tail instead of landing wholesale in "tail".
-        # ``lang_col`` (r11, VERDICT task 5) goes further: the LM
-        # ITSELF trains per language (grouped vocab + bigram tables,
-        # per-group backoff denominators — Wenzek et al. 2020 §4.3's
-        # per-language conditioning), and the strata default to the
-        # same grouping (spec's explicit group_col still wins).
+        # ``lang_col`` goes further: the LM ITSELF trains per language
+        # (grouped vocab + bigram tables, per-group backoff
+        # denominators — Wenzek et al. 2020 §4.3's per-language
+        # conditioning), and the strata default to the same grouping
+        # (spec's explicit group_col still wins).
         group_col = spec.get("group_col", lang_col)
         vocab_tbl = build_vocab(out, text_col, group_col=lang_col)
         bigram_tbl = build_bigram_counts(
@@ -950,102 +869,45 @@ def prepare_training_corpus(
             bucket_col=bucket_col,
             labels=labels,
         ).select(id_col, bucket_col)
-        out = out.join(labeled, on=id_col, how="left")
-        if mat is not None:
-            out = mat.save("strata", out)
+        return out.join(labeled, on=id_col, how="left")
 
-    # 5. deterministic split — leakage-safe when a component map exists
-    fracs = dict(fractions or {"train": 0.98, "val": 0.01, "test": 0.01})
-    _skip_sp = (
-        mat is not None
-        and mat.hit("split", {"fracs": fracs, "seed": seed})
-    )
-    if _skip_sp:
-        out = mat.load("split")
-    else:
-        if cc is not None:
-            from data_toolz_spark.operators.sampling import (
-                component_split,
-            )
-
-            out = component_split(
-                out,
-                id_col=id_col,
-                fractions=fracs,
-                seed=seed,
-                components=cc,
-            )
-        else:
-            from data_toolz_spark.operators.sampling import hash_split
-
-            out = hash_split(out, [id_col], fracs, seed=seed)
-        if mat is not None:
-            out = mat.save("split", out)
-
-    # 6. context-window chunking (optional)
-    if chunk_max_words is not None:
-        from data_toolz_spark.operators.text_analysis import chunk_documents
-
-        splits = out.select(id_col, "split")
-        chunks = chunk_documents(
-            out,
-            id_col=id_col,
-            text_col=text_col,
-            max_words=chunk_max_words,
-            overlap=chunk_overlap,
+    def split(out: DataFrame) -> DataFrame:
+        # deterministic split — leakage-safe when a component map exists
+        from data_toolz_spark.operators.sampling import (
+            component_split,
+            hash_split,
         )
-        out = chunks.join(splits, on=id_col)
 
-        # 7. token-budget packing for shard assembly (optional)
-        if pack_budget is not None:
-            from data_toolz_spark.operators.sampling import pack_greedy
+        cc = side_tables.get("near_dup_cc")
+        if cc is None:
+            return hash_split(out, [id_col], fracs, seed=seed)
+        return component_split(
+            out, id_col=id_col, fractions=fracs, seed=seed, components=cc
+        )
 
-            out = out.withColumn(
-                "__chunk_key",
-                F.concat_ws("#", F.col(id_col), F.col("chunk_index")),
-            )
-            out = pack_greedy(
-                out,
-                id_col="__chunk_key",
-                token_col="n_words",
-                budget=pack_budget,
-                seed=seed,
-            ).drop("__chunk_key")
-    elif pack_budget is not None:
-        raise ValueError("pack_budget requires chunk_max_words")
-
-    # 8. REAL-token-id sequence packing (r10, optional — the full
-    # raw-docs → packed-pretraining-sequences path in one call):
-    # encode every surviving doc to token ids (``model`` = a trained
-    # UnigramModel, or ``ids_expr`` = any prepared id-array Column
-    # over text_col, e.g. bpe_encode_bytes_expr's output), then
-    # pack_token_sequences PER SPLIT — sequences concatenate documents,
-    # so packing across splits would stitch val tokens into train
-    # sequences; the per-split invocations keep every sequence
-    # split-pure and the near-dup component routing still applies.
-    # Output: (split, shard, seq_index, input_ids).
-    if token_pack is not None:
-        if chunk_max_words is not None:
-            raise ValueError(
-                "token_pack is exclusive with chunk_max_words/"
-                "pack_budget — pick word-chunking or token packing"
-            )
-        spec = dict(token_pack)
-        # the encode touches EVERY surviving byte — at 100 TB it is
-        # the most expensive stage to lose in a crash, so it
+    def pack(out: DataFrame) -> DataFrame:
+        # REAL-token-id sequence packing — the full raw-docs →
+        # packed-pretraining-sequences path in one call: encode every
+        # surviving doc to token ids (``model`` = a trained
+        # UnigramModel, ``wp_vocab`` = a WordPiece vocab, or
+        # ``ids_expr`` = any prepared id-array Column over text_col,
+        # e.g. bpe_encode_bytes_expr's output), then
+        # pack_token_sequences PER SPLIT — sequences concatenate
+        # documents, so packing across splits would stitch val tokens
+        # into train sequences; the per-split invocations keep every
+        # sequence split-pure and the near-dup component routing still
+        # applies.  The encode touches EVERY surviving byte — at 100 TB
+        # it is the most expensive stage to lose in a crash, so it
         # materializes too (the model fingerprints by its
         # value-carrying repr; an ids_expr Column by its expression
-        # string)
-        if mat is not None and mat.hit("token_pack", {"spec": spec}):
-            packed = mat.load("token_pack")
-            mat.finalize(prune=_prune)
-            return packed
-        seq_len = int(spec["seq_len"])
-        eos_id = int(spec["eos_id"])
+        # string).  Output: (split, shard, seq_index, input_ids).
         from data_toolz_spark.operators.sampling import (
             pack_token_sequences,
         )
 
+        spec = dict(token_pack)
+        seq_len = int(spec["seq_len"])
+        eos_id = int(spec["eos_id"])
         if "model" in spec:
             from data_toolz_spark.operators.unigram import (
                 unigram_encode,
@@ -1056,8 +918,8 @@ def prepare_training_corpus(
                 spec["model"],
                 id_col=id_col,
                 text_col=text_col,
-                # None → the model's own longest piece (r11 advice fix:
-                # a hardcoded 8 diverged from models trained larger)
+                # None → the model's own longest piece (a hardcoded 8
+                # diverged from models trained larger)
                 max_piece_len=spec.get("max_piece_len"),
             )
         elif "wp_vocab" in spec:
@@ -1072,28 +934,15 @@ def prepare_training_corpus(
                 text_col=text_col,
                 max_word_len=spec.get("max_word_len"),
             )
-        elif "ids_expr" in spec:
+        else:
             ids = out.select(
                 F.col(id_col), spec["ids_expr"].alias("ids")
-            )
-        else:
-            raise ValueError(
-                "token_pack: pass 'model' (UnigramModel), 'wp_vocab' "
-                "(a trained WordPiece piece→id dict) or 'ids_expr' "
-                "(an id-array Column over the text)"
             )
         ids = ids.join(out.select(id_col, "split"), on=id_col)
         # the encode plan embeds the full upstream tree and each
         # split's pack re-reads it — same persist + lineage-truncation
         # device as the strata stage
-        from pyspark import StorageLevel
-
-        from data_toolz_spark.cache import track
-        from data_toolz_spark.operators._util import truncate_lineage
-
-        ids = truncate_lineage(
-            track(ids.persist(StorageLevel.MEMORY_AND_DISK))
-        )
+        ids = truncate_lineage(persist(ids))
         with_spans = bool(spec.get("with_spans", False))
         packed = None
         for s in sorted(fracs):
@@ -1105,26 +954,124 @@ def prepare_training_corpus(
                 eos_id=eos_id,
                 n_shards=int(spec.get("n_shards", 256)),
                 seed=seed,
-                components=cc,
+                components=side_tables.get("near_dup_cc"),
                 portable=bool(spec.get("portable", False)),
                 drop_last=bool(spec.get("drop_last", True)),
                 with_spans=with_spans,
             ).withColumn("split", F.lit(s))
             packed = part if packed is None else packed.unionByName(part)
-        packed = packed.select(
+        return packed.select(
             "split",
             "shard",
             "seq_index",
             "input_ids",
             *(["doc_spans"] if with_spans else []),
         )
-        if mat is not None:
-            packed = mat.save("token_pack", packed)
-            mat.finalize(prune=_prune)
-        return packed
 
+    # (name, fingerprint params, enabled, frame → frame), in order.  The
+    # params dicts feed the resume chain: editing one re-keys every
+    # materialized warehouse from that stage on.
+    stages = [
+        (
+            "gates",
+            {
+                "domain_cap": domain_cap,
+                "clean": clean,
+                "thresholds": quality_thresholds,
+                "qrank": quality_rank_gate,
+                "qmodel": quality_model,
+                "qmin": quality_min_prob,
+                "lmodel": lang_model,
+                "langs": keep_langs,
+            },
+            True,
+            gates,
+        ),
+        (
+            "text_dedup",
+            {
+                "line_max": line_dedup_max_doc_freq,
+                "line_sep": line_sep,
+                "span_n": span_dedup_n,
+            },
+            line_dedup_max_doc_freq is not None
+            or span_dedup_n is not None,
+            text_dedup,
+        ),
+        (
+            "near_dup",
+            {"threshold": near_dup_threshold, "keep": near_dup_keep},
+            near_dup_threshold is not None,
+            near_dup,
+        ),
+        (
+            "media_dedup",
+            {"specs": list(media_dedup or ())},
+            bool(media_dedup),
+            media,
+        ),
+        (
+            "decontaminate",
+            {"n": decontaminate_n},
+            eval_df is not None,
+            decontaminate,
+        ),
+        (
+            "strata",
+            {"spec": dict(ppl_strata or {}), "lang": lang_col},
+            ppl_strata is not None,
+            strata,
+        ),
+        ("split", {"fracs": fracs, "seed": seed}, True, split),
+        (
+            "token_pack",
+            {"spec": dict(token_pack or {})},
+            token_pack is not None,
+            pack,
+        ),
+    ]
+    out = docs
+    for name, params, enabled, run in stages:
+        if not enabled:
+            continue
+        sides = _SIDE_TABLES.get(name, ())
+        if mat is not None and mat.hit(name, params, side=sides):
+            loaded = {n: mat.load(n) for n in (name, *sides)}
+            out = loaded.pop(name)
+            side_tables.update(loaded)
+        else:
+            out = save(name, run(out))
     if mat is not None:
-        mat.finalize(prune=_prune)
+        mat.finalize(prune=materialize_retention == "prune")
+
+    # context-window chunking (optional), then token-budget packing
+    # for shard assembly (optional)
+    if chunk_max_words is not None:
+        from data_toolz_spark.operators.text_analysis import chunk_documents
+
+        splits = out.select(id_col, "split")
+        chunks = chunk_documents(
+            out,
+            id_col=id_col,
+            text_col=text_col,
+            max_words=chunk_max_words,
+            overlap=chunk_overlap,
+        )
+        out = chunks.join(splits, on=id_col)
+        if pack_budget is not None:
+            from data_toolz_spark.operators.sampling import pack_greedy
+
+            out = out.withColumn(
+                "__chunk_key",
+                F.concat_ws("#", F.col(id_col), F.col("chunk_index")),
+            )
+            out = pack_greedy(
+                out,
+                id_col="__chunk_key",
+                token_col="n_words",
+                budget=pack_budget,
+                seed=seed,
+            ).drop("__chunk_key")
     return out
 
 
@@ -1138,68 +1085,56 @@ def stage_counts(
     Runs the pipeline several times with later stages disabled — one
     action per stage, for sign-off reports at modest scale (use the
     single-plan :func:`prepare_training_corpus` for production runs).
+    Every sub-run except ``final`` also drops chunking, ``token_pack``
+    and ``ppl_strata``, so it counts documents (strata only adds a
+    column).
 
-    Materialization kwargs are STRIPPED (review fix r12): each
-    truncated sub-run here is a different stage chain, so passing
-    ``materialize_to`` through would make every sub-run's finalize
-    prune the others' (and the real run's) stage tables.
+    Materialization kwargs are STRIPPED: each truncated sub-run here
+    is a different stage chain, so passing ``materialize_to`` through
+    would make every sub-run's finalize prune the others' (and the
+    real run's) stage tables.
     """
     base = dict(kwargs)
     base.pop("materialize_to", None)
     base.pop("input_token", None)
     base.pop("materialize_retention", None)
+    docs_only = dict(
+        base,
+        chunk_max_words=None,
+        pack_budget=None,
+        token_pack=None,
+        ppl_strata=None,
+    )
     counts: dict[str, int] = {"raw": docs.count()}
-    counts["quality"] = prepare_training_corpus(
-        docs,
+
+    def count(key: str, ev: DataFrame | None, **off) -> None:
+        counts[key] = prepare_training_corpus(
+            docs, ev, **{**docs_only, **off}
+        ).count()
+
+    count(
+        "quality",
         None,
-        **{
-            **base,
-            "near_dup_threshold": None,
-            "media_dedup": None,
-            "line_dedup_max_doc_freq": None,
-            "span_dedup_n": None,
-            "chunk_max_words": None,
-            "pack_budget": None,
-        },
-    ).count()
+        near_dup_threshold=None,
+        media_dedup=None,
+        line_dedup_max_doc_freq=None,
+        span_dedup_n=None,
+    )
     if base.get("line_dedup_max_doc_freq") is not None:
-        counts["line_dedup"] = prepare_training_corpus(
-            docs,
+        count(
+            "line_dedup",
             None,
-            **{
-                **base,
-                "near_dup_threshold": None,
-                "media_dedup": None,
-                "span_dedup_n": None,
-                "chunk_max_words": None,
-                "pack_budget": None,
-            },
-        ).count()
+            near_dup_threshold=None,
+            media_dedup=None,
+            span_dedup_n=None,
+        )
     if base.get("near_dup_threshold", 0.8) is not None:
-        counts["near_dup"] = prepare_training_corpus(
-            docs,
-            None,
-            **{
-                **base,
-                "media_dedup": None,
-                "chunk_max_words": None,
-                "pack_budget": None,
-            },
-        ).count()
+        count("near_dup", None, media_dedup=None)
     if base.get("media_dedup"):
-        counts["media_dedup"] = prepare_training_corpus(
-            docs,
-            None,
-            **{**base, "chunk_max_words": None, "pack_budget": None},
-        ).count()
+        count("media_dedup", None)
     if eval_df is not None:
-        counts["decontaminated"] = prepare_training_corpus(
-            docs,
-            eval_df,
-            **{**base, "chunk_max_words": None, "pack_budget": None},
-        ).count()
-    final = prepare_training_corpus(docs, eval_df, **base)
-    counts["final"] = final.count()
+        count("decontaminated", eval_df)
+    counts["final"] = prepare_training_corpus(docs, eval_df, **base).count()
     return counts
 
 

@@ -1349,3 +1349,136 @@ def test_pipeline_ppl_strata_lm_prune(spark):
     }
     assert counts["head"] >= (n + 2) // 3, counts
     assert sum(counts.values()) == n, counts
+
+
+def test_stage_counts_counts_documents_under_token_pack(spark):
+    """stage_counts' per-stage keys count DOCUMENTS: a token_pack
+    config must not turn the sub-run counts into packed-sequence
+    counts (only ``final`` carries the packing)."""
+    words = "river stone maple cloud amber field north quiet ember " \
+        "harbor lantern meadow orchard".split()
+    rows = [
+        (i, " ".join(words[(i * 7 + j) % 13] for j in range(12)))
+        for i in range(32)
+    ] + [(100 + i, "too short") for i in range(8)]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    kw = dict(
+        quality_thresholds={"min_tokens": 5},
+        near_dup_threshold=None,
+        fractions=FRACS,
+    )
+    tp = {
+        "ids_expr": F.transform(
+            F.split(F.col("text"), " "), lambda w: F.length(w)
+        ),
+        "seq_len": 4,
+        "eos_id": 0,
+        "n_shards": 2,
+        "drop_last": False,
+    }
+    gated = prepare_training_corpus(docs, None, **kw).count()
+    packed = prepare_training_corpus(docs, None, token_pack=tp, **kw)
+    counts = stage_counts(docs, None, token_pack=tp, **kw)
+    assert gated == 32
+    assert counts["quality"] == gated
+    assert counts["final"] == packed.count() > gated
+
+
+def test_pipeline_config_errors_raise_before_any_stage(
+    spark, corpus, monkeypatch
+):
+    """Invalid configs raise before any stage runs or writes: the
+    near-dup CC loop (patched to explode) never starts, and no stage
+    table lands under the materialization prefix."""
+    import data_toolz_spark.operators.dedup as dd
+
+    monkeypatch.setattr(
+        dd,
+        "minhash_components",
+        lambda *a, **k: (_ for _ in ()).throw(
+            AssertionError("a stage ran before the config check")
+        ),
+    )
+    prefix = "t_pipe_cfgerr"
+    ids = F.transform(F.split(F.col("text"), " "), lambda w: F.length(w))
+    bad = [
+        ("pack_budget", dict(pack_budget=64)),
+        (
+            "exclusive",
+            dict(
+                chunk_max_words=8,
+                token_pack={"ids_expr": ids, "seq_len": 4, "eos_id": 0},
+            ),
+        ),
+        ("token_pack: pass", dict(token_pack={"seq_len": 4, "eos_id": 0})),
+        ("keep_langs", dict(lang_model=object())),
+        (
+            "keep must be",
+            dict(quality_rank_gate={"col": "n_tokens", "keep": "gt"}),
+        ),
+    ]
+    for match, cfg in bad:
+        with pytest.raises(ValueError, match=match):
+            prepare_training_corpus(
+                corpus,
+                None,
+                near_dup_threshold=0.8,
+                materialize_to=prefix,
+                **cfg,
+            )
+    assert not [
+        r["tableName"]
+        for r in spark.sql("SHOW TABLES").collect()
+        if r["tableName"].startswith(prefix)
+    ]
+
+
+def test_pipeline_materialize_manifest_pinned(spark, corpus, eval_df):
+    """Warehouses written by earlier releases must keep resuming: every
+    stage the corpus supports, materialized, yields exactly these
+    manifest rows — stage table names and the fingerprint chain."""
+    from data_toolz_spark.catalog import drop_stale_table
+
+    prefix = "t_pipe_pin"
+
+    def cleanup():
+        for t in [
+            r["tableName"]
+            for r in spark.sql("SHOW TABLES").collect()
+            if r["tableName"].startswith(prefix)
+        ]:
+            drop_stale_table(spark, t)
+
+    cleanup()
+    prepare_training_corpus(
+        corpus,
+        eval_df,
+        quality_thresholds={"min_tokens": 5},
+        line_dedup_max_doc_freq=2,
+        near_dup_threshold=0.8,
+        decontaminate_n=5,
+        ppl_strata={},
+        fractions=FRACS,
+        materialize_to=prefix,
+    ).collect()
+    got = sorted(
+        (r["stage"], r["table"], r["fp"])
+        for r in spark.table(f"{prefix}_manifest").collect()
+    )
+    assert got == [
+        ("decontaminate", "t_pipe_pin_s04_decontaminate",
+         "92b24abeed5e13c1a63ad202dab013f72564cd6c728b07ccf6f7bb0d32e51327"),
+        ("gates", "t_pipe_pin_s01_gates",
+         "9e7cd364e29485f6b748f560a65b02ff470fb5767e3b3fcecb8d796a2b102a6a"),
+        ("near_dup", "t_pipe_pin_s03_near_dup",
+         "e961a24e437d7cbe07a31c3f5d79525f47f7d3437381f4595de0f45c5b2f8b7a"),
+        ("near_dup_cc", "t_pipe_pin_s03_near_dup_cc",
+         "e961a24e437d7cbe07a31c3f5d79525f47f7d3437381f4595de0f45c5b2f8b7a"),
+        ("split", "t_pipe_pin_s06_split",
+         "c1fb431c7a4d3b4c2c5ecf7adf7ecd7da43a15549f8fb1120223452f0ae3894f"),
+        ("strata", "t_pipe_pin_s05_strata",
+         "c29644c1dc0a8463c38519331286f6c9f4daa113a90ff7f203e72020b6853bd3"),
+        ("text_dedup", "t_pipe_pin_s02_text_dedup",
+         "77918bcf2b1203beb5a73a0005dcfd09d06f7426c8fff8747029e5311aa6d9d6"),
+    ]
+    cleanup()
